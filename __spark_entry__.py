@@ -1,4 +1,4 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Driver contract for spark-graft (PySpark target).
 
 ``entry`` runs the flagship star-schema query on sf0.001; ``queries`` /
 ``oracle_sql`` expose the engine's operator inventory (SURVEY.md §2 +
@@ -7,6 +7,10 @@ training-data-pipeline extensions) for the DuckDB correctness gate.
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -15,481 +19,73 @@ from udacitycapstonedataengineer_spark.plans.queries import ORACLE, QUERIES
 
 SF_SMOKE = "/root/testdata/sf0.001"
 
-# The build round this registry targets. Gates that derive staleness
-# from committed CORRECTNESS_r*.json files consider only rounds BELOW
-# this (the window rotates at round OPEN, but the driver commits the
-# round's results file at round CLOSE — without the exclusion the
-# stalest-cohort gate is guaranteed-red between those two moments,
-# the r8→r9 boundary failure ADVICE r8 flagged).
+# The round this registry targets. Staleness is derived from the
+# committed CORRECTNESS_r*.json files of rounds BELOW this one: a
+# round's results file is committed when the round closes, so counting
+# it would rotate the window before that round's checks have run.
 _ROUND = 17
+
+_FLAGSHIP = "star_revenue_by_region_year"
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
-    return QUERIES["star_revenue_by_region_year"](spark, SF_SMOKE)
+    return QUERIES[_FLAGSHIP](spark, SF_SMOKE)
 
 
-# The correctness driver checks a fixed-size 50-row prefix of this
-# dict, so ordering is part of the contract: _DRIVER_WINDOW = the
-# first 50 of the pool below. tests/test_entry_contract.py asserts
-# (a) the window is exactly 50 and all-oracled, (b) every query in
-# the must-check tiers lands inside it, (c) every registered query is
-# either driver-green in a committed CORRECTNESS_r*.json or inside
-# the window, and (d) the stalest cohort (computed from the raw
-# CORRECTNESS files for rounds < _ROUND — never a hand-counted
-# comment) rotates in full.
-#
-# Round-17 tiers, in order (tier sizes are never hand-counted here —
-# test_stalest_cohort_rotates derives the cohort from the committed
-# CORRECTNESS files and is the source of truth; ADVICE r9):
-#   1. flagship
-#   2. new round-17 queries: NONE — optimization round, no new
-#      registrations beyond what the rotation gate requires
-#      (VERDICT r16 next #9).
-#   3. staleness rotation: the stalest cohort is the r16 split's
-#      3-member r11 remainder (text_kn_bigram_incremental,
-#      text_tfidf_top_terms, tpch_q15_top_supplier) — the gate forces
-#      it through in full — followed by the next-stalest (r12) cohort
-#      taken as the deterministic ALPHABETICAL PREFIX
-#      sorted(cohort)[:46], the same split discipline r16
-#      established. The 3 alphabetically-last r12 members
-#      (tpch_q7_volume_shipping, tpch_q8_market_share,
-#      tpch_q9_product_profit) keep latest-green r12 and ARE next
-#      round's stalest cohort. 1 + 3 + 46 = exactly 50.
-_NEW_R17: list[str] = []
-_ROTATION_R17 = [
-    # last green r11 — the full cohort, forced by the gate
-    "text_kn_bigram_incremental", "text_tfidf_top_terms",
-    "tpch_q15_top_supplier",
-] + [
-    # last green r12 — sorted(cohort)[:46]
-    "docs_ngram_repetition", "embeddings_gram_matrix",
-    "events_asof_last_purchase", "events_cohort_retention",
-    "events_funnel_conversion", "events_lag_lead_ntile",
-    "events_markov_transition", "events_pivot_by_type",
-    "events_range_join_click_error", "events_session_window_native",
-    "events_sessionize", "events_topk_per_group",
-    "events_trailing_hour_sum", "events_window_agg",
-    "ivfpq_index_drift", "ivfpq_rebuild_decision",
-    "multimodal_audio_windows", "multimodal_features",
-    "multimodal_frame_sample", "multimodal_meta_stats",
-    "olap_cube_counts", "olap_rollup_counts", "orders_benford_screen",
-    "orders_zorder_key", "parts_copurchase_triangles",
-    "percentile_by_status", "set_except", "set_intersect",
-    "set_union_distinct", "text_bm25_linear_topk",
-    "text_bpe_pair_stats", "topk_orders_global",
-    "tpch_q10_returned_items", "tpch_q11_important_stock",
-    "tpch_q12_priority_classes", "tpch_q13_customer_distribution",
-    "tpch_q14_promo_effect", "tpch_q16_supplier_relation",
-    "tpch_q17_small_qty_revenue", "tpch_q18_large_volume",
-    "tpch_q1_pricing_summary", "tpch_q2_min_cost_supplier",
-    "tpch_q3_shipping_priority", "tpch_q4_priority_check",
-    "tpch_q5_local_supplier_volume", "tpch_q6_forecast_revenue",
-]
+def _last_green_rounds() -> dict[str, int]:
+    """Latest round in which each query passed the correctness gate
+    (rows and schema match), over the committed results of rounds
+    below _ROUND."""
+    root = os.path.dirname(os.path.abspath(__file__))
+    last: dict[str, int] = {}
+    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
+        rnd = int(re.search(r"CORRECTNESS_r(\d+)\.json$", path).group(1))
+        if rnd >= _ROUND:
+            continue
+        with open(path) as f:
+            for name, row in json.load(f).items():
+                if row.get("rows_match") and row.get("schema_match"):
+                    last[name] = max(last.get(name, 0), rnd)
+    return last
 
-# green in CORRECTNESS_r16 (the r16 window), kept registered after the
-# window rotates
-_NEW_R16: list[str] = [
-    "corpus_pipeline_report",
-    "semdedup_survivors_incremental_budgeted",
-    "ann_ivfpq_recall_curve_served_filtered",
-]
-_ROTATION_R16 = [
-    "ann_ivfpq_recall_curve_served", "ann_topk_bruteforce",
-    "calendar_dim", "cast_types", "corpus_mixture_sample",
-    "corpus_sample_exact_counts", "country_dim", "dedup_by_key",
-    "distinct_rows", "docs_char_class_profile",
-    "docs_crosslingual_template_leakage", "docs_pack_sequences",
-    "docs_source_lang_mix", "dropna_rows", "embeddings_norm_outliers",
-    "events_bot_regularity_audit", "events_daily_anomaly_seasonal",
-    "events_error_burst_windows", "events_heavy_hitters",
-    "events_linear_attribution", "events_linear_attribution_daygrain",
-    "events_type_weekday_chisq", "global_counts", "groupby_avg",
-    "initcap_labels", "join_dedup", "join_left_broadcast",
-    "join_string_keys", "lineitem_selfjoin_fanout_profile",
-    "nation_revenue_share", "null_profile", "orders_cohort_ltv",
-    "orders_cohort_ltv_incremental", "orders_cohort_survival",
-    "orders_daily_autocorr", "orders_daily_drawdown",
-    "orders_duplicate_invoice_pairs", "orders_monthly_forecast_eval",
-    "orders_monthly_price_bands", "orders_scd2_asof_revenue",
-    "part_sourcing_risk_grid", "priority_dim", "sas_date_decode",
-    "sas_labels_decode", "supplier_nation_trade_matrix",
-    "text_bigram_pmi",
-]
 
-# green in CORRECTNESS_r15 (the r15 window), kept registered after the
-# window rotates
-_NEW_R15: list[str] = [
-    "semdedup_survivors_budgeted",
-    "corpus_mixture_temperature_alpha",
-    "ann_ivfpq_recall_at_k_served_filtered",
-]
-_ROTATION_R15 = [
-    "ann_ivfpq_recall_curve", "customer_segment_value_profile",
-    "dedup_clusters", "dedup_minhash_incremental", "dedup_threshold_sweep",
-    "docs_dedup_savings_by_source", "docs_langid_agreement",
-    "docs_length_percentiles_by_source", "docs_novelty_hapax",
-    "docs_pack_budget_sweep", "docs_quality_gate_funnel",
-    "docs_shingle_containment", "docs_token_rarity",
-    "embeddings_label_centroid", "events_activity_bitmap",
-    "events_churn_buckets", "events_conversion_latency_stats",
-    "events_dau_mau_stickiness", "events_first_touch_attribution",
-    "events_hourly_heatmap", "events_mad_outliers",
-    "events_new_vs_returning_daily", "events_power_users_pareto",
-    "events_session_duration_stats", "events_user_streaks",
-    "graph_pagerank_eventtypes", "lineitem_discount_band_revenue",
-    "lineitem_shipping_lag_stats", "nation_top_customers_concat",
-    "orders_daily_status_spine", "orders_first_vs_repeat_revenue",
-    "orders_hot_keys_skew", "orders_interorder_gap_stats",
-    "orders_monthly_seasonality", "orders_open_backlog_daily",
-    "orders_profile_drift", "orders_value_gini",
-    "part_brand_supplier_hhi", "referential_integrity_audit",
-    "semdedup_clusters", "semdedup_survivors",
-    "semdedup_survivors_incremental", "supplier_lead_time_trend",
-    "text_keyword_search_topk", "text_kn_trigram_prob",
-    "text_vocab_coverage",
-]
-
-# green in CORRECTNESS_r14 (the r14 window), kept registered after the
-# window rotates
-_GREEN_R14 = [
-    "ann_ivfpq_recall_at_k_served",
-    "text_kn_trigram_stream_served",
-    "corpus_mixture_temperature",
-] + [
-    # last green r09 before the r14 window re-greened them — kept for
-    # stable registry ordering
-    "ann_topk_filtered", "ann_topk_ivf", "ann_topk_ivfpq",
-    "ann_topk_ivfpq_incremental", "ann_topk_ivfpq_refined",
-    "ann_topk_ivfpq_served", "ann_topk_lsh", "approx_distinct_users",
-    "approx_percentile_price", "basket_part_pairs",
-    "bloom_membership_orders", "cms_point_counts", "corpus_source_overlap",
-    "customer_rfm_segments", "docs_chunk_windows", "events_debounce",
-    "events_mode_value_per_type", "events_rolling_7d_active_users",
-    "events_zscore_outliers", "grouped_median_dev",
-    "grouped_median_dev_native", "ml_split_assignment",
-    "orders_column_profile", "orders_equidepth_deciles",
-    "orders_outlier_iqr", "orders_price_histogram", "orders_snapshot_diff",
-    "orders_winsorized_sum", "sample_hash_orders",
-    "sample_stratified_by_status", "scd2_nation_update",
-    "sketch_distinct_users_daily", "sketch_value_quantiles",
-    "sql_fact_dim_join", "sql_qualified_star", "text_bm25_indexed_topk",
-    "text_fingerprint", "text_fuzzy_pairs_levenshtein",
-    "text_inverted_index", "text_kn_bigram_prob", "text_pseudonymize_sha2",
-    "text_quality_score", "text_top_terms", "unpivot_part_metrics",
-    "variant_extract_props", "window_running_sum",
-]
-
-# green in CORRECTNESS_r13 (the r13 window), kept registered after the
-# window rotates
-_GREEN_R13 = [
-    "scd2_point_in_time_read",
-    "ann_ivfpq_recall_at_k",
-    "text_kn_trigram_incremental",
-    "docs_lm_quality_score",
-] + [
-    # last green r08 — the full cohort (test_stalest_cohort_rotates
-    # recomputes this list from the raw CORRECTNESS files)
-    "ann_topk_int8", "dedup_exact_groups", "dedup_exact_keep_canonical",
-    "dedup_incremental_anti", "dedup_minhash_lsh", "dedup_simhash",
-    "derive_column", "docs_contamination_check", "docs_global_dup_spans",
-    "docs_oov_bigram_rate", "docs_repetition_stats", "drop_columns",
-    "embedding_neardup_pairs", "embedding_quantize_int8",
-    "events_forward_fill", "events_spend_rank_stats",
-    "events_transition_bigrams", "fact_orders", "filter_predicate",
-    "json_extract_props", "kmeans_clusters", "multimodal_png_roundtrip",
-    "ngram_jaccard_pairs", "olap_grouping_sets", "pii_redact_contacts",
-    "pivot_native_counts", "project_select", "quality_expectation_report",
-    "rename_columns", "rollup_incremental_merge",
-    "semdedup_incremental_pairs", "semdedup_pairs", "sql_exists_semijoin",
-    "sql_lateral_topn_per_customer", "sql_not_exists_antijoin",
-    "sql_recursive_date_spine", "sql_scalar_subquery", "stats_corr_exact",
-    "text_kn_continuation_counts", "text_lang_id", "text_token_stats",
-    "tpch_q19_disjunctive", "tpch_q20_part_promotion",
-    "tpch_q21_waiting_suppliers", "tpch_q22_dormant_customers",
-]
-
-# Stable aliases the contract gates read (no per-round test renames):
-# the never-green-yet registrations that MUST be checked this round,
-# and the re-earn tier (registered queries whose committed oracle
-# text changed — empty most rounds).
-_NEW_THIS_ROUND = _NEW_R17
+_LAST_GREEN = _last_green_rounds()
+# oracled queries never checked green: they must be checked this round
+_NEW_THIS_ROUND = sorted(
+    n for n in ORACLE if n != _FLAGSHIP and n not in _LAST_GREEN
+)
+# queries whose committed oracle text changed since they last passed
 _REEARN_THIS_ROUND: list[str] = []
 
-# ROTATION SATURATION (live since r16): the latest-green histogram is
-# a steady 3/49/49/49/49/50 after the r16 split, so each round's
-# window carries the forced remainder cohort plus the alphabetical
-# prefix of the next-stalest cohort (see the tier-3 note above).
-# Under a 3-new-per-round cadence the roll-over debt stays
-# minimum-round, so the same gate forces it through next round — no
-# query's staleness can exceed the cohort width in rounds.
-_WINDOW_TIERS = (
-    ["star_revenue_by_region_year"] + _NEW_R17 + _ROTATION_R17
-)
-
-# green in CORRECTNESS_r12 (the r12 window), kept registered after the
-# window rotates
-_GREEN_R12 = [
-    "ivfpq_index_drift", "ivfpq_rebuild_decision",
-    "docs_ngram_repetition", "embeddings_gram_matrix",
-    "events_asof_last_purchase", "events_cohort_retention",
-    "events_funnel_conversion", "events_lag_lead_ntile",
-    "events_markov_transition", "events_pivot_by_type",
-    "events_range_join_click_error", "events_session_window_native",
-    "events_sessionize", "events_topk_per_group",
-    "events_trailing_hour_sum", "events_window_agg",
-    "multimodal_audio_windows", "multimodal_features",
-    "multimodal_frame_sample", "multimodal_meta_stats",
-    "olap_cube_counts", "olap_rollup_counts", "orders_benford_screen",
-    "orders_zorder_key", "parts_copurchase_triangles",
-    "percentile_by_status", "set_except", "set_intersect",
-    "set_union_distinct", "text_bm25_linear_topk",
-    "text_bpe_pair_stats", "topk_orders_global",
-    "tpch_q1_pricing_summary", "tpch_q2_min_cost_supplier",
-    "tpch_q3_shipping_priority", "tpch_q4_priority_check",
-    "tpch_q5_local_supplier_volume", "tpch_q6_forecast_revenue",
-    "tpch_q7_volume_shipping", "tpch_q8_market_share",
-    "tpch_q9_product_profit", "tpch_q10_returned_items",
-    "tpch_q11_important_stock", "tpch_q12_priority_classes",
-    "tpch_q13_customer_distribution", "tpch_q14_promo_effect",
-    "tpch_q16_supplier_relation", "tpch_q17_small_qty_revenue",
-    "tpch_q18_large_volume",
-]
-
-# green in CORRECTNESS_r11 (the r11 window), kept registered after the
-# window rotates
-_GREEN_R11 = [
-    "ann_ivfpq_recall_curve_served", "text_kn_bigram_incremental",
-    "ann_topk_bruteforce", "calendar_dim", "cast_types",
-    "corpus_mixture_sample", "corpus_sample_exact_counts",
-    "country_dim", "dedup_by_key", "distinct_rows",
-    "docs_char_class_profile", "docs_crosslingual_template_leakage",
-    "docs_pack_sequences", "docs_source_lang_mix", "dropna_rows",
-    "embeddings_norm_outliers", "events_bot_regularity_audit",
-    "events_daily_anomaly_seasonal", "events_error_burst_windows",
-    "events_heavy_hitters", "events_linear_attribution",
-    "events_linear_attribution_daygrain", "events_type_weekday_chisq",
-    "global_counts", "groupby_avg", "initcap_labels", "join_dedup",
-    "join_left_broadcast", "join_string_keys",
-    "lineitem_selfjoin_fanout_profile", "nation_revenue_share",
-    "null_profile", "orders_cohort_ltv", "orders_cohort_ltv_incremental",
-    "orders_cohort_survival", "orders_daily_autocorr",
-    "orders_daily_drawdown", "orders_duplicate_invoice_pairs",
-    "orders_monthly_forecast_eval", "orders_monthly_price_bands",
-    "orders_scd2_asof_revenue", "part_sourcing_risk_grid",
-    "priority_dim", "sas_date_decode", "sas_labels_decode",
-    "supplier_nation_trade_matrix", "text_bigram_pmi",
-    "text_tfidf_top_terms", "tpch_q15_top_supplier",
-]
-
-# green in CORRECTNESS_r10 (the r10 window), kept registered after the
-# window rotates
-_GREEN_R10 = [
-    "dedup_clusters", "semdedup_clusters", "semdedup_survivors",
-    "text_kn_trigram_prob", "ivfpq_index_drift",
-    "semdedup_survivors_incremental", "ann_ivfpq_recall_curve",
-    "ivfpq_rebuild_decision",
-    "customer_segment_value_profile", "dedup_minhash_incremental",
-    "dedup_threshold_sweep", "docs_dedup_savings_by_source",
-    "docs_langid_agreement", "docs_length_percentiles_by_source",
-    "docs_novelty_hapax", "docs_pack_budget_sweep",
-    "docs_quality_gate_funnel", "docs_shingle_containment",
-    "docs_token_rarity", "embeddings_label_centroid",
-    "events_activity_bitmap", "events_churn_buckets",
-    "events_conversion_latency_stats", "events_dau_mau_stickiness",
-    "events_first_touch_attribution", "events_hourly_heatmap",
-    "events_mad_outliers", "events_new_vs_returning_daily",
-    "events_power_users_pareto", "events_session_duration_stats",
-    "events_user_streaks", "graph_pagerank_eventtypes",
-    "lineitem_discount_band_revenue", "lineitem_shipping_lag_stats",
-    "nation_top_customers_concat", "orders_daily_status_spine",
-    "orders_first_vs_repeat_revenue", "orders_hot_keys_skew",
-    "orders_interorder_gap_stats", "orders_monthly_seasonality",
-    "orders_open_backlog_daily", "orders_profile_drift",
-    "orders_value_gini", "part_brand_supplier_hhi",
-    "referential_integrity_audit", "scd2_point_in_time_read",
-    "supplier_lead_time_trend", "text_keyword_search_topk",
-    "text_vocab_coverage",
-]
-
-# green in CORRECTNESS_r09 (the r9 window), kept registered after the
-# window rotates
-_GREEN_R9 = [
-    "text_bm25_indexed_topk", "ann_topk_ivfpq", "ann_topk_ivfpq_refined",
-    "ann_topk_ivfpq_served", "ann_topk_ivfpq_incremental",
-    "text_kn_bigram_prob",
-    "sample_hash_orders", "scd2_nation_update", "text_fingerprint",
-    "text_top_terms", "unpivot_part_metrics", "variant_extract_props",
-    "window_running_sum",
-    "ann_topk_ivf", "ann_topk_lsh", "approx_distinct_users",
-    "approx_percentile_price", "docs_chunk_windows", "events_debounce",
-    "events_mode_value_per_type", "events_rolling_7d_active_users",
-    "events_zscore_outliers", "grouped_median_dev",
-    "grouped_median_dev_native", "ml_split_assignment",
-    "orders_column_profile", "orders_equidepth_deciles",
-    "orders_outlier_iqr", "orders_price_histogram",
-    "orders_snapshot_diff", "orders_winsorized_sum",
-    "sample_stratified_by_status", "sketch_distinct_users_daily",
-    "sketch_value_quantiles", "sql_fact_dim_join", "sql_qualified_star",
-    "text_fuzzy_pairs_levenshtein", "text_inverted_index",
-    "text_pseudonymize_sha2", "text_quality_score",
-    "ann_topk_filtered", "basket_part_pairs", "bloom_membership_orders",
-    "cms_point_counts", "corpus_source_overlap", "customer_rfm_segments",
-]
-
-# Registry tail beyond the checked window: every other registered
-# query, ordered by prior-round tiers (kept for stable registry
-# ordering; all are driver-green in committed CORRECTNESS files).
-_GREEN_R8 = [
-    "multimodal_png_roundtrip", "semdedup_pairs",
-    "semdedup_incremental_pairs", "semdedup_clusters",
-    "text_kn_continuation_counts", "docs_oov_bigram_rate",
-    "ann_topk_int8", "dedup_exact_groups", "dedup_exact_keep_canonical",
-    "dedup_incremental_anti", "dedup_minhash_lsh", "dedup_simhash",
-    "ngram_jaccard_pairs", "derive_column", "drop_columns",
-    "project_select", "rename_columns", "filter_predicate", "fact_orders",
-    "tpch_q19_disjunctive", "tpch_q20_part_promotion",
-    "tpch_q21_waiting_suppliers", "tpch_q22_dormant_customers",
-    "docs_contamination_check", "docs_global_dup_spans",
-    "docs_repetition_stats", "embedding_neardup_pairs",
-    "embedding_quantize_int8", "events_forward_fill",
-    "events_spend_rank_stats", "events_transition_bigrams",
-    "json_extract_props", "kmeans_clusters", "olap_grouping_sets",
-    "pii_redact_contacts", "pivot_native_counts",
-    "quality_expectation_report", "rollup_incremental_merge",
-    "sql_exists_semijoin",
-    "sql_lateral_topn_per_customer", "sql_not_exists_antijoin",
-    "sql_recursive_date_spine", "sql_scalar_subquery", "stats_corr_exact",
-    "text_lang_id", "text_token_stats",
-]
-_GREEN_R7 = [
-    "dedup_clusters", "text_bpe_pair_stats",
-    "docs_ngram_repetition", "orders_benford_screen",
-    "events_markov_transition", "embeddings_gram_matrix",
-    "orders_zorder_key", "text_bm25_linear_topk",
-    "parts_copurchase_triangles", "events_asof_last_purchase",
-    "events_cohort_retention", "events_funnel_conversion",
-    "events_lag_lead_ntile", "events_pivot_by_type",
-    "events_range_join_click_error", "events_session_window_native",
-    "events_sessionize", "events_topk_per_group",
-    "events_trailing_hour_sum", "events_window_agg",
-    "multimodal_audio_windows", "multimodal_features",
-    "multimodal_frame_sample", "multimodal_meta_stats", "olap_cube_counts",
-    "olap_rollup_counts", "percentile_by_status", "set_except",
-    "set_intersect", "set_union_distinct", "topk_orders_global",
-    "tpch_q1_pricing_summary", "tpch_q2_min_cost_supplier",
-    "tpch_q3_shipping_priority", "tpch_q4_priority_check",
-    "tpch_q5_local_supplier_volume", "tpch_q6_forecast_revenue",
-    "tpch_q7_volume_shipping", "tpch_q8_market_share",
-    "tpch_q9_product_profit", "tpch_q10_returned_items",
-    "tpch_q11_important_stock", "tpch_q12_priority_classes",
-    "tpch_q13_customer_distribution", "tpch_q14_promo_effect",
-    "tpch_q16_supplier_relation", "tpch_q17_small_qty_revenue",
-    "tpch_q18_large_volume",
-]
-_GREEN_R6 = [
-    "docs_char_class_profile",
-    "supplier_nation_trade_matrix",
-    "docs_source_lang_mix",
-    "nation_revenue_share",
-    "events_type_weekday_chisq",
-    "orders_cohort_ltv",
-    "orders_daily_autocorr",
-    "orders_monthly_price_bands",
-    "text_bigram_pmi",
-    "events_linear_attribution",
-    "events_heavy_hitters",
-    "events_linear_attribution_daygrain",
-    "orders_cohort_ltv_incremental",
-    "corpus_sample_exact_counts",
-    "lineitem_selfjoin_fanout_profile",
-    "events_bot_regularity_audit",
-    "embeddings_norm_outliers",
-    "events_daily_anomaly_seasonal",
-    "orders_duplicate_invoice_pairs",
-    "docs_crosslingual_template_leakage",
-    "orders_scd2_asof_revenue",
-    "orders_monthly_forecast_eval",
-    "orders_daily_drawdown",
-    "orders_cohort_survival",
-    "part_sourcing_risk_grid",
-    "events_error_burst_windows",
-    "priority_dim",
-    "join_left_broadcast", "groupby_avg", "calendar_dim",
-    "null_profile", "dedup_by_key", "sas_labels_decode",
-    "dropna_rows", "sas_date_decode",
-    "cast_types", "country_dim", "global_counts", "initcap_labels",
-    "join_string_keys", "join_dedup", "distinct_rows",
-    "tpch_q15_top_supplier",
-    "ann_topk_bruteforce", "text_tfidf_top_terms",
-    "docs_pack_sequences", "corpus_mixture_sample",
-    "orders_snapshot_diff", "orders_equidepth_deciles",
-]
-# driver-green in earlier rounds, kept registered after the window
-# (formerly the r05 rotation debt — all rotated through the r10
-# window above; entries here are deduped against the window)
-_GREEN_BACKLOG = [
-    "docs_novelty_hapax", "text_keyword_search_topk",
-    "events_mad_outliers", "events_user_streaks",
-    "orders_profile_drift",
-    "scd2_point_in_time_read",
-    "events_conversion_latency_stats", "lineitem_shipping_lag_stats",
-    "docs_length_percentiles_by_source", "events_power_users_pareto",
-    "orders_monthly_seasonality",
-    "docs_quality_gate_funnel",
-    "supplier_lead_time_trend", "events_first_touch_attribution",
-    "referential_integrity_audit", "events_hourly_heatmap",
-    "orders_open_backlog_daily", "docs_shingle_containment",
-    "orders_hot_keys_skew", "orders_interorder_gap_stats",
-    "events_dau_mau_stickiness",
-    "events_churn_buckets",
-    "docs_token_rarity",
-    "text_vocab_coverage", "events_session_duration_stats",
-    "docs_dedup_savings_by_source", "graph_pagerank_eventtypes",
-    "nation_top_customers_concat", "orders_daily_status_spine",
-    "events_activity_bitmap", "embeddings_label_centroid",
-    "dedup_threshold_sweep", "docs_pack_budget_sweep",
-    "orders_first_vs_repeat_revenue", "events_new_vs_returning_daily",
-    "part_brand_supplier_hhi",
-    "docs_langid_agreement", "lineitem_discount_band_revenue",
-    "orders_value_gini",
-    "customer_segment_value_profile", "dedup_minhash_incremental",
-]
-
-_PRIORITY = _WINDOW_TIERS + [
-    n
-    for n in (
-        _NEW_R16
-        + _ROTATION_R16
-        + _NEW_R15
-        + _ROTATION_R15
-        + _GREEN_R14
-        + _GREEN_R13
-        + _GREEN_R12
-        + _GREEN_R11
-        + _GREEN_R10
-        + _GREEN_R9
-        + _GREEN_R8
-        + _GREEN_R7
-        + _GREEN_R6
-        + _GREEN_BACKLOG
+# The correctness driver checks a fixed 50-name prefix of queries(), so
+# the order is part of the contract: the flagship, the never-checked
+# and re-earn tiers, then every other oracled query stalest first (by
+# last green round, then name). A cohort wider than the remaining
+# slots is split on its alphabetical prefix; the rest stays stalest
+# and leads the next round's window.
+_PRIORITY = (
+    [_FLAGSHIP]
+    + _NEW_THIS_ROUND
+    + _REEARN_THIS_ROUND
+    + sorted(
+        (
+            n
+            for n in ORACLE
+            if n in _LAST_GREEN
+            and n != _FLAGSHIP
+            and n not in _REEARN_THIS_ROUND
+        ),
+        key=lambda n: (_LAST_GREEN[n], n),
     )
-    if n not in set(_WINDOW_TIERS)
-]
-# dedupe the tail while preserving order (r6 list historically
-# repeats two names that now also rotate in the window)
-_seen: set[str] = set()
-_PRIORITY = [n for n in _PRIORITY if not (n in _seen or _seen.add(n))]
-# the driver's correctness gate reads exactly this prefix
+)
 _DRIVER_WINDOW = _PRIORITY[:50]
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2, ordered
-    oracled-first (see _PRIORITY note)."""
-    ordered = [n for n in _PRIORITY if n in QUERIES]
-    ordered += [n for n in QUERIES if n not in ordered and n in ORACLE]
-    ordered += [n for n in QUERIES if n not in ordered]
+    """One entry per implemented operator from SURVEY.md §2, oracled
+    queries first in _PRIORITY order."""
+    ordered = _PRIORITY + [n for n in QUERIES if n not in ORACLE]
     return {n: QUERIES[n] for n in ordered}
 
 

@@ -1,16 +1,14 @@
-"""×10 scale probe for the r15-staged ``semdedup_survivors_budgeted``
-draft (VERDICT r13 next #6's done criterion: the staged row's scale
-behavior must match the derived-k path the r13 probe measured, ~2-3×
-at ×10 — NOT the fixed-k family's ~10×).
+"""×10 scale probe for ``semdedup_survivors_budgeted``: its scale
+behavior should follow the derived-k path, ~2-3× at ×10, not the
+fixed-k family's ~10×.
 
-Runs the DRAFT BODY verbatim (the exact composition the r15
-registration will put under the driver gate, target_cell=100) at
-sf0.1 and at the SF-proportional ×10 replica (scale_probe's
-build_scaled: embeddings component-shifted so near-dup structure
-grows with data instead of densifying), reporting derived_k, survivor
-count, and wall seconds per scale. The alpha mixture draft rides
-along (histogram-bounded — expected FLAT-ish; its corpus-grain work
-is one aggregate).
+Runs the registered query body (target_cell=100) at sf0.1 and at the
+SF-proportional ×10 replica (scale_probe's build_scaled: embeddings
+component-shifted so near-dup structure grows with data instead of
+densifying), reporting derived_k, survivor count, and wall seconds per
+scale. ``corpus_mixture_temperature_alpha`` rides along
+(histogram-bounded — expected flat-ish; its corpus-grain work is one
+aggregate).
 
 Usage: python scripts/probe_budgeted_x10.py [factor]
 Prints one JSON line.
@@ -25,11 +23,7 @@ import time
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
-import udacitycapstonedataengineer_spark.plans.queries  # noqa: E402,F401
-from udacitycapstonedataengineer_spark.plans.queries_round15 import (  # noqa: E402
-    _corpus_mixture_temperature_alpha_draft,
-    _semdedup_survivors_budgeted_draft,
-)
+from udacitycapstonedataengineer_spark.plans.queries import QUERIES  # noqa: E402
 from udacitycapstonedataengineer_spark.session import get_spark  # noqa: E402
 from udacitycapstonedataengineer_spark.sources.readers import (  # noqa: E402
     load_tables,
@@ -49,7 +43,7 @@ def _run(spark, sf_dir: str) -> dict:
     out: dict = {"n_vectors": t["embeddings"].count()}
 
     t0 = time.perf_counter()
-    surv = _semdedup_survivors_budgeted_draft(spark, t)
+    surv = QUERIES["semdedup_survivors_budgeted"].__wrapped__(spark, t)
     rows = surv.collect()
     out["budgeted_survivors_sec"] = round(time.perf_counter() - t0, 3)
     out["survivors"] = len(rows)
@@ -57,9 +51,9 @@ def _run(spark, sf_dir: str) -> dict:
     _sweep(spark)
 
     t0 = time.perf_counter()
-    out["mixture_alpha_rows"] = _corpus_mixture_temperature_alpha_draft(
-        spark, t
-    ).count()
+    out["mixture_alpha_rows"] = (
+        QUERIES["corpus_mixture_temperature_alpha"].__wrapped__(spark, t).count()
+    )
     out["mixture_alpha_sec"] = round(time.perf_counter() - t0, 3)
     _sweep(spark)
     return out

@@ -1,6 +1,6 @@
-"""Phase profiler for the IVF-PQ governance pair (VERDICT r16 next
-#4): where do ivfpq_index_drift (3.5 s) / ivfpq_rebuild_decision
-(4.1 s) spend their time — the coarse-fit driver actions, the drift
+"""Phase profiler for the IVF-PQ governance pair: where do
+ivfpq_index_drift (3.5 s) / ivfpq_rebuild_decision (4.1 s) spend
+their time — the coarse-fit driver actions, the drift
 residual pass, or the decision tail?
 
 Usage: python scripts/probe_governance.py [runs]
@@ -24,7 +24,7 @@ from udacitycapstonedataengineer_spark.operators.coarse import (  # noqa: E402
     ivfpq_coarse_fit,
 )
 from udacitycapstonedataengineer_spark.plans.queries import QUERIES  # noqa: E402
-from udacitycapstonedataengineer_spark.plans.queries_round10 import (  # noqa: E402
+from udacitycapstonedataengineer_spark.plans.queries_sim import (  # noqa: E402
     _BATCH_WHERE,
     _IVFPQ,
     ivfpq_drift_stats,

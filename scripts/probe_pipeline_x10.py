@@ -1,9 +1,9 @@
-"""×10 scale probe for the r16-staged drafts (the staging-evidence
-discipline scripts/probe_budgeted_x10.py established for r15):
+"""×10 scale probe for three composed queries (the same method as
+scripts/probe_budgeted_x10.py):
 
 - ``corpus_pipeline_report`` — the end-to-end corpus row. Expected
   shape: dominated by its budgeted-SemDeDup stage, so the ×10 ratio
-  should track the r15 budgeted-survivors probe (~2-3×), NOT the
+  should track the budgeted-survivors probe (~2-3×), NOT the
   fixed-k family's ~10×; the gates/dedup/mixture stages add
   corpus-linear projections and one fingerprint shuffle.
 - ``semdedup_survivors_incremental_budgeted`` — derived-k at the
@@ -12,7 +12,7 @@ discipline scripts/probe_budgeted_x10.py established for r15):
 - ``ann_ivfpq_recall_curve_served_filtered`` — build+write+append
   once, 4 pruned probes; expected build-dominated (~linear in n).
 
-Runs each DRAFT BODY verbatim at sf0.1 and at the SF-proportional
+Runs each registered query body at sf0.1 and at the SF-proportional
 ×``factor`` replica (scale_probe.build_scaled: ids shifted in aligned
 domains so the vec_id=doc_id join is preserved; replica text
 token-salted so shingle/fingerprint structure grows with data).
@@ -30,12 +30,7 @@ import time
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
-import udacitycapstonedataengineer_spark.plans.queries  # noqa: E402,F401
-from udacitycapstonedataengineer_spark.plans.queries_round16 import (  # noqa: E402
-    _ann_ivfpq_recall_curve_served_filtered_draft,
-    _corpus_pipeline_report_draft,
-    _semdedup_survivors_incremental_budgeted_draft,
-)
+from udacitycapstonedataengineer_spark.plans.queries import QUERIES  # noqa: E402
 from udacitycapstonedataengineer_spark.session import get_spark  # noqa: E402
 from udacitycapstonedataengineer_spark.sources.readers import (  # noqa: E402
     load_tables,
@@ -55,7 +50,7 @@ def _run(spark, sf_dir: str) -> dict:
     out: dict = {"n_docs": t["documents"].count()}
 
     t0 = time.perf_counter()
-    rows = _corpus_pipeline_report_draft(spark, t).collect()
+    rows = QUERIES["corpus_pipeline_report"].__wrapped__(spark, t).collect()
     out["pipeline_sec"] = round(time.perf_counter() - t0, 3)
     out["pipeline_derived_k"] = rows[0]["derived_k"] if rows else None
     out["pipeline_funnel"] = {
@@ -69,18 +64,16 @@ def _run(spark, sf_dir: str) -> dict:
     _sweep(spark)
 
     t0 = time.perf_counter()
-    rows = _semdedup_survivors_incremental_budgeted_draft(
-        spark, t
-    ).collect()
+    inc = QUERIES["semdedup_survivors_incremental_budgeted"].__wrapped__
+    rows = inc(spark, t).collect()
     out["inc_budgeted_sec"] = round(time.perf_counter() - t0, 3)
     out["inc_budgeted_kept"] = sum(1 for r in rows if r["kept"])
     out["inc_derived_k"] = rows[0]["derived_k"] if rows else None
     _sweep(spark)
 
     t0 = time.perf_counter()
-    curve = _ann_ivfpq_recall_curve_served_filtered_draft(
-        spark, t
-    ).collect()
+    served = QUERIES["ann_ivfpq_recall_curve_served_filtered"].__wrapped__
+    curve = served(spark, t).collect()
     out["curve_filtered_sec"] = round(time.perf_counter() - t0, 3)
     out["curve_filtered_recall"] = {
         int(r["nprobe"]): round(float(r["recall"]), 2) for r in curve

@@ -109,7 +109,7 @@ def probe_scale(spark, sf_dir: str, tmp_root: str) -> dict:
         kmeans_fit,
         model_rows,
     )
-    from udacitycapstonedataengineer_spark.plans.queries_round10 import (
+    from udacitycapstonedataengineer_spark.plans.queries_sim import (
         _cell_members,
         _decide_batch,
     )

@@ -290,7 +290,7 @@ def test_semdedup_incremental_survivors_on_empty_batch(spark):
     decision table (both closures run on empty edge sets) — no error,
     no rows."""
     from udacitycapstonedataengineer_spark.plans import queries  # noqa: F401
-    from udacitycapstonedataengineer_spark.plans.queries_round10 import (
+    from udacitycapstonedataengineer_spark.plans.queries_sim import (
         semdedup_incremental_survivors,
     )
 

@@ -285,3 +285,68 @@ def test_bench_and_probe_names_are_registered():
     # and no duplicates padding the lists
     assert len(bench.HEADLINE) == len(set(bench.HEADLINE))
     assert len(probe.PROBE_QUERIES) == len(set(probe.PROBE_QUERIES))
+    # perfbench/run.py runs these by name in the index_build workload;
+    # read them with ast so the benchmark's module is never imported
+    index_queries = _module_constant(
+        os.path.join(root, "perfbench", "run.py"), "INDEX_QUERIES"
+    )
+    assert index_queries, "INDEX_QUERIES not found in perfbench/run.py"
+    missing_i = [n for n in index_queries if n not in QUERIES]
+    unoracled_i = [n for n in index_queries if n not in ORACLE]
+    assert not missing_i, f"benchmark names not registered: {missing_i}"
+    assert not unoracled_i, f"benchmark names without oracles: {unoracled_i}"
+
+
+def _module_constant(path: str, name: str):
+    """The literal value assigned to ``name`` at the top level of the
+    Python file at ``path`` (None when absent)."""
+    import ast
+
+    with open(path) as f:
+        tree = ast.parse(f.read())
+    for node in tree.body:
+        if isinstance(node, ast.Assign) and any(
+            isinstance(t, ast.Name) and t.id == name for t in node.targets
+        ):
+            return ast.literal_eval(node.value)
+    return None
+
+
+def test_script_engine_imports_resolve():
+    """Every ``from udacitycapstonedataengineer_spark... import x`` in
+    scripts/*.py names a module that exists and an attribute it
+    defines — a moved or deleted symbol must fail here, not when
+    someone next runs the script."""
+    import ast
+    import glob
+    import importlib
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    broken = []
+    for path in sorted(glob.glob(os.path.join(root, "scripts", "*.py"))):
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        for node in ast.walk(tree):
+            if not (
+                isinstance(node, ast.ImportFrom)
+                and node.level == 0
+                and node.module
+                and node.module.split(".")[0]
+                == "udacitycapstonedataengineer_spark"
+            ):
+                continue
+            where = f"{os.path.basename(path)}:{node.lineno}"
+            try:
+                mod = importlib.import_module(node.module)
+            except ImportError as e:
+                broken.append(f"{where} {node.module}: {e}")
+                continue
+            for alias in node.names:
+                if alias.name == "*" or hasattr(mod, alias.name):
+                    continue
+                try:
+                    importlib.import_module(f"{node.module}.{alias.name}")
+                except ImportError:
+                    broken.append(f"{where} {node.module}.{alias.name}")
+    assert not broken, f"unresolved engine imports in scripts: {broken}"

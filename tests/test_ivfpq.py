@@ -216,7 +216,7 @@ def test_ivfpq_index_drift_moves_on_shift(spark, sf_dir):
 
     from udacitycapstonedataengineer_spark.operators.ivfpq import ivfpq_build
     from udacitycapstonedataengineer_spark.plans import queries  # noqa: F401
-    from udacitycapstonedataengineer_spark.plans.queries_round10 import (
+    from udacitycapstonedataengineer_spark.plans.queries_sim import (
         _BATCH_WHERE,
         ivfpq_drift_stats,
     )

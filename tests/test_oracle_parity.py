@@ -1,11 +1,10 @@
 """Every oracled query must match its DuckDB twin — the same gate the
 driver applies at sf0.01, run here at sf0.001 for speed.
 
-Opt-in tier (VERDICT r16 next #2): the 249-pair sweep costs ~17 min
-and pushed the default suite past the driver's verify budget. Run it
-with `pytest -m slow`; the stronger sf0.01 twin is
-scripts/driver_sim.py and the driver's own CORRECTNESS gate covers
-the checked window every round."""
+Part of the default tier (not marked slow): with these 250 tests the
+whole default tier measured 573 passed, 1 skipped in 20:51 on 4 cores,
+inside its 2670 s budget. The stronger sf0.01 twin is
+scripts/driver_sim.py."""
 
 from __future__ import annotations
 
@@ -14,8 +13,6 @@ import pytest
 from udacitycapstonedataengineer_spark.plans.queries import ORACLE, QUERIES
 
 from .oracle_check import assert_parity
-
-pytestmark = pytest.mark.slow
 
 
 @pytest.mark.parametrize("name", sorted(ORACLE))

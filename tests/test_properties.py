@@ -191,7 +191,7 @@ def test_activity_bitmap_popcount_equals_distinct_days(spark, pairs):
     """popcount(bit_or(1 << day-1)) must equal count(DISTINCT day) —
     the identity that lets the bitmap replace the distinct set — and
     the bitmap must reconstruct the exact day set."""
-    from udacitycapstonedataengineer_spark.plans.queries_round5d import (
+    from udacitycapstonedataengineer_spark.plans.queries_events import (
         _events_activity_bitmap,
     )
 
@@ -234,7 +234,7 @@ def test_pagerank_mass_is_bounded_and_positive(spark, seq):
     every rank >= the teleport base, and total mass never exceeds the
     fixed-point SCALE (truncating division only leaks mass; dangling
     nodes leak by design)."""
-    from udacitycapstonedataengineer_spark.plans.queries_round5c import (
+    from udacitycapstonedataengineer_spark.plans.queries_events import (
         _PR_SCALE,
         _graph_pagerank_eventtypes,
     )
@@ -720,7 +720,7 @@ def test_semdedup_incremental_survivors_matches_reference(spark, vecs):
         kmeans_fit,
     )
     from udacitycapstonedataengineer_spark.plans import queries  # noqa: F401
-    from udacitycapstonedataengineer_spark.plans.queries_round10 import (
+    from udacitycapstonedataengineer_spark.plans.queries_sim import (
         semdedup_incremental_survivors,
     )
 

@@ -9,13 +9,11 @@ from pyspark.sql import functions as F
 
 from udacitycapstonedataengineer_spark.plans import queries  # noqa: F401
 from udacitycapstonedataengineer_spark.plans.queries import QUERIES
-from udacitycapstonedataengineer_spark.plans.queries_round11 import (
+from udacitycapstonedataengineer_spark.plans.queries_text import (
     _KN_BATCH_WHERE,
     kn_bigram_merge,
 )
-from udacitycapstonedataengineer_spark.plans.queries_round8 import (
-    _doc_bigrams,
-)
+from udacitycapstonedataengineer_spark.plans.queries_text import _doc_bigrams
 from udacitycapstonedataengineer_spark.sources.readers import load_table
 
 
@@ -270,7 +268,7 @@ def test_exact_topk_multi_matches_per_query(spark, sf_dir):
     from udacitycapstonedataengineer_spark.operators.recall_eval import (
         exact_topk_multi,
     )
-    from udacitycapstonedataengineer_spark.plans.queries_round9 import (
+    from udacitycapstonedataengineer_spark.plans.queries_sim import (
         _exact_topk_flags,
     )
 
@@ -304,7 +302,7 @@ def test_ivfpq_recall_at_k_sample(spark, sf_dir):
     from udacitycapstonedataengineer_spark.operators.recall_eval import (
         ivfpq_recall_at_k,
     )
-    from udacitycapstonedataengineer_spark.plans.queries_round8 import (
+    from udacitycapstonedataengineer_spark.plans.queries_sim import (
         _IVFPQ,
         _QVEC_ID,
     )
@@ -393,7 +391,7 @@ def test_ivfpq_drift_stats_on_empty_batch_raise(spark, sf_dir):
     cell is normal); only the batch/corpus TOTALS crash. Decision
     rationale recorded in PERF_NOTES §r12."""
     from udacitycapstonedataengineer_spark.operators.ivfpq import ivfpq_build
-    from udacitycapstonedataengineer_spark.plans.queries_round10 import (
+    from udacitycapstonedataengineer_spark.plans.queries_sim import (
         ivfpq_drift_stats,
     )
 

@@ -47,12 +47,12 @@ def test_rebuild_fill_skew_threshold_tracks_nlist():
     a hardcoded 8 silently mis-gates any future nlist change."""
     import inspect
 
-    from udacitycapstonedataengineer_spark.plans import queries_round10 as q10
+    from udacitycapstonedataengineer_spark.plans import queries_sim
 
-    nlist = q10._IVFPQ["nlist"]
-    oracle = q10._ivfpq_rebuild_decision_oracle_sql()
+    nlist = queries_sim._IVFPQ["nlist"]
+    oracle = queries_sim._ivfpq_rebuild_decision_oracle_sql()
     assert f"batch_n * {nlist} > tbx.tb2 * 2" in oracle
-    src = inspect.getsource(q10._ivfpq_rebuild_decision)
+    src = inspect.getsource(queries_sim._ivfpq_rebuild_decision)
     assert '_IVFPQ["nlist"]' in src
     assert "* 8 >" not in src
 
@@ -137,7 +137,7 @@ def test_batch_bigram_counts_matches_doc_bigrams(spark, sf_dir):
     _doc_bigrams' tokenize/explode pipeline — if the round-8
     tokenization ever changes, the streamed counts must diverge HERE
     (red), not silently against the driver-gated batch/oracle path."""
-    from udacitycapstonedataengineer_spark.plans.queries_round8 import (
+    from udacitycapstonedataengineer_spark.plans.queries_text import (
         _doc_bigrams,
     )
     from udacitycapstonedataengineer_spark.sources.readers import load_table
@@ -172,31 +172,6 @@ def test_recall_at_k_rejects_duplicate_query_ids(spark, sf_dir):
 
     with pytest.raises(ValueError, match="duplicate query ids"):
         ivfpq_recall_at_k(None, None, None, None, [7, 11, 7], k=10)
-
-
-def test_recall_at_k_draft_oracle_parity(spark, sf_dir):
-    """VERDICT r11 #5 pre-work done-criterion: the drafted
-    ann_ivfpq_recall_at_k oracle matches the Spark body end-to-end at
-    sf0.001, so the r13 registration is purely mechanical (move the
-    @query decoration + spend the window slot)."""
-    from udacitycapstonedataengineer_spark.plans.queries_round12 import (
-        _ann_ivfpq_recall_at_k_draft,
-        _ivfpq_recall_at_k_oracle_sql,
-    )
-    from udacitycapstonedataengineer_spark.session import (
-        pin_oracle_semantics,
-    )
-    from udacitycapstonedataengineer_spark.sources.readers import load_tables
-
-    from tests.oracle_check import compare_frames, run_oracle
-
-    pin_oracle_semantics(spark)
-    got = _ann_ivfpq_recall_at_k_draft(spark, load_tables(spark, sf_dir))
-    compare_frames(
-        got.toPandas(),
-        run_oracle(_ivfpq_recall_at_k_oracle_sql(), sf_dir),
-        "ann_ivfpq_recall_at_k (draft)",
-    )
 
 
 def test_tmpindex_lifecycle(monkeypatch, tmp_path):
@@ -291,8 +266,8 @@ def test_kn_trigram_merge_equals_rebuild(spark, sf_dir):
     full-rebuild statistic exactly — both recursion grains included
     (trigram-type stats via the trigram anti-join, pair stats via the
     (w2,w3) anti-join)."""
-    from udacitycapstonedataengineer_spark.plans.queries_round12 import (
-        _KN_TRI_BATCH_WHERE,
+    from udacitycapstonedataengineer_spark.plans.queries_text import (
+        _KN_BATCH_WHERE,
         _doc_trigrams,
         kn_trigram_merge,
     )
@@ -300,13 +275,13 @@ def test_kn_trigram_merge_equals_rebuild(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents")
     s123 = (
-        _doc_trigrams(docs.filter(~F.expr(_KN_TRI_BATCH_WHERE)))
+        _doc_trigrams(docs.filter(~F.expr(_KN_BATCH_WHERE)))
         .groupBy("w1", "w2", "w3")
         .agg(F.count(F.lit(1)).alias("c_s"))
         .persist()
     )
     b123 = (
-        _doc_trigrams(docs.filter(F.expr(_KN_TRI_BATCH_WHERE)))
+        _doc_trigrams(docs.filter(F.expr(_KN_BATCH_WHERE)))
         .groupBy("w1", "w2", "w3")
         .agg(F.count(F.lit(1)).alias("c_b"))
         .persist()
@@ -352,7 +327,7 @@ def test_kn_trigram_merge_equals_rebuild(spark, sf_dir):
 def test_kn_trigram_merge_on_empty_batch(spark):
     """An empty batch must leave every statistic at its standing
     value (no spurious type bumps from the anti-join grains)."""
-    from udacitycapstonedataengineer_spark.plans.queries_round12 import (
+    from udacitycapstonedataengineer_spark.plans.queries_text import (
         kn_trigram_merge,
     )
 
@@ -395,7 +370,7 @@ def test_kn_trigram_merge_fuzz_vs_python_rebuild(spark):
 
     from hypothesis import given, settings, strategies as st
 
-    from udacitycapstonedataengineer_spark.plans.queries_round12 import (
+    from udacitycapstonedataengineer_spark.plans.queries_text import (
         kn_trigram_merge,
     )
 
@@ -444,29 +419,6 @@ def test_kn_trigram_merge_fuzz_vs_python_rebuild(spark):
         assert typesm.head()["n_types"] == len(exp_nc23)
 
     check()
-
-
-def test_kn_trigram_incremental_draft_oracle_parity(spark, sf_dir):
-    """The r13 registration pre-work done-criterion for the trigram
-    row: the draft body hashes equal to the UNCHANGED full-corpus
-    text_kn_trigram_prob oracle at sf0.001, so r13 only moves the
-    @query decoration + spends the window slot."""
-    from udacitycapstonedataengineer_spark.plans.queries import ORACLE
-    from udacitycapstonedataengineer_spark.plans.queries_round12 import (
-        _text_kn_trigram_incremental_draft,
-    )
-    from udacitycapstonedataengineer_spark.session import pin_oracle_semantics
-    from udacitycapstonedataengineer_spark.sources.readers import load_tables
-
-    from tests.oracle_check import compare_frames, run_oracle
-
-    pin_oracle_semantics(spark)
-    got = _text_kn_trigram_incremental_draft(spark, load_tables(spark, sf_dir))
-    compare_frames(
-        got.toPandas(),
-        run_oracle(ORACLE["text_kn_trigram_prob"], sf_dir),
-        "text_kn_trigram_incremental (draft)",
-    )
 
 
 def test_compaction_policy_over_simulated_appends(spark, tmp_path):
@@ -520,7 +472,7 @@ def test_batch_trigram_counts_matches_doc_trigrams(spark, sf_dir):
     text_kn_trigram_prob extraction by the draft's oracle parity) —
     any tokenization drift must turn red HERE, not silently against
     the batch path (the ADVICE r11 #4 discipline at trigram grain)."""
-    from udacitycapstonedataengineer_spark.plans.queries_round12 import (
+    from udacitycapstonedataengineer_spark.plans.queries_text import (
         _doc_trigrams,
     )
     from udacitycapstonedataengineer_spark.sources.readers import load_table
@@ -552,7 +504,7 @@ def test_stream_kn_trigram_counts_matches_rebuild(spark, sf_dir, tmp_path):
     drop-in standing side for kn_trigram_merge (empty batch →
     full-corpus statistics). Restart over the same checkpoint lands
     nothing new (exactly-once)."""
-    from udacitycapstonedataengineer_spark.plans.queries_round12 import (
+    from udacitycapstonedataengineer_spark.plans.queries_text import (
         _doc_trigrams,
         kn_trigram_merge,
     )
@@ -654,28 +606,14 @@ def test_saturating_canary(spark):
 
 
 def test_lm_quality_score_draft_oracle_parity(spark, sf_dir):
-    """Third r13 staging row: LM-scored quality filtering (the
-    perplexity-filter shape over the driver-gated KN bigram model,
-    fixed-point per-doc aggregation so the score is hash-exact).
-    Parity at sf0.001 makes the r13 registration mechanical."""
-    from udacitycapstonedataengineer_spark.plans.queries_round12 import (
-        _docs_lm_quality_score_draft,
-        _docs_lm_quality_score_oracle_sql,
-    )
-    from udacitycapstonedataengineer_spark.session import pin_oracle_semantics
-    from udacitycapstonedataengineer_spark.sources.readers import load_tables
+    """LM-scored quality filtering (the perplexity-filter shape over
+    the KN bigram model, fixed-point per-doc aggregation so the score
+    is hash-exact) scores every document it emits; oracle parity is
+    test_oracle_parity[docs_lm_quality_score]."""
+    from udacitycapstonedataengineer_spark.plans.queries import QUERIES
 
-    from tests.oracle_check import compare_frames, run_oracle
-
-    pin_oracle_semantics(spark)
-    got = _docs_lm_quality_score_draft(spark, load_tables(spark, sf_dir))
-    df = got.toPandas()
+    df = QUERIES["docs_lm_quality_score"](spark, sf_dir).toPandas()
     assert len(df) > 0 and (df["n_bigrams"] > 0).all()
-    compare_frames(
-        df,
-        run_oracle(_docs_lm_quality_score_oracle_sql(), sf_dir),
-        "docs_lm_quality_score (draft)",
-    )
 
 
 def test_kn_compaction_swap_preserves_concurrent_appends(

@@ -298,59 +298,6 @@ def test_fit_line_strips_sat_readings():
     assert "readings" in out["sat_canary"]
 
 
-def test_recall_at_k_served_draft_oracle_parity(spark, sf_dir):
-    """r14 staging row 1 (VERDICT r12 next #7): post-append recall@k
-    from the WRITTEN index matches the fit_where oracle end-to-end at
-    sf0.001 — the r14 registration is mechanical."""
-    # the registry hub first: queries_round14 reaches through
-    # queries_round8, whose module body reads ORACLE entries that
-    # plans.queries' import order populates
-    import udacitycapstonedataengineer_spark.plans.queries  # noqa: F401
-    from udacitycapstonedataengineer_spark.plans.queries_round14 import (
-        _ann_ivfpq_recall_at_k_served_draft,
-        _ivfpq_recall_at_k_served_oracle_sql,
-    )
-    from udacitycapstonedataengineer_spark.session import pin_oracle_semantics
-    from udacitycapstonedataengineer_spark.sources.readers import load_tables
-
-    from tests.oracle_check import compare_frames, run_oracle
-
-    pin_oracle_semantics(spark)
-    got = _ann_ivfpq_recall_at_k_served_draft(
-        spark, load_tables(spark, sf_dir)
-    )
-    compare_frames(
-        got.toPandas(),
-        run_oracle(_ivfpq_recall_at_k_served_oracle_sql(), sf_dir),
-        "ann_ivfpq_recall_at_k_served (draft)",
-    )
-
-
-def test_kn_trigram_stream_served_draft_oracle_parity(spark, sf_dir):
-    """r14 staging row 2: the streaming-trigram landing table feeding
-    the registered trigram-prob smoothing hashes equal to the
-    full-corpus batch oracle — stream-landed counts ≡ batch
-    extraction through the whole continuation recursion."""
-    from udacitycapstonedataengineer_spark.plans.queries import ORACLE
-    from udacitycapstonedataengineer_spark.plans.queries_round14 import (
-        _text_kn_trigram_stream_served_draft,
-    )
-    from udacitycapstonedataengineer_spark.session import pin_oracle_semantics
-    from udacitycapstonedataengineer_spark.sources.readers import load_tables
-
-    from tests.oracle_check import compare_frames, run_oracle
-
-    pin_oracle_semantics(spark)
-    got = _text_kn_trigram_stream_served_draft(
-        spark, load_tables(spark, sf_dir)
-    )
-    compare_frames(
-        got.toPandas(),
-        run_oracle(ORACLE["text_kn_trigram_prob"], sf_dir),
-        "text_kn_trigram_stream_served (draft)",
-    )
-
-
 def test_session_caps_plan_string_length():
     """Round-13: composed-index plans (IVF-PQ recall@k unions over the
     unrolled build tree) stringify combinatorially; SQLExecutionStart
@@ -364,54 +311,32 @@ def test_session_caps_plan_string_length():
 
 
 def test_recall_at_k_served_draft_partition_pruned(spark, sf_dir):
-    """r14 staging plan gate: the served recall@k draft's probes must
-    read the APPENDED written index under PartitionFilters on the
-    cell column — the post-append serving path prunes to nprobe/nlist
-    of the files, proven on the draft plan before registration.
+    """The served recall@k probes must read the APPENDED written index
+    under PartitionFilters on the cell column — the post-append
+    serving path prunes to nprobe/nlist of the files.
 
-    ADVICE r13 #4: this is exactly the plan family the session's
-    maxPlanStringLength cap truncates (scans print LAST in
-    treeString), so the gate walks the JVM plan tree instead of
-    grepping a capped string."""
-    import udacitycapstonedataengineer_spark.plans.queries  # noqa: F401
-    from udacitycapstonedataengineer_spark.plans.queries_round14 import (
-        _ann_ivfpq_recall_at_k_served_draft,
-    )
-    from udacitycapstonedataengineer_spark.sources.readers import load_tables
+    This is exactly the plan family the session's maxPlanStringLength
+    cap truncates (scans print LAST in treeString), so the gate walks
+    the JVM plan tree instead of grepping a capped string."""
+    from udacitycapstonedataengineer_spark.plans.queries import QUERIES
 
     from tests.plan_utils import scan_partition_filters
 
-    df = _ann_ivfpq_recall_at_k_served_draft(spark, load_tables(spark, sf_dir))
+    df = QUERIES["ann_ivfpq_recall_at_k_served"](spark, sf_dir)
     filters = scan_partition_filters(df)
     cell_pruned = [f for f in filters if "cell" in f]
     assert cell_pruned, f"no cell PartitionFilters on any scan: {filters}"
 
 
 def test_corpus_mixture_temperature_draft_oracle_parity(spark, sf_dir):
-    """r14 staging row 3: temperature-scaled source mixture (alpha=0.5
-    via IEEE-exact sqrt, integer-quantized weights, pure integer
-    division for the rate derivation) — the data-derived-mixture
-    counterpart to corpus_mixture_sample's pinned rates."""
-    import udacitycapstonedataengineer_spark.plans.queries  # noqa: F401
-    from udacitycapstonedataengineer_spark.plans.queries_round14 import (
-        _corpus_mixture_temperature_draft,
-        _corpus_mixture_temperature_oracle_sql,
-    )
-    from udacitycapstonedataengineer_spark.session import pin_oracle_semantics
-    from udacitycapstonedataengineer_spark.sources.readers import load_tables
+    """Temperature-scaled source mixture (alpha=0.5 via IEEE-exact
+    sqrt, integer-quantized weights, pure integer division for the
+    rate derivation) must thin something and keep something; oracle
+    parity is test_oracle_parity[corpus_mixture_temperature]."""
+    from udacitycapstonedataengineer_spark.plans.queries import QUERIES
 
-    from tests.oracle_check import compare_frames, run_oracle
-
-    pin_oracle_semantics(spark)
-    got = _corpus_mixture_temperature_draft(spark, load_tables(spark, sf_dir))
-    df = got.toPandas()
-    # the policy must actually thin something and keep something
+    df = QUERIES["corpus_mixture_temperature"](spark, sf_dir).toPandas()
     assert (df["n_kept"] > 0).any() and (df["n_kept"] < df["n_total"]).any()
-    compare_frames(
-        df,
-        run_oracle(_corpus_mixture_temperature_oracle_sql(), sf_dir),
-        "corpus_mixture_temperature (draft)",
-    )
 
 
 def test_corpus_mixture_temperature_flattens_skew(spark):
@@ -420,8 +345,8 @@ def test_corpus_mixture_temperature_flattens_skew(spark):
     sources are uniform, so this pins the skew behavior on a
     constructed corpus)."""
     import udacitycapstonedataengineer_spark.plans.queries  # noqa: F401
-    from udacitycapstonedataengineer_spark.plans.queries_round14 import (
-        _corpus_mixture_temperature_draft,
+    from udacitycapstonedataengineer_spark.plans.queries_corpus2 import (
+        _corpus_mixture_temperature,
     )
 
     rows = [(i, f"doc {i}", "crawl") for i in range(900)] + [
@@ -430,7 +355,7 @@ def test_corpus_mixture_temperature_flattens_skew(spark):
     docs = spark.createDataFrame(rows, "doc_id bigint, text string, source string")
     out = {
         r["source"]: r.asDict()
-        for r in _corpus_mixture_temperature_draft(
+        for r in _corpus_mixture_temperature.__wrapped__(
             spark, {"documents": docs}
         ).collect()
     }

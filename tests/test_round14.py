@@ -332,66 +332,35 @@ def test_repeat_flag_targets_now_pinned():
 
 
 def test_semdedup_survivors_budgeted_draft_oracle_parity(spark, sf_dir):
-    """r15 staging row 1: the survivors keep policy under the
-    CELL-BUDGET derived k, with the oracle deriving the SAME k by
-    integer math in SQL (scalar-subquery seed LIMIT) and the
-    derived_k column hash-pinning the derivation cross-engine."""
-    import udacitycapstonedataengineer_spark.plans.queries  # noqa: F401
+    """The survivors keep policy under the CELL-BUDGET derived k: the
+    derived_k column must respond to the corpus count (the fixed-k
+    rows would emit 8 here regardless). Oracle parity, which pins the
+    same derivation in SQL, is
+    test_oracle_parity[semdedup_survivors_budgeted]."""
     from udacitycapstonedataengineer_spark.operators.cell_budget import (
         derive_k,
     )
-    from udacitycapstonedataengineer_spark.plans.queries_round15 import (
+    from udacitycapstonedataengineer_spark.plans.queries import QUERIES
+    from udacitycapstonedataengineer_spark.plans.queries_sim import (
         _BUDGET_TARGET_CELL,
-        _semdedup_survivors_budgeted_draft,
-        _semdedup_survivors_budgeted_oracle_sql,
     )
-    from udacitycapstonedataengineer_spark.session import pin_oracle_semantics
-    from udacitycapstonedataengineer_spark.sources.readers import load_tables
+    from udacitycapstonedataengineer_spark.sources.readers import load_table
 
-    from tests.oracle_check import compare_frames, run_oracle
-
-    pin_oracle_semantics(spark)
-    tables = load_tables(spark, sf_dir)
-    got = _semdedup_survivors_budgeted_draft(spark, tables)
-    df = got.toPandas()
-    # the derivation must actually respond to the corpus count (the
-    # fixed-k rows would emit 8 here regardless)
-    n = tables["embeddings"].count()
+    df = QUERIES["semdedup_survivors_budgeted"](spark, sf_dir).toPandas()
+    n = load_table(spark, sf_dir, "embeddings").count()
     assert df["derived_k"].unique().tolist() == [
         derive_k(n, target_cell=_BUDGET_TARGET_CELL)
     ]
-    compare_frames(
-        df,
-        run_oracle(_semdedup_survivors_budgeted_oracle_sql(), sf_dir),
-        "semdedup_survivors_budgeted (draft)",
-    )
 
 
 def test_corpus_mixture_temperature_alpha_draft_oracle_parity(spark, sf_dir):
-    """r15 staging row 2: the alpha sweep {0.25, 0.5, 0.75} over
-    composed correctly-rounded sqrt — three rows per source, every
-    derived rate pure integer math after the quantized weights."""
-    import udacitycapstonedataengineer_spark.plans.queries  # noqa: F401
-    from udacitycapstonedataengineer_spark.plans.queries_round15 import (
-        _corpus_mixture_temperature_alpha_draft,
-        _corpus_mixture_temperature_alpha_oracle_sql,
-    )
-    from udacitycapstonedataengineer_spark.session import pin_oracle_semantics
-    from udacitycapstonedataengineer_spark.sources.readers import load_tables
+    """The alpha sweep {0.25, 0.5, 0.75} emits one row per source and
+    alpha; oracle parity is
+    test_oracle_parity[corpus_mixture_temperature_alpha]."""
+    from udacitycapstonedataengineer_spark.plans.queries import QUERIES
 
-    from tests.oracle_check import compare_frames, run_oracle
-
-    pin_oracle_semantics(spark)
-    got = _corpus_mixture_temperature_alpha_draft(
-        spark, load_tables(spark, sf_dir)
-    )
-    df = got.toPandas()
+    df = QUERIES["corpus_mixture_temperature_alpha"](spark, sf_dir).toPandas()
     assert set(df["alpha_pct"]) == {25, 50, 75}
-    compare_frames(
-        df,
-        run_oracle(_corpus_mixture_temperature_alpha_oracle_sql(), sf_dir),
-        "corpus_mixture_temperature_alpha (draft)",
-    )
 
 
 def test_corpus_mixture_temperature_alpha_flattens_by_alpha(spark):
@@ -401,8 +370,8 @@ def test_corpus_mixture_temperature_alpha_flattens_by_alpha(spark):
     than at 0.75, with alpha=0.5 reproducing the registered sqrt
     row's exact rates (same corpus as the r13 skew test)."""
     import udacitycapstonedataengineer_spark.plans.queries  # noqa: F401
-    from udacitycapstonedataengineer_spark.plans.queries_round15 import (
-        _corpus_mixture_temperature_alpha_draft,
+    from udacitycapstonedataengineer_spark.plans.queries_corpus2 import (
+        _corpus_mixture_temperature_alpha,
     )
 
     rows = [(i, f"doc {i}", "crawl") for i in range(900)] + [
@@ -413,7 +382,7 @@ def test_corpus_mixture_temperature_alpha_flattens_by_alpha(spark):
     )
     out = {
         (r["source"], r["alpha_pct"]): r.asDict()
-        for r in _corpus_mixture_temperature_alpha_draft(
+        for r in _corpus_mixture_temperature_alpha.__wrapped__(
             spark, {"documents": docs}
         ).collect()
     }
@@ -432,48 +401,16 @@ def test_corpus_mixture_temperature_alpha_flattens_by_alpha(spark):
     )
 
 
-@pytest.mark.slow  # VERDICT r16 next #2: multi-minute, opt-in tier
-def test_recall_at_k_served_filtered_draft_oracle_parity(spark, sf_dir):
-    """r15 staging row 3: filtered-serving recall@k — the predicate
-    lives in the index rows, the probe applies it inside the pruned
-    cell scan, the ground truth ranks only rows passing it."""
-    import udacitycapstonedataengineer_spark.plans.queries  # noqa: F401
-    from udacitycapstonedataengineer_spark.plans.queries_round15 import (
-        _ann_ivfpq_recall_at_k_served_filtered_draft,
-        _ivfpq_recall_at_k_served_filtered_oracle_sql,
-    )
-    from udacitycapstonedataengineer_spark.session import pin_oracle_semantics
-    from udacitycapstonedataengineer_spark.sources.readers import load_tables
-
-    from tests.oracle_check import compare_frames, run_oracle
-
-    pin_oracle_semantics(spark)
-    got = _ann_ivfpq_recall_at_k_served_filtered_draft(
-        spark, load_tables(spark, sf_dir)
-    )
-    compare_frames(
-        got.toPandas(),
-        run_oracle(_ivfpq_recall_at_k_served_filtered_oracle_sql(), sf_dir),
-        "ann_ivfpq_recall_at_k_served_filtered (draft)",
-    )
-
-
 def test_recall_at_k_served_filtered_draft_partition_pruned(spark, sf_dir):
-    """r15 staging plan gate: the filtered probes still read the
-    written index under cell PartitionFilters (the label predicate
-    must ride the pruned scan, not replace it) — asserted on the plan
-    TREE (the maxPlanStringLength-capped string truncates scans)."""
-    import udacitycapstonedataengineer_spark.plans.queries  # noqa: F401
-    from udacitycapstonedataengineer_spark.plans.queries_round15 import (
-        _ann_ivfpq_recall_at_k_served_filtered_draft,
-    )
-    from udacitycapstonedataengineer_spark.sources.readers import load_tables
+    """The filtered probes still read the written index under cell
+    PartitionFilters (the label predicate must ride the pruned scan,
+    not replace it) — asserted on the plan TREE (the
+    maxPlanStringLength-capped string truncates scans)."""
+    from udacitycapstonedataengineer_spark.plans.queries import QUERIES
 
     from tests.plan_utils import scan_partition_filters
 
-    df = _ann_ivfpq_recall_at_k_served_filtered_draft(
-        spark, load_tables(spark, sf_dir)
-    )
+    df = QUERIES["ann_ivfpq_recall_at_k_served_filtered"](spark, sf_dir)
     filters = scan_partition_filters(df)
     cell_pruned = [f for f in filters if "cell" in f]
     assert cell_pruned, f"no cell PartitionFilters on any scan: {filters}"

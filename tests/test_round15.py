@@ -268,27 +268,19 @@ def test_sweep_still_removes_cold_tree_without_monkeypatch(tmp_path):
 
 
 def test_corpus_pipeline_report_draft_oracle_parity(spark, sf_dir):
-    """r16 staging row 1: the end-to-end corpus pipeline (quality
-    gates → exact dedup → budgeted SemDeDup → temperature mixture →
-    packing counts) under ONE DuckDB twin — the integration gate the
-    stage families prove only piecewise."""
-    import udacitycapstonedataengineer_spark.plans.queries  # noqa: F401
+    """The end-to-end corpus pipeline (quality gates → exact dedup →
+    budgeted SemDeDup → temperature mixture → packing counts) keeps a
+    monotone, non-degenerate funnel; oracle parity is
+    test_oracle_parity[corpus_pipeline_report]."""
     from udacitycapstonedataengineer_spark.operators.cell_budget import (
         derive_k,
     )
-    from udacitycapstonedataengineer_spark.plans.queries_round16 import (
+    from udacitycapstonedataengineer_spark.plans.queries import QUERIES
+    from udacitycapstonedataengineer_spark.plans.queries_corpus2 import (
         _PIPE_TARGET_CELL,
-        _corpus_pipeline_report_draft,
-        _corpus_pipeline_report_oracle_sql,
     )
-    from udacitycapstonedataengineer_spark.session import pin_oracle_semantics
-    from udacitycapstonedataengineer_spark.sources.readers import load_tables
 
-    from tests.oracle_check import compare_frames, run_oracle
-
-    pin_oracle_semantics(spark)
-    tables = load_tables(spark, sf_dir)
-    df = _corpus_pipeline_report_draft(spark, tables).toPandas()
+    df = QUERIES["corpus_pipeline_report"](spark, sf_dir).toPandas()
     # the funnel must be monotone per source and non-degenerate: the
     # half-budget mixture always drops documents
     for _, r in df.iterrows():
@@ -301,164 +293,47 @@ def test_corpus_pipeline_report_draft_oracle_parity(spark, sf_dir):
     assert df["derived_k"].unique().tolist() == [
         derive_k(int(df.n_exact.sum()), target_cell=_PIPE_TARGET_CELL)
     ]
-    compare_frames(
-        df,
-        run_oracle(_corpus_pipeline_report_oracle_sql(), sf_dir),
-        "corpus_pipeline_report (draft)",
-    )
 
 
-@pytest.mark.slow  # VERDICT r16 next #2: multi-minute, opt-in tier
+@pytest.mark.slow  # multi-minute, opt-in tier
 def test_semdedup_survivors_incremental_budgeted_parity(spark, sf_dir):
-    """r16 staging row 2: the incremental keep policy under the
-    derived-k budget — k from the CORPUS count (the fit set), oracle
-    deriving the SAME k via the scalar-subquery seed LIMIT."""
-    import udacitycapstonedataengineer_spark.plans.queries  # noqa: F401
+    """The incremental keep policy under the derived-k budget takes k
+    from the CORPUS count (the fit set); oracle parity, which derives
+    the same k in SQL, is
+    test_oracle_parity[semdedup_survivors_incremental_budgeted]."""
     from udacitycapstonedataengineer_spark.operators.cell_budget import (
         derive_k,
     )
-    from udacitycapstonedataengineer_spark.plans.queries_round16 import (
-        _INC_TARGET_CELL,
-        _semdedup_survivors_incremental_budgeted_draft,
-        _semdedup_survivors_incremental_budgeted_oracle_sql,
-    )
-    from udacitycapstonedataengineer_spark.plans.queries_round10 import (
+    from udacitycapstonedataengineer_spark.plans.queries import QUERIES
+    from udacitycapstonedataengineer_spark.plans.queries_sim import (
         _BATCH_WHERE,
+        _INC_TARGET_CELL,
     )
-    from udacitycapstonedataengineer_spark.session import pin_oracle_semantics
-    from udacitycapstonedataengineer_spark.sources.readers import load_tables
+    from udacitycapstonedataengineer_spark.sources.readers import load_table
 
-    from tests.oracle_check import compare_frames, run_oracle
-
-    pin_oracle_semantics(spark)
-    tables = load_tables(spark, sf_dir)
-    df = _semdedup_survivors_incremental_budgeted_draft(
-        spark, tables
-    ).toPandas()
-    n_corpus = tables["embeddings"].filter(f"NOT ({_BATCH_WHERE})").count()
+    name = "semdedup_survivors_incremental_budgeted"
+    df = QUERIES[name](spark, sf_dir).toPandas()
+    emb = load_table(spark, sf_dir, "embeddings")
+    n_corpus = emb.filter(f"NOT ({_BATCH_WHERE})").count()
     assert df["derived_k"].unique().tolist() == [
         derive_k(n_corpus, target_cell=_INC_TARGET_CELL)
     ]
     assert set(df["reason"]) <= {"corpus_dup", "batch_dup", "novel"}
-    compare_frames(
-        df,
-        run_oracle(
-            _semdedup_survivors_incremental_budgeted_oracle_sql(), sf_dir
-        ),
-        "semdedup_survivors_incremental_budgeted (draft)",
-    )
 
 
-@pytest.mark.slow  # VERDICT r16 next #2: multi-minute, opt-in tier
+@pytest.mark.slow  # multi-minute, opt-in tier
 def test_recall_curve_served_filtered_draft_oracle_parity(spark, sf_dir):
-    """r16 staging row 3: the filtered serving recall-vs-nprobe curve
-    measured from the written post-append index."""
-    import udacitycapstonedataengineer_spark.plans.queries  # noqa: F401
-    from udacitycapstonedataengineer_spark.plans.queries_round16 import (
-        _ann_ivfpq_recall_curve_served_filtered_draft,
-        _ivfpq_recall_curve_served_filtered_oracle_sql,
-    )
-    from udacitycapstonedataengineer_spark.session import pin_oracle_semantics
-    from udacitycapstonedataengineer_spark.sources.readers import load_tables
+    """The filtered serving recall-vs-nprobe curve, measured from the
+    written post-append index, has one recall in [0, 1] per nprobe;
+    oracle parity is
+    test_oracle_parity[ann_ivfpq_recall_curve_served_filtered]."""
+    from udacitycapstonedataengineer_spark.plans.queries import QUERIES
 
-    from tests.oracle_check import compare_frames, run_oracle
-
-    pin_oracle_semantics(spark)
-    df = _ann_ivfpq_recall_curve_served_filtered_draft(
-        spark, load_tables(spark, sf_dir)
-    ).toPandas()
+    name = "ann_ivfpq_recall_curve_served_filtered"
+    df = QUERIES[name](spark, sf_dir).toPandas()
     assert df["nprobe"].tolist() == [1, 2, 4, 8]
     # NOT asserted monotone: the CANDIDATE set grows with nprobe, but
     # the ADC top-k ranks by quantized distance, so a newly probed
     # cell can push a true neighbor out of the approximate top-k
     # (observed at sf0.001: 0.3, 0.5, 0.4, 0.4)
     assert ((df["recall"] >= 0) & (df["recall"] <= 1)).all()
-    compare_frames(
-        df,
-        run_oracle(
-            _ivfpq_recall_curve_served_filtered_oracle_sql(), sf_dir
-        ),
-        "ann_ivfpq_recall_curve_served_filtered (draft)",
-    )
-
-
-# --- r17 staging drafts (staged two rounds ahead): sf0.001 parity
-
-
-def test_bm25_indexed_incremental_draft_oracle_parity(spark, sf_dir):
-    """r17 staging row 1: corpus-built standing postings + batch
-    append + additive stats merge, served under the UNCHANGED
-    text_bm25_linear_topk oracle — hash equality proves append ≡
-    rebuild ≡ scan ≡ DuckDB (the KN-incremental discipline applied to
-    the retrieval family)."""
-    from udacitycapstonedataengineer_spark.plans.queries import ORACLE
-    from udacitycapstonedataengineer_spark.plans.queries_round17 import (
-        _text_bm25_indexed_incremental_draft,
-    )
-    from udacitycapstonedataengineer_spark.session import pin_oracle_semantics
-    from udacitycapstonedataengineer_spark.sources.readers import load_tables
-
-    from tests.oracle_check import compare_frames, run_oracle
-
-    pin_oracle_semantics(spark)
-    df = _text_bm25_indexed_incremental_draft(
-        spark, load_tables(spark, sf_dir)
-    ).toPandas()
-    compare_frames(
-        df,
-        run_oracle(ORACLE["text_bm25_linear_topk"], sf_dir),
-        "text_bm25_indexed_incremental (draft)",
-    )
-
-
-def test_bm25_indexed_served_draft_oracle_parity(spark, sf_dir):
-    """r17 staging row 2: the postings index WRITTEN term-sorted and
-    served from the read-back, same oracle as the scan twin."""
-    from udacitycapstonedataengineer_spark.plans.queries import ORACLE
-    from udacitycapstonedataengineer_spark.plans.queries_round17 import (
-        _text_bm25_indexed_served_draft,
-    )
-    from udacitycapstonedataengineer_spark.session import pin_oracle_semantics
-    from udacitycapstonedataengineer_spark.sources.readers import load_tables
-
-    from tests.oracle_check import compare_frames, run_oracle
-
-    pin_oracle_semantics(spark)
-    df = _text_bm25_indexed_served_draft(
-        spark, load_tables(spark, sf_dir)
-    ).toPandas()
-    compare_frames(
-        df,
-        run_oracle(ORACLE["text_bm25_linear_topk"], sf_dir),
-        "text_bm25_indexed_served (draft)",
-    )
-
-
-def test_sessionize_stream_served_draft_oracle_parity(spark, sf_dir):
-    """r17 staging row 3: the transformWithStateInPandas gap
-    sessionization (MapState + event-time timers, RocksDB state)
-    driven over the whole events table, reshaped to the registered
-    events_sessionize output and hash-compared against its UNCHANGED
-    oracle — the streaming stateful surface under the driver gate."""
-    import pytest
-
-    pytest.importorskip("google.protobuf.descriptor")
-    from udacitycapstonedataengineer_spark.plans.queries import ORACLE
-    from udacitycapstonedataengineer_spark.plans.queries_round17 import (
-        _events_sessionize_stream_served_draft,
-    )
-    from udacitycapstonedataengineer_spark.session import pin_oracle_semantics
-    from udacitycapstonedataengineer_spark.sources.readers import load_tables
-
-    from tests.oracle_check import compare_frames, run_oracle
-
-    pin_oracle_semantics(spark)
-    df = _events_sessionize_stream_served_draft(
-        spark, load_tables(spark, sf_dir)
-    ).toPandas()
-    assert len(df) > 5
-    compare_frames(
-        df,
-        run_oracle(ORACLE["events_sessionize"], sf_dir),
-        "events_sessionize_stream_served (draft)",
-    )

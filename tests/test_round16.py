@@ -190,85 +190,6 @@ def test_salvage_skips_unpositioned_and_unbaselined():
     assert got == []
 
 
-# --- r18 staging drafts: sf0.001 oracle parity (VERDICT r15 next #5)
-
-
-@pytest.mark.slow  # VERDICT r16 next #2: multi-minute, opt-in tier
-def test_corpus_pipeline_tokenshard_draft_oracle_parity(spark, sf_dir):
-    """r18 staging row 1: the pipeline's packing stage EXECUTED —
-    mix survivors chunked, tokenized with portable ids, written
-    through the real tokenshard sink, and the per-source report
-    computed from the READ-BACK shards. The DuckDB twin recomputes
-    the same report from text, so a hash match proves the shard
-    roundtrip preserved content."""
-    import udacitycapstonedataengineer_spark.plans.queries  # noqa: F401
-    from udacitycapstonedataengineer_spark.plans.queries_round16 import (
-        _corpus_pipeline_report_draft,
-    )
-    from udacitycapstonedataengineer_spark.plans.queries_round18 import (
-        _corpus_pipeline_tokenshard_draft,
-        _corpus_pipeline_tokenshard_oracle_sql,
-    )
-    from udacitycapstonedataengineer_spark.session import pin_oracle_semantics
-    from udacitycapstonedataengineer_spark.sources.readers import load_tables
-
-    from tests.oracle_check import compare_frames, run_oracle
-
-    pin_oracle_semantics(spark)
-    tables = load_tables(spark, sf_dir)
-    df = _corpus_pipeline_tokenshard_draft(spark, tables).toPandas()
-    # non-degenerate: the packed corpus carries real content
-    assert df.n_seqs.sum() > 0
-    assert df.n_tokens.sum() > 0
-    assert df.token_checksum.sum() > 0
-    # cross-query consistency: n_seqs per source EQUALS the registered
-    # report's arithmetic n_chunks (width == stride — same math)
-    report = (
-        _corpus_pipeline_report_draft(spark, tables)
-        .toPandas()
-        .set_index("source")
-    )
-    for _, r in df.iterrows():
-        assert r.n_seqs == report.loc[r.source, "n_chunks"], r
-    compare_frames(
-        df,
-        run_oracle(_corpus_pipeline_tokenshard_oracle_sql(), sf_dir),
-        "corpus_pipeline_tokenshard (draft)",
-    )
-
-
-def test_bm25_drift_rebuild_draft_oracle_parity(spark, sf_dir):
-    """r18 staging row 2: stale-vs-fresh BM25 serving after a batch
-    append — the union of the two top-k lists with both scores,
-    ranks, and membership flags."""
-    import udacitycapstonedataengineer_spark.plans.queries  # noqa: F401
-    from udacitycapstonedataengineer_spark.plans.queries_round18 import (
-        _BM25_K,
-        _text_bm25_drift_rebuild_draft,
-        _text_bm25_drift_rebuild_oracle_sql,
-    )
-    from udacitycapstonedataengineer_spark.session import pin_oracle_semantics
-    from udacitycapstonedataengineer_spark.sources.readers import load_tables
-
-    from tests.oracle_check import compare_frames, run_oracle
-
-    pin_oracle_semantics(spark)
-    tables = load_tables(spark, sf_dir)
-    df = _text_bm25_drift_rebuild_draft(spark, tables).toPandas()
-    # both top-k lists are full and the union is bounded by 2k
-    assert df.in_stale.sum() == _BM25_K
-    assert df.in_fresh.sum() == _BM25_K
-    assert _BM25_K <= len(df) <= 2 * _BM25_K
-    # non-vacuous drift: the frozen snapshot's params differ from the
-    # merged index's, so scores must actually move
-    assert (df.bm25_stale != df.bm25_fresh).any()
-    compare_frames(
-        df,
-        run_oracle(_text_bm25_drift_rebuild_oracle_sql(), sf_dir),
-        "text_bm25_drift_rebuild (draft)",
-    )
-
-
 def test_wrapper_baselines_respect_scale(tmp_path, monkeypatch):
     """ADVICE r15 #1 extended to the driver wrappers: a BENCH_r line
     recorded at sf0.1 must not baseline an sf0.01 smoke run (it

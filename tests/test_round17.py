@@ -127,7 +127,7 @@ def test_recall_curve_fused_matches_loop(spark, sf_dir):
         ivfpq_recall_curve,
         ivfpq_topk,
     )
-    from udacitycapstonedataengineer_spark.plans.queries_round9 import (
+    from udacitycapstonedataengineer_spark.plans.queries_sim import (
         _exact_topk_flags,
     )
     from udacitycapstonedataengineer_spark.sources.readers import load_table
@@ -237,4 +237,39 @@ def test_recall_at_k_fused_matches_loop(spark, sf_dir):
         ref.append((q, hits, hits / float(k)))
     assert got == ref
     sch = {f.name: f.dataType.simpleString() for f in fused.schema.fields}
-    assert sch == {"query_vec_id": "int", "hits": "bigint", "recall": "double"}
+    assert sch == {
+        "query_vec_id": "bigint",
+        "hits": "bigint",
+        "recall": "double",
+    }
+
+
+def test_recall_at_k_query_ids_are_bigint(spark, sf_dir):
+    """Query ids share vec_id's bigint width end to end: an id at or
+    above 2^31 probes and scores like any other, and the fused result
+    is keyed with exact_topk_multi's type."""
+    from pyspark.sql import functions as F
+
+    from udacitycapstonedataengineer_spark.operators.ivfpq import ivfpq_build
+    from udacitycapstonedataengineer_spark.operators.recall_eval import (
+        exact_topk_multi,
+        ivfpq_recall_at_k,
+    )
+    from udacitycapstonedataengineer_spark.sources.readers import load_table
+
+    base = 2**31
+    emb = load_table(spark, sf_dir, "embeddings").withColumn(
+        "vec_id", F.col("vec_id") + F.lit(base)
+    )
+    cents, books, index = ivfpq_build(emb, nlist=4, m=8, k=16, iters=2)
+    qids = [base + 3, base + 7]
+    fused = ivfpq_recall_at_k(index, cents, books, emb, qids, k=5, nprobe=2)
+    rows = fused.collect()
+    assert [r["query_vec_id"] for r in rows] == qids
+    assert all(0.0 <= r["recall"] <= 1.0 for r in rows)
+
+    row = emb.filter(F.col("vec_id") == qids[0]).head()
+    vec = [float(x) for x in row["embedding"]]
+    exact = exact_topk_multi(emb, [(qids[0], vec)], 5)
+    key = fused.schema["query_vec_id"].dataType
+    assert key == exact.schema["query_vec_id"].dataType

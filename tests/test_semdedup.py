@@ -120,7 +120,7 @@ def test_semdedup_incremental_survivors_standing_tables(
         cosine_prenorm,
     )
     from udacitycapstonedataengineer_spark.plans.queries import QUERIES
-    from udacitycapstonedataengineer_spark.plans.queries_round10 import (
+    from udacitycapstonedataengineer_spark.plans.queries_sim import (
         _BATCH_WHERE,
         _cell_members,
         _decide_batch,

@@ -954,7 +954,7 @@ def test_stream_ivfpq_drift_matches_batch(spark, sf_dir, tmp_path):
     (exact-BIGINT energies — no float tolerance needed)."""
     from udacitycapstonedataengineer_spark.operators.ivfpq import ivfpq_build
     from udacitycapstonedataengineer_spark.plans import queries  # noqa: F401
-    from udacitycapstonedataengineer_spark.plans.queries_round10 import (
+    from udacitycapstonedataengineer_spark.plans.queries_sim import (
         _BATCH_WHERE,
         ivfpq_drift_stats,
     )
@@ -1034,7 +1034,7 @@ def test_stream_semdedup_survivor_pipeline_sequential(spark, sf_dir, tmp_path):
         norm,
     )
     from udacitycapstonedataengineer_spark.plans import queries  # noqa: F401
-    from udacitycapstonedataengineer_spark.plans.queries_round10 import (
+    from udacitycapstonedataengineer_spark.plans.queries_sim import (
         _BATCH_WHERE,
         _cell_members,
         _decide_batch,
@@ -1170,10 +1170,10 @@ def test_stream_kn_bigram_counts_matches_rebuild(spark, sf_dir, tmp_path):
     text_kn_bigram_incremental. Restart over the same checkpoint must
     land nothing new (exactly-once)."""
     from udacitycapstonedataengineer_spark.plans import queries  # noqa: F401
-    from udacitycapstonedataengineer_spark.plans.queries_round8 import (
+    from udacitycapstonedataengineer_spark.plans.queries_text import (
         _doc_bigrams,
     )
-    from udacitycapstonedataengineer_spark.plans.queries_round11 import (
+    from udacitycapstonedataengineer_spark.plans.queries_text import (
         kn_bigram_merge,
     )
     from udacitycapstonedataengineer_spark.streaming.text import (

@@ -1,6 +1,6 @@
 """Distributed BPE tokenizer training — merges learned on the cluster.
 
-`text_bpe_pair_stats` (plans/queries_round6.py) exposes one BPE
+`text_bpe_pair_stats` (plans/queries_text.py) exposes one BPE
 iteration as an oracled query; this module is the full trainer the
 driver loops, built on one representational trick: every merged
 symbol gets a fresh PRIVATE-USE codepoint (U+E000+i), so a symbol is

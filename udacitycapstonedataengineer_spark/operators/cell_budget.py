@@ -55,7 +55,7 @@ def semdedup_closure_scaled(
     """((node, comp) components, k): derive k from the corpus count,
     run the within-cell pair join, close it transitively — the shared
     core of every derived-k survivors consumer (the scaled pipeline
-    below and the r15 ``semdedup_survivors_budgeted`` draft), so the
+    below and the ``semdedup_survivors_budgeted`` query), so the
     policy + closure exist exactly once. One extra count job over the
     fixed-k path — the price of the policy, paid once per (re)build."""
     k = derive_k(emb.count(), target_cell=target_cell)

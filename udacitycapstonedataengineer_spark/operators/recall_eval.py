@@ -1,6 +1,6 @@
 """Sampled recall@k evaluation for the ANN serving path.
 
-``ann_ivfpq_recall_curve`` / ``_served`` (plans/queries_round10/11)
+``ann_ivfpq_recall_curve`` / ``_served`` (plans/queries_sim.py)
 measure recall for ONE pinned query vector — hash-checkable against
 DuckDB, but a production index is tuned against a SAMPLE of real
 queries. This module is that offline eval job:
@@ -150,7 +150,7 @@ def ivfpq_recall_at_k(
     # a query whose probed cells hold zero eligible rows must still
     # report hits=0, exactly as the per-query loop's global agg did
     qdf = index.sparkSession.createDataFrame(
-        [(int(q),) for q in query_ids], "query_vec_id int"
+        [(int(q),) for q in query_ids], "query_vec_id bigint"
     )
     return (
         qdf.join(hits, "query_vec_id", "left")

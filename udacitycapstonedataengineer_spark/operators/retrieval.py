@@ -37,7 +37,7 @@ Round 8 extends the same pattern to BM25 ranking (VERDICT r7 #4):
   bit-identical to the scan-shaped oracle twin
   (``text_bm25_linear_topk``). O(postings-of-terms) per query.
 
-BM25 scoring matches ``plans/queries_round7.py`` bit-for-bit: linear
+BM25 scoring matches ``plans/queries_text.py`` bit-for-bit: linear
 idf surrogate (N-df+0.5)/(df+0.5) (ln() is not cross-engine
 bit-stable; +,×,÷ are), k1=1.2, b=0.75, and a FIXED term summation
 order — ``test_retrieval.py::test_bm25_index_equals_scan_query`` pins
@@ -163,7 +163,7 @@ def merge_bm25_stats(stats_a: DataFrame, stats_b: DataFrame) -> DataFrame:
 def _bm25_posting_score():
     """Per-posting BM25 score expression over columns
     (tf, dl, df, n_docs, total_tokens) — operation-for-operation the
-    expression in ``plans/queries_round7.py`` (linear idf, k1=1.2,
+    expression in ``plans/queries_text.py`` (linear idf, k1=1.2,
     b=0.75) so doubles are bit-identical between the indexed path,
     the scan path, and the DuckDB oracle."""
     return (

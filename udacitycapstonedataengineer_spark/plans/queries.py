@@ -473,24 +473,5 @@ from . import queries_tpch2  # noqa: E402,F401
 from . import queries_tpch3  # noqa: E402,F401
 from . import queries_corpus2  # noqa: E402,F401
 from . import queries_stats  # noqa: E402,F401
-from . import queries_round5  # noqa: E402,F401
-from . import queries_round5b  # noqa: E402,F401
-from . import queries_round5c  # noqa: E402,F401
-from . import queries_round5d  # noqa: E402,F401
-from . import queries_round5e  # noqa: E402,F401
-from . import queries_round5f  # noqa: E402,F401
-from . import queries_round5g  # noqa: E402,F401
-from . import queries_round5h  # noqa: E402,F401
-from . import queries_round5i  # noqa: E402,F401
-from . import queries_round6  # noqa: E402,F401
-from . import queries_round7  # noqa: E402,F401
-from . import queries_round8  # noqa: E402,F401
-from . import queries_round9  # noqa: E402,F401
-from . import queries_round10  # noqa: E402,F401
-from . import queries_round11  # noqa: E402,F401
-from . import queries_round13  # noqa: E402,F401
-from . import queries_round14  # noqa: E402,F401
-from . import queries_round15  # noqa: E402,F401
-from . import queries_round16  # noqa: E402,F401
 
 __all__ = ["QUERIES", "ORACLE", "query"]

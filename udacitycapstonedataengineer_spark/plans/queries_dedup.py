@@ -1,4 +1,5 @@
-"""Deduplication queries over ``documents``.
+"""Deduplication queries over ``documents`` (plus duplicate-invoice
+pairs over ``orders``).
 
 ALL tiers are oracle-checked, including the full MinHash-LSH and
 SimHash band pipelines: the operators hash with an engine-portable
@@ -10,24 +11,25 @@ bit-for-bit.
 
 from __future__ import annotations
 
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..functions.text import fingerprint_sql
+from ..functions.text import fingerprint, fingerprint_sql
 from ..operators.dedup import (
     H60_SQL,
     P_MOD,
-    SHINGLES_EXPR,
     SIMHASH_BANDS,
     SIMHASH_BITS,
-    TOKENS,
     exact_dedup_groups,
     exact_dedup_keep_canonical,
     lcg_coeffs,
     minhash_near_dups,
+    shingle_pair_counts,
     simhash_near_dups,
     with_shingles,
 )
 from .registry import query
+
 
 # DuckDB twin of the 3-word-shingle expression (1-based inclusive slices)
 _SHINGLES_SQL = (
@@ -370,4 +372,320 @@ def _dedup_minhash_incremental(spark, t):
     seen_bk = minhash_band_buckets(docs.filter(F.col("doc_id") % 2 == 0))
     return minhash_candidates_incremental(new_bk, seen_bk).orderBy(
         "new_doc_id", "seen_doc_id"
+    )
+
+
+@query(
+    "docs_shingle_containment",
+    f"""
+    WITH sh AS (
+        SELECT doc_id, unnest(shingles) AS shingle
+        FROM (SELECT doc_id, {_SHINGLES_SQL} AS shingles
+              FROM (SELECT doc_id, {_TOKS_SQL} AS toks FROM documents))
+    ),
+    rare AS (
+        SELECT shingle FROM sh GROUP BY 1 HAVING count(*) <= 64
+    ),
+    shf AS (SELECT sh.* FROM sh JOIN rare USING (shingle)),
+    sizes AS (SELECT doc_id, count(*) AS n_sh FROM shf GROUP BY 1),
+    inter AS (
+        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_inter
+        FROM shf a JOIN shf b
+          ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+        GROUP BY 1, 2
+    )
+    SELECT doc_a, doc_b, n_inter,
+           CAST(n_inter * 10000 // least(sa.n_sh, sb.n_sh) AS BIGINT)
+               AS containment_bp
+    FROM inter
+    JOIN sizes sa ON sa.doc_id = doc_a
+    JOIN sizes sb ON sb.doc_id = doc_b
+    WHERE n_inter * 10 >= least(sa.n_sh, sb.n_sh) * 8
+    ORDER BY doc_a, doc_b
+    """,
+)
+def _docs_shingle_containment(spark, t):
+    # asymmetric near-dup: CONTAINMENT |A∩B| / min(|A|,|B|) catches a
+    # document embedded inside a larger one — the quote/boilerplate
+    # case symmetric Jaccard under-scores (union grows with the big
+    # doc). Shingle-grain equi-join (never doc×doc) with the measured
+    # df≤64 skew cap, via the shared shingle_pair_counts operator.
+    # Threshold and score in integer cross-multiply / basis points.
+    from ..operators.dedup import shingle_pair_counts
+
+    inter, sizes = shingle_pair_counts(t["documents"], max_df=64)
+    sa = sizes.select(
+        F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na")
+    )
+    sb = sizes.select(
+        F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb")
+    )
+    return (
+        inter.join(sa, "doc_a")
+        .join(sb, "doc_b")
+        .filter(
+            F.col("n_inter") * 10 >= F.least("na", "nb") * 8
+        )
+        .select(
+            "doc_a",
+            "doc_b",
+            "n_inter",
+            F.expr("n_inter * 10000 DIV least(na, nb)").alias(
+                "containment_bp"
+            ),
+        )
+        .orderBy("doc_a", "doc_b")
+    )
+
+
+@query(
+    "docs_dedup_savings_by_source",
+    f"""
+    WITH fp AS (
+        SELECT doc_id, source, n_chars,
+               {fingerprint_sql()} AS fingerprint
+        FROM documents
+    ),
+    keep AS (
+        SELECT source, n_chars, doc_id,
+               min(doc_id) OVER (PARTITION BY source, fingerprint)
+                   AS keeper
+        FROM fp
+    )
+    SELECT source,
+           count(*) AS n_docs,
+           CAST(sum((doc_id = keeper)::INT) AS BIGINT) AS n_kept,
+           CAST(sum(n_chars) AS BIGINT) AS chars_total,
+           CAST(sum(CASE WHEN doc_id = keeper THEN n_chars ELSE 0 END)
+                AS BIGINT) AS chars_kept,
+           CAST(((sum(n_chars)
+                  - sum(CASE WHEN doc_id = keeper THEN n_chars
+                             ELSE 0 END)) * 10000)
+                // sum(n_chars) AS BIGINT) AS savings_bp
+    FROM keep
+    GROUP BY 1
+    ORDER BY 1
+    """,
+)
+def _docs_dedup_savings_by_source(spark, t):
+    # dedup ROI accounting: per source, how many rows and bytes would
+    # WITHIN-SOURCE exact dedup remove — the governance report that
+    # justifies (or kills) a dedup stage before it runs on 100 TB.
+    # One shuffle on (source, fingerprint) for the keeper window
+    # (16-byte md5 keys, the exact-dedup partitioning), then a
+    # source-grain aggregate. Savings cross as basis points.
+    w = Window.partitionBy("source", "fingerprint")
+    keep = (
+        t["documents"]
+        .withColumn("fingerprint", fingerprint())
+        .withColumn("keeper", F.min("doc_id").over(w))
+    )
+    kept_chars = F.when(
+        F.col("doc_id") == F.col("keeper"), F.col("n_chars")
+    ).otherwise(0)
+    return (
+        keep.groupBy("source")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum(
+                (F.col("doc_id") == F.col("keeper")).cast("int")
+            ).alias("n_kept"),
+            F.sum("n_chars").alias("chars_total"),
+            F.sum(kept_chars).alias("chars_kept"),
+        )
+        .select(
+            "source",
+            "n_docs",
+            "n_kept",
+            "chars_total",
+            "chars_kept",
+            F.expr(
+                "((chars_total - chars_kept) * 10000) DIV chars_total"
+            ).alias("savings_bp"),
+        )
+        .orderBy("source")
+    )
+
+
+_JACCARD_THRESHOLDS_BP = [5000, 7000, 9000]
+
+
+@query(
+    "dedup_threshold_sweep",
+    f"""
+    WITH sh AS (
+        SELECT doc_id, unnest(shingles) AS shingle
+        FROM (SELECT doc_id, {_SHINGLES_SQL} AS shingles
+              FROM (SELECT doc_id, {_TOKS_SQL} AS toks FROM documents))
+    ),
+    rare AS (
+        SELECT shingle FROM sh GROUP BY 1 HAVING count(*) <= 64
+    ),
+    shf AS (SELECT sh.* FROM sh JOIN rare USING (shingle)),
+    sizes AS (SELECT doc_id, count(*) AS n_sh FROM shf GROUP BY 1),
+    inter AS (
+        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_inter
+        FROM shf a JOIN shf b
+          ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+        GROUP BY 1, 2
+    ),
+    pairs AS (
+        SELECT doc_a, doc_b,
+               (n_inter * 10000)
+                   // (sa.n_sh + sb.n_sh - n_inter) AS jaccard_bp
+        FROM inter
+        JOIN sizes sa ON sa.doc_id = doc_a
+        JOIN sizes sb ON sb.doc_id = doc_b
+    ),
+    th AS (SELECT unnest([{", ".join(map(str, _JACCARD_THRESHOLDS_BP))}])
+           AS threshold_bp)
+    SELECT t.threshold_bp,
+           CAST(sum(CASE WHEN p.jaccard_bp >= t.threshold_bp
+                         THEN 1 ELSE 0 END) AS BIGINT) AS n_pairs,
+           CAST(count(DISTINCT CASE WHEN p.jaccard_bp >= t.threshold_bp
+                                    THEN p.doc_b END) AS BIGINT)
+               AS n_docs_removed
+    FROM pairs p CROSS JOIN th t
+    GROUP BY 1
+    ORDER BY 1
+    """,
+)
+def _dedup_threshold_sweep(spark, t):
+    # dedup threshold sensitivity: how many near-dup pairs — and how
+    # many docs a keep-lowest-id policy would remove — at Jaccard
+    # ≥ 0.5 / 0.7 / 0.9. The decision report you run BEFORE burning a
+    # threshold into the 100-TB dedup job. Candidate pairs come from
+    # the shingle-grain equi-join with the measured df≤64 skew cap
+    # (the docs_shingle_containment shape — never doc×doc); the
+    # 3-row threshold dimension broadcasts over the pair table, so
+    # the sweep costs one pair-grain fan-out ×3, not three passes.
+    # Jaccard crosses as basis points (|A∩B| / |A∪B| by
+    # inclusion-exclusion on exact counts).
+    inter, sizes = shingle_pair_counts(t["documents"], max_df=64)
+    pairs = (
+        inter.join(
+            sizes.select(
+                F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na")
+            ),
+            "doc_a",
+        )
+        .join(
+            sizes.select(
+                F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb")
+            ),
+            "doc_b",
+        )
+        .select(
+            "doc_a",
+            "doc_b",
+            F.expr("(n_inter * 10000) DIV (na + nb - n_inter)").alias(
+                "jaccard_bp"
+            ),
+        )
+    )
+    th = spark.range(1).select(
+        F.explode(
+            F.array(*[F.lit(v) for v in _JACCARD_THRESHOLDS_BP])
+        ).alias("threshold_bp")
+    )
+    hit = F.col("jaccard_bp") >= F.col("threshold_bp")
+    return (
+        pairs.crossJoin(F.broadcast(th))
+        .groupBy("threshold_bp")
+        .agg(
+            F.sum(hit.cast("int")).alias("n_pairs"),
+            F.countDistinct(F.when(hit, F.col("doc_b"))).alias(
+                "n_docs_removed"
+            ),
+        )
+        .orderBy("threshold_bp")
+    )
+
+
+@query(
+    "orders_duplicate_invoice_pairs",
+    """
+    WITH o AS (
+        SELECT o_orderkey, o_custkey,
+               CAST(ROUND(o_totalprice * 100) AS BIGINT) AS cents,
+               CAST(o_orderdate AS DATE) AS d
+        FROM orders
+    )
+    SELECT a.o_custkey,
+           a.o_orderkey AS orderkey_a, b.o_orderkey AS orderkey_b,
+           a.cents AS cents_a, b.cents AS cents_b,
+           CAST(date_diff('day', a.d, b.d) AS INT) AS day_gap
+    FROM o a JOIN o b
+      ON a.o_custkey = b.o_custkey
+     AND a.o_orderkey < b.o_orderkey
+     AND abs(a.cents - b.cents) * 50 <= a.cents
+     AND abs(date_diff('day', a.d, b.d)) <= 30
+    ORDER BY a.o_custkey, orderkey_a, orderkey_b
+    """,
+)
+def _orders_duplicate_invoice_pairs(spark, t):
+    # double-billing screen — fuzzy ROW dedup on a fact table (the
+    # dedup family's corpus operators work on documents; this is the
+    # transactional sibling): two orders by the same customer with
+    # amounts within 2% of each other inside a 30-day window are
+    # duplicate-invoice suspects. Scale shape: a ≤30-day pair spans
+    # at most TWO month boundaries (Jan 31 + 30 days lands Mar 2
+    # across a 28-day February — month ±1 alone would MISS that
+    # pair), so the left side explodes to month ±2 and the join is
+    # EQUI on (custkey, month) — the classic banded time join
+    # (operators/rangejoin.py pattern) — with the %-band and
+    # day-window as residual filters. Fan-out is
+    # per-customer-per-~5-months, never the full customer history;
+    # the oracle states the same semantics as a plain non-equi
+    # self-join (the oracle needn't be scale-shaped, the plan must).
+    o = t["orders"].select(
+        "o_orderkey",
+        "o_custkey",
+        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        F.to_date("o_orderdate").alias("d"),
+    )
+    month = F.year("d") * 12 + F.month("d")
+    a = (
+        o.select(
+            F.col("o_custkey").alias("ck"),
+            F.col("cents").alias("cents_a"),
+            F.col("o_orderkey").alias("orderkey_a"),
+            F.col("d").alias("da"),
+            month.alias("ma"),
+        )
+        .select(
+            "*",
+            F.explode(
+                F.expr("array(ma - 2, ma - 1, ma, ma + 1, ma + 2)")
+            ).alias("mb"),
+        )
+    )
+    b = o.select(
+        F.col("o_custkey").alias("ck2"),
+        F.col("cents").alias("cents_b"),
+        F.col("o_orderkey").alias("orderkey_b"),
+        F.col("d").alias("db"),
+        month.alias("m2"),
+    )
+    return (
+        a.join(
+            b,
+            (F.col("ck") == F.col("ck2"))
+            & (F.col("mb") == F.col("m2"))
+            & (F.col("orderkey_a") < F.col("orderkey_b"))
+            & (
+                F.abs(F.col("cents_a") - F.col("cents_b")) * 50
+                <= F.col("cents_a")
+            )
+            & (F.abs(F.datediff("db", "da")) <= 30),
+        )
+        .select(
+            F.col("ck").alias("o_custkey"),
+            "orderkey_a",
+            "orderkey_b",
+            "cents_a",
+            "cents_b",
+            F.datediff("db", "da").cast("int").alias("day_gap"),
+        )
+        .orderBy("o_custkey", "orderkey_a", "orderkey_b")
     )

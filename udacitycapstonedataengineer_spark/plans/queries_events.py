@@ -1,5 +1,6 @@
 """Event-analytics queries (windowed aggregation, sessionization,
-top-k per group) — the batch twins of the streaming module, all
+top-k per group, engagement and attribution reports, transition
+graphs) — the batch twins of the streaming module, all
 oracle-checked. DuckDB ``time_bucket`` ↔ Spark ``window``."""
 
 from __future__ import annotations
@@ -11,7 +12,7 @@ from ..operators.asof import asof_join_backward
 from ..operators.rangejoin import range_join_bucketed
 from ..operators.ranking import with_global_rank
 from ..streaming.events import sessionize, tumbling_window_agg
-from .registry import query
+from .registry import ORACLE, query
 
 
 @query(
@@ -787,4 +788,1117 @@ def _orders_monthly_seasonality(spark, t):
             "yoy_delta", F.col("n_orders") - F.lag("n_orders", 12).over(w)
         )
         .orderBy("order_month")
+    )
+
+
+_CENTS = "CAST(ROUND(value * 100) AS BIGINT)"
+
+
+@query(
+    "events_first_touch_attribution",
+    f"""
+    WITH first_touch AS (
+        SELECT user_id, event_type AS first_type
+        FROM (SELECT user_id, event_type,
+                     row_number() OVER (PARTITION BY user_id
+                                        ORDER BY ts, event_id) AS rn
+              FROM events)
+        WHERE rn = 1
+    ),
+    conv AS (
+        SELECT user_id, count(*) AS n_purchases,
+               sum({_CENTS}) AS cents
+        FROM events WHERE event_type = 'purchase' GROUP BY 1
+    )
+    SELECT f.first_type,
+           count(*) AS n_users,
+           CAST(sum(c.n_purchases) AS BIGINT) AS n_purchases,
+           CAST(sum(c.cents) AS BIGINT) AS attributed_cents
+    FROM conv c JOIN first_touch f USING (user_id)
+    GROUP BY 1
+    ORDER BY 1
+    """,
+)
+def _events_first_touch_attribution(spark, t):
+    # first-touch attribution: every converting user's purchases are
+    # credited to their FIRST-ever event type. The first touch is a
+    # user-PARTITIONED row_number (bounded per key — not a global
+    # window); both sides aggregate to user grain before the join, so
+    # the join input is |users|, not |events|; revenue stays in exact
+    # cents.
+    ev = t["events"]
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    first_touch = (
+        ev.select("user_id", "event_type", "ts", "event_id")
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .select("user_id", F.col("event_type").alias("first_type"))
+    )
+    conv = (
+        ev.filter(F.col("event_type") == "purchase")
+        .groupBy("user_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_purchases"),
+            F.sum(F.expr(_CENTS)).alias("cents"),
+        )
+    )
+    return (
+        conv.join(first_touch, "user_id")
+        .groupBy("first_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_users"),
+            F.sum("n_purchases").alias("n_purchases"),
+            F.sum("cents").alias("attributed_cents"),
+        )
+        .orderBy("first_type")
+    )
+
+
+@query(
+    "events_hourly_heatmap",
+    f"""
+    SELECT dayofweek(ts) + 1 AS dow, hour(ts) AS hr,
+           count(*) AS n_events,
+           CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
+           CAST(sum(CASE WHEN event_type = 'purchase'
+                         THEN {_CENTS} ELSE 0 END) AS BIGINT)
+               AS purchase_cents
+    FROM events
+    GROUP BY 1, 2
+    ORDER BY 1, 2
+    """,
+)
+def _events_hourly_heatmap(spark, t):
+    # day-of-week × hour activity matrix (traffic heatmap): one
+    # aggregate at (dow, hr) grain — 168 output rows regardless of
+    # input size, fully map-side combinable except the exact distinct
+    # users (which shuffles (dow,hr,user); swap for HLL via
+    # operators/sketches.py when exactness isn't required). Spark
+    # dayofweek is 1=Sunday; DuckDB's 0=Sunday (+1 in the oracle).
+    return (
+        t["events"]
+        .groupBy(
+            F.dayofweek("ts").alias("dow"), F.hour("ts").alias("hr")
+        )
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.count_distinct("user_id").alias("n_users"),
+            F.sum(
+                F.when(
+                    F.col("event_type") == "purchase", F.expr(_CENTS)
+                ).otherwise(0)
+            ).alias("purchase_cents"),
+        )
+        .orderBy("dow", "hr")
+    )
+
+
+@query(
+    "events_dau_mau_stickiness",
+    """
+    WITH du AS (
+        SELECT DISTINCT CAST(ts AS DATE) AS day, user_id FROM events
+    ),
+    days AS (SELECT DISTINCT day FROM du)
+    SELECT CAST(d.day AS VARCHAR) AS day,
+           CAST(count(DISTINCT CASE WHEN du.day = d.day
+                                    THEN du.user_id END) AS BIGINT) AS dau,
+           CAST(count(DISTINCT du.user_id) AS BIGINT) AS mau_30d,
+           CAST(count(DISTINCT CASE WHEN du.day = d.day
+                                    THEN du.user_id END) * 10000
+                // count(DISTINCT du.user_id) AS BIGINT) AS stickiness_bp
+    FROM days d
+    JOIN du ON du.day BETWEEN d.day - 29 AND d.day
+    GROUP BY d.day
+    ORDER BY day
+    """,
+)
+def _events_dau_mau_stickiness(spark, t):
+    # DAU/MAU stickiness — the engagement ratio product teams track.
+    # Same scale shape as events_rolling_7d_active_users: collapse to
+    # distinct (day, user) FIRST (one shuffle; ~10⁻⁴ of event count at
+    # 100 TB), then EXPLODE each pair to its ≤30 trailing anchors and
+    # equi-join the anchor dimension — never a range predicate Spark
+    # would nested-loop. Fan-out is 30× of the day×user grain, not of
+    # the fact table. Stickiness crosses as basis points (truncating
+    # integer division over two exact distinct-counts).
+    # the day×user table feeds the anchor dimension AND the fan-out —
+    # persisted so the fact scan + distinct shuffle run once
+    du = (
+        t["events"]
+        .select(F.to_date("ts").alias("day"), "user_id")
+        .distinct()
+        .persist()
+    )
+    days = du.select(F.col("day").alias("anchor")).distinct()
+    fanout = du.select(
+        "user_id",
+        "day",
+        F.explode(
+            F.sequence(F.col("day"), F.date_add(F.col("day"), 29))
+        ).alias("anchor"),
+    )
+    return (
+        fanout.join(F.broadcast(days), "anchor", "left_semi")
+        .groupBy("anchor")
+        .agg(
+            F.countDistinct(
+                F.when(F.col("day") == F.col("anchor"), F.col("user_id"))
+            ).alias("dau"),
+            F.countDistinct("user_id").alias("mau_30d"),
+        )
+        .select(
+            F.date_format("anchor", "yyyy-MM-dd").alias("day"),
+            "dau",
+            "mau_30d",
+            F.expr("dau * 10000 DIV mau_30d").alias("stickiness_bp"),
+        )
+        .orderBy("day")
+    )
+
+
+@query(
+    "events_churn_buckets",
+    """
+    WITH last AS (
+        SELECT user_id, max(CAST(ts AS DATE)) AS last_day
+        FROM events GROUP BY 1
+    ),
+    mx AS (SELECT max(last_day) AS mxd FROM last)
+    SELECT CASE
+             WHEN date_diff('day', last_day, mxd) <= 7 THEN 'active_7d'
+             WHEN date_diff('day', last_day, mxd) <= 30 THEN 'recent_30d'
+             WHEN date_diff('day', last_day, mxd) <= 90 THEN 'lapsed_90d'
+             ELSE 'churned'
+           END AS bucket,
+           count(*) AS n_users
+    FROM last, mx
+    GROUP BY 1
+    ORDER BY 1
+    """,
+)
+def _events_churn_buckets(spark, t):
+    # recency-bucketed churn accounting: users binned by days since
+    # their last event, relative to the corpus high-water mark. One
+    # user-grain aggregate (map-side combinable max), a broadcast
+    # 1-row corpus max, then a 4-bucket count. Integer day arithmetic
+    # only — bucket edges cannot ulp-flip.
+    # user-grain recency table feeds the corpus max AND the bucketing
+    # — persisted so the fact scan+agg runs once
+    last = (
+        t["events"]
+        .groupBy("user_id")
+        .agg(F.max(F.to_date("ts")).alias("last_day"))
+        .persist()
+    )
+    mx = last.agg(F.max("last_day").alias("mxd"))
+    idle = F.datediff("mxd", "last_day")
+    bucket = (
+        F.when(idle <= 7, "active_7d")
+        .when(idle <= 30, "recent_30d")
+        .when(idle <= 90, "lapsed_90d")
+        .otherwise("churned")
+    )
+    return (
+        last.crossJoin(F.broadcast(mx))
+        .groupBy(bucket.alias("bucket"))
+        .agg(F.count(F.lit(1)).alias("n_users"))
+        .orderBy("bucket")
+    )
+
+
+@query(
+    "events_type_weekday_chisq",
+    """
+    WITH c AS (
+        SELECT event_type, CAST(isodow(ts) AS INT) AS dow,
+               count(*) AS obs
+        FROM events GROUP BY 1, 2
+    ),
+    rt AS (SELECT event_type, CAST(sum(obs) AS BIGINT) AS row_tot
+           FROM c GROUP BY 1),
+    ct AS (SELECT dow, CAST(sum(obs) AS BIGINT) AS col_tot
+           FROM c GROUP BY 1),
+    n AS (SELECT CAST(sum(obs) AS BIGINT) AS n_total FROM c)
+    SELECT c.event_type, c.dow, CAST(c.obs AS BIGINT) AS obs,
+           rt.row_tot, ct.col_tot, n.n_total,
+           (CAST(n.n_total AS DOUBLE) * CAST(c.obs AS DOUBLE)
+              - CAST(rt.row_tot AS DOUBLE) * CAST(ct.col_tot AS DOUBLE))
+             * (CAST(n.n_total AS DOUBLE) * CAST(c.obs AS DOUBLE)
+                  - CAST(rt.row_tot AS DOUBLE) * CAST(ct.col_tot AS DOUBLE))
+             / (CAST(n.n_total AS DOUBLE) * CAST(rt.row_tot AS DOUBLE)
+                  * CAST(ct.col_tot AS DOUBLE))
+               AS chisq_contrib
+    FROM c
+    JOIN rt USING (event_type)
+    JOIN ct USING (dow)
+    CROSS JOIN n
+    ORDER BY event_type, dow
+    """,
+)
+def _events_type_weekday_chisq(spark, t):
+    # chi-square association table for event_type × ISO weekday — the
+    # independence screen behind "does behavior vary by day?". Output
+    # is the CELL grain (|types|×7 rows): observed count, marginals,
+    # and the per-cell chi² contribution. The contribution is the one
+    # double in the group: each BIGINT factor is cast to double BEFORE
+    # any multiply (n_total·row_tot·col_tot grows ~n³ in
+    # event count, so an int64 product would silently wrap in Spark
+    # with ANSI off while DuckDB raises; IEEE products/differences in
+    # the same association order are still bit-identical across
+    # engines). The total, which WOULD depend on summation order, is
+    # deliberately left to the consumer. Marginals are dim-sized
+    # broadcasts; the one shuffle is the cell-grain count. The cell
+    # table feeds FOUR consumers
+    # (marginals, total, output) — persisted, since caching 35 rows to
+    # avoid three extra fact scans is the trade that always wins.
+    c = (
+        t["events"]
+        .select(
+            "event_type",
+            (F.weekday("ts") + F.lit(1)).alias("dow"),
+        )
+        .groupBy("event_type", "dow")
+        .agg(F.count(F.lit(1)).alias("obs"))
+        .persist()
+    )
+    rt = c.groupBy("event_type").agg(F.sum("obs").alias("row_tot"))
+    ct = c.groupBy("dow").agg(F.sum("obs").alias("col_tot"))
+    n = c.agg(F.sum("obs").alias("n_total"))
+    nt_d = F.col("n_total").cast("double")
+    num = nt_d * F.col("obs").cast("double") - F.col("row_tot").cast(
+        "double"
+    ) * F.col("col_tot").cast("double")
+    den = nt_d * F.col("row_tot").cast("double") * F.col("col_tot").cast(
+        "double"
+    )
+    return (
+        c.join(F.broadcast(rt), "event_type")
+        .join(F.broadcast(ct), "dow")
+        .crossJoin(F.broadcast(n))
+        .select(
+            "event_type",
+            "dow",
+            "obs",
+            "row_tot",
+            "col_tot",
+            "n_total",
+            (num * num / den).alias("chisq_contrib"),
+        )
+        .orderBy("event_type", "dow")
+    )
+
+
+@query(
+    "events_session_duration_stats",
+    """
+    WITH marked AS (
+        SELECT user_id, event_id, epoch_us(ts) AS ts_us,
+               CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
+                         OR epoch_us(ts) - lag(epoch_us(ts)) OVER w
+                            > 1800000000
+                    THEN 1 ELSE 0 END AS new_session
+        FROM events
+        WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
+    ),
+    numbered AS (
+        SELECT *, CAST(SUM(new_session) OVER (PARTITION BY user_id
+                                              ORDER BY ts_us, event_id
+                                              ROWS UNBOUNDED PRECEDING)
+                       AS BIGINT) AS session_seq
+        FROM marked
+    ),
+    sess AS (
+        SELECT user_id, session_seq, count(*) AS n_events,
+               max(ts_us) - min(ts_us) AS duration_us
+        FROM numbered GROUP BY 1, 2
+    )
+    SELECT count(*) AS n_sessions,
+           CAST(sum((n_events = 1)::INT) AS BIGINT) AS n_bounce_sessions,
+           CAST(sum(n_events) AS BIGINT) AS n_events_total,
+           CAST((sum(n_events) * 100) // count(*) AS BIGINT)
+               AS avg_events_e2,
+           quantile_cont(duration_us, 0.25) AS p25_duration_us,
+           quantile_cont(duration_us, 0.5) AS p50_duration_us,
+           quantile_cont(duration_us, 0.75) AS p75_duration_us,
+           CAST(max(duration_us) AS BIGINT) AS max_duration_us
+    FROM sess
+    """,
+)
+def _events_session_duration_stats(spark, t):
+    # session-length distribution — the analytic the sessionizer
+    # exists FOR: bounce share, events per session, and duration
+    # percentiles. Rides the sessionize operator (streaming/events.py,
+    # shared with the streaming twin): one user-keyed shuffle to
+    # session grain, then a 1-row map-side-combinable aggregate.
+    # Durations are integer micros; percentiles at dyadic p over
+    # integers are exact halves in double (no cross-engine drift);
+    # the mean crosses as a ×100 rational.
+    sess = sessionize(t["events"], gap_minutes=30)
+    return sess.agg(
+        F.count(F.lit(1)).alias("n_sessions"),
+        F.sum((F.col("n_events") == 1).cast("int")).alias(
+            "n_bounce_sessions"
+        ),
+        F.sum("n_events").alias("n_events_total"),
+        F.expr("(sum(n_events) * 100) DIV count(1)").alias("avg_events_e2"),
+        F.expr("percentile(duration_us, 0.25)").alias("p25_duration_us"),
+        F.expr("percentile(duration_us, 0.5)").alias("p50_duration_us"),
+        F.expr("percentile(duration_us, 0.75)").alias("p75_duration_us"),
+        F.max("duration_us").alias("max_duration_us"),
+    )
+
+
+_PR_SCALE = 1_000_000_000_000  # rank fixed-point: ×10¹²
+_PR_ITERS = 3
+
+
+def _pagerank_iter_sql(prev: str, out: str) -> str:
+    """One unrolled PageRank iteration as a DuckDB CTE body."""
+    return f"""
+    {out} AS (
+        SELECT n.node,
+               CAST(((15 * {_PR_SCALE}) // (100 * nn.n_nodes))
+                    + ((85 * COALESCE(c.contrib, 0)) // 100)
+                    AS BIGINT) AS r
+        FROM nodes n CROSS JOIN nn
+        LEFT JOIN (
+            SELECT p.dst AS node,
+                   sum(({prev}.r * p.p_e6) // 1000000) AS contrib
+            FROM pedges p JOIN {prev} ON {prev}.node = p.src
+            GROUP BY 1
+        ) c USING (node)
+    )"""
+
+
+@query(
+    "graph_pagerank_eventtypes",
+    f"""
+    WITH seq AS (
+        SELECT event_type AS dst,
+               lag(event_type) OVER (PARTITION BY user_id
+                                     ORDER BY ts, event_id) AS src
+        FROM events
+    ),
+    edges AS (
+        SELECT src, dst, count(*) AS w
+        FROM seq WHERE src IS NOT NULL GROUP BY 1, 2
+    ),
+    outs AS (SELECT src, sum(w) AS out_w FROM edges GROUP BY 1),
+    pedges AS (
+        SELECT e.src, e.dst,
+               CAST((e.w * 1000000) // o.out_w AS BIGINT) AS p_e6
+        FROM edges e JOIN outs o USING (src)
+    ),
+    nodes AS (SELECT DISTINCT event_type AS node FROM events),
+    nn AS (SELECT count(*) AS n_nodes FROM nodes),
+    r0 AS (
+        SELECT node, CAST({_PR_SCALE} // n_nodes AS BIGINT) AS r
+        FROM nodes, nn
+    ),{_pagerank_iter_sql("r0", "r1")},{_pagerank_iter_sql("r1", "r2")},{
+        _pagerank_iter_sql("r2", "r3")}
+    SELECT node, r AS rank_e12 FROM r3 ORDER BY node
+    """,
+)
+def _graph_pagerank_eventtypes(spark, t):
+    # PageRank over the event-type transition graph (which states
+    # dominate user flows) — the iterative-graph-algorithm shape
+    # beyond the connected-components closure. Bit-exact across
+    # engines with a FIXED iteration count because every update is
+    # integer fixed-point: ranks ×10¹², edge probabilities ×10⁶
+    # (precomputed once, so the per-edge term is rank·p DIV 10⁶ —
+    # bounded by 10¹⁸ regardless of edge weight, i.e. scale-
+    # independent of the fact table), truncating division, and
+    # order-free BIGINT sums. Dangling mass is not redistributed
+    # (documented contract both sides). Plan: edge extraction is one
+    # user-partitioned lag window over the fact; everything iterative
+    # runs at EDGE/NODE grain — the fact is scanned once, and each
+    # iteration is a node-grain broadcast join onto the (tiny
+    # relative to facts) edge table. The edge/node tables feed every
+    # iteration, so they are persisted.
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    seq = t["events"].select(
+        F.col("event_type").alias("dst"),
+        F.lag("event_type").over(w).alias("src"),
+    )
+    edges = (
+        seq.filter(F.col("src").isNotNull())
+        .groupBy("src", "dst")
+        .agg(F.count(F.lit(1)).alias("w"))
+    )
+    outs = edges.groupBy("src").agg(F.sum("w").alias("out_w"))
+    pedges = (
+        edges.join(outs, "src")
+        .select(
+            "src", "dst", F.expr("(w * 1000000) DIV out_w").alias("p_e6")
+        )
+        .persist()
+    )
+    nodes = (
+        t["events"].select(F.col("event_type").alias("node")).distinct()
+        .persist()
+    )
+    nn = nodes.agg(F.count(F.lit(1)).alias("n_nodes"))
+    r = nodes.crossJoin(F.broadcast(nn)).select(
+        "node", F.expr(f"{_PR_SCALE} DIV n_nodes").alias("r")
+    )
+    for _ in range(_PR_ITERS):
+        contrib = (
+            pedges.join(
+                F.broadcast(r.withColumnRenamed("node", "src")), "src"
+            )
+            .groupBy(F.col("dst").alias("node"))
+            .agg(F.sum(F.expr("(r * p_e6) DIV 1000000")).alias("contrib"))
+        )
+        r = (
+            nodes.crossJoin(F.broadcast(nn))
+            .join(F.broadcast(contrib), "node", "left")
+            .select(
+                "node",
+                F.expr(
+                    f"((15 * {_PR_SCALE}) DIV (100 * n_nodes))"
+                    " + ((85 * COALESCE(contrib, 0)) DIV 100)"
+                ).alias("r"),
+            )
+        )
+    return r.select("node", F.col("r").alias("rank_e12")).orderBy("node")
+
+
+@query(
+    "events_activity_bitmap",
+    """
+    SELECT user_id,
+           CAST(bit_or(CAST(1 AS BIGINT) << (day(ts) - 1)) AS BIGINT)
+               AS activity_bitmap,
+           CAST(bit_count(bit_or(CAST(1 AS BIGINT) << (day(ts) - 1)))
+                AS INT) AS active_days,
+           CAST(min(day(ts)) AS INT) AS first_day,
+           CAST(max(day(ts)) AS INT) AS last_day
+    FROM events
+    GROUP BY 1
+    ORDER BY 1
+    """,
+)
+def _events_activity_bitmap(spark, t):
+    # per-user month-activity BITMAP: day-of-month n sets bit n−1, so
+    # one BIGINT carries the whole activity calendar and
+    # active_days = popcount(bitmap). This is the scale replacement
+    # for count(DISTINCT day): O(1) state per user instead of a
+    # distinct set, fully map-side combinable (OR is associative/
+    # commutative), and downstream set algebra (retention = popcount
+    # of bitmap_a AND bitmap_b) becomes integer ops — the roaring-
+    # bitmap technique, single-word edition. Testdata events all fall
+    # in one month; a multi-month corpus keys the groupBy by (user,
+    # month) with the same per-group word.
+    # shiftleft's Python wrapper takes a literal shift count only —
+    # the column-valued shift has to go through the SQL expression
+    bit = F.expr("shiftleft(cast(1 as bigint), dayofmonth(ts) - 1)")
+    return (
+        t["events"]
+        .groupBy("user_id")
+        .agg(
+            F.bit_or(bit).alias("activity_bitmap"),
+            F.bit_count(F.bit_or(bit)).cast("int").alias("active_days"),
+            F.min(F.dayofmonth("ts")).alias("first_day"),
+            F.max(F.dayofmonth("ts")).alias("last_day"),
+        )
+        .orderBy("user_id")
+    )
+
+
+@query(
+    "events_new_vs_returning_daily",
+    """
+    WITH firsts AS (
+        SELECT user_id, min(CAST(ts AS DATE)) AS first_day
+        FROM events GROUP BY 1
+    ),
+    du AS (
+        SELECT DISTINCT CAST(ts AS DATE) AS day, user_id FROM events
+    )
+    SELECT CAST(du.day AS VARCHAR) AS day,
+           CAST(sum(CASE WHEN f.first_day = du.day THEN 1 ELSE 0 END)
+                AS BIGINT) AS n_new,
+           CAST(sum(CASE WHEN f.first_day <> du.day THEN 1 ELSE 0 END)
+                AS BIGINT) AS n_returning
+    FROM du JOIN firsts f USING (user_id)
+    GROUP BY 1
+    ORDER BY 1
+    """,
+)
+def _events_new_vs_returning_daily(spark, t):
+    # daily growth accounting: users active each day split into
+    # first-ever-seen vs returning. Two user-keyed aggregates off one
+    # persisted day×user table (the DAU/MAU grain — ~10⁻⁴ of the fact
+    # at 100 TB), joined at user grain; day output as ISO strings per
+    # the repo's date discipline.
+    du = (
+        t["events"]
+        .select(F.to_date("ts").alias("day"), "user_id")
+        .distinct()
+        .persist()
+    )
+    firsts = du.groupBy("user_id").agg(F.min("day").alias("first_day"))
+    return (
+        du.join(firsts, "user_id")
+        .groupBy("day")
+        .agg(
+            F.sum(
+                (F.col("first_day") == F.col("day")).cast("int")
+            ).alias("n_new"),
+            F.sum(
+                (F.col("first_day") != F.col("day")).cast("int")
+            ).alias("n_returning"),
+        )
+        .select(
+            F.date_format("day", "yyyy-MM-dd").alias("day"),
+            "n_new",
+            "n_returning",
+        )
+        .orderBy("day")
+    )
+
+
+@query(
+    "events_linear_attribution",
+    """
+    WITH ev AS (
+        SELECT event_id, user_id, ts, event_type,
+               CAST(ROUND(value * 100) AS BIGINT) AS vc
+        FROM events
+    ),
+    purch AS (
+        SELECT event_id AS pid, user_id, ts AS pts, vc
+        FROM ev WHERE event_type = 'purchase'
+    ),
+    touch AS (
+        SELECT p.pid, p.vc, e.event_type
+        FROM purch p
+        JOIN ev e ON e.user_id = p.user_id
+                 AND e.ts < p.pts
+                 AND e.ts >= p.pts - INTERVAL 7 DAY
+    ),
+    cnt AS (SELECT pid, count(*) AS n_t FROM touch GROUP BY 1),
+    split AS (
+        SELECT t.event_type, t.vc // c.n_t AS share
+        FROM touch t JOIN cnt c USING (pid)
+    ),
+    direct AS (
+        SELECT 'direct' AS event_type, p.vc AS share
+        FROM purch p LEFT JOIN cnt c ON c.pid = p.pid
+        WHERE c.pid IS NULL
+    ),
+    unioned AS (
+        SELECT * FROM split UNION ALL SELECT * FROM direct
+    )
+    SELECT event_type, count(*) AS n_attributions,
+           CAST(sum(share) AS BIGINT) AS attributed_cents
+    FROM unioned
+    GROUP BY 1
+    ORDER BY 1
+    """,
+)
+def _events_linear_attribution(spark, t):
+    # linear multi-touch attribution: each purchase's value is split
+    # equally (integer floor division — remainders documented as
+    # dropped, identically in both engines) across the user's touches
+    # in the trailing 7 days; purchases with no prior touch attribute
+    # whole to 'direct'. Plan: the touch fan-out is a USER-equi-join
+    # with a time-range filter — per-user weekly event counts are
+    # bounded, so fan-out is O(purchases · touches/week), never
+    # user×user; the per-purchase touch table persists (it feeds the
+    # count AND the split); everything else is exact-integer
+    # aggregation at the event_type grain.
+    ev = t["events"].select(
+        "event_id",
+        "user_id",
+        "ts",
+        "event_type",
+        F.round(F.col("value") * 100).cast("long").alias("vc"),
+    )
+    purch = (
+        ev.filter(F.col("event_type") == "purchase")
+        .select(
+            F.col("event_id").alias("pid"),
+            F.col("user_id").alias("p_user"),
+            F.col("ts").alias("pts"),
+            "vc",
+        )
+    )
+    touch = (
+        purch.join(
+            ev.select("user_id", "ts", F.col("event_type").alias("t_type")),
+            (F.col("user_id") == F.col("p_user"))
+            & (F.col("ts") < F.col("pts"))
+            & (F.col("ts") >= F.col("pts") - F.expr("INTERVAL 7 DAY")),
+        )
+        .select("pid", "vc", F.col("t_type").alias("event_type"))
+        .persist()
+    )
+    cnt = touch.groupBy("pid").agg(F.count(F.lit(1)).alias("n_t"))
+    split = touch.join(cnt, "pid").select(
+        "event_type", F.expr("vc DIV n_t").alias("share")
+    )
+    direct = (
+        purch.join(cnt, purch.pid == cnt.pid, "left_anti")
+        .select(F.lit("direct").alias("event_type"), F.col("vc").alias("share"))
+    )
+    return (
+        split.unionByName(direct)
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_attributions"),
+            F.sum("share").alias("attributed_cents"),
+        )
+        .orderBy("event_type")
+    )
+
+
+@query(
+    "events_heavy_hitters",
+    """
+    WITH ev AS (
+        SELECT CAST(CAST(json_extract(props, '$.k') AS BIGINT) AS VARCHAR)
+                   AS item
+        FROM events
+        WHERE json_extract(props, '$.k') IS NOT NULL
+    ),
+    tot AS (SELECT count(*) AS n_total FROM ev),
+    c AS (SELECT item, count(*) AS n FROM ev GROUP BY 1)
+    SELECT c.item, c.n, t.n_total
+    FROM c CROSS JOIN tot t
+    WHERE c.n * 10000 >= 105 * t.n_total
+    ORDER BY item
+    """,
+)
+def _events_heavy_hitters(spark, t):
+    # frequent-items over an open-ended key (the JSON prop value):
+    # two-pass Misra-Gries — per-partition bounded summaries (no
+    # shuffle, ≤capacity rows each) give a guaranteed candidate
+    # superset of every item at ≥1.05% share; pass 2 exact-counts the
+    # candidates only, so the item-grain shuffle never materializes
+    # the full key space. Output is EXACT (the sketch only prunes
+    # work), hence the plain HAVING-style oracle. At 100 TB this is
+    # the shape for URL/user-agent/n-gram hot-key discovery where
+    # groupBy-the-world is the bottleneck.
+    from ..operators.heavyhitters import heavy_hitters_exact
+
+    return heavy_hitters_exact(
+        t["events"],
+        F.get_json_object("props", "$.k").cast("long").cast("string"),
+        share_bp=105,
+    ).orderBy("item")
+
+
+# the day-grain rewrite shares events_linear_attribution's oracle —
+# two formulations, one truth
+_ATTRIBUTION_ORACLE = ORACLE["events_linear_attribution"]
+
+
+@query("events_linear_attribution_daygrain", _ATTRIBUTION_ORACLE)
+def _events_linear_attribution_daygrain(spark, t):
+    # the BOUNDED-fan-out rewrite of events_linear_attribution (same
+    # oracle — results are identical by construction). The naive shape
+    # joins every purchase to every touch event in its trailing 7
+    # days: fan-out O(purchases · per-user weekly density), quadratic
+    # in density (the ×10 probe artifact). This rewrite splits the
+    # window per the rolling-7d trick:
+    #   interior days (fully inside the window) come from a DAY-GRAIN
+    #   (user, day, type) count table — ≤6 anchor rows per purchase
+    #   regardless of density;
+    #   the two BOUNDARY days (window start, purchase day) join at
+    #   event grain with the exact ts predicates.
+    # Per-purchase math then runs at (purchase, type) grain: every
+    # touch of a purchase gets the same floor share, so
+    # cnt_type·(vc DIV n_t) is exactly the row-grain sum.
+    ev = t["events"].select(
+        "event_id",
+        "user_id",
+        "ts",
+        F.to_date("ts").alias("day"),
+        "event_type",
+        F.round(F.col("value") * 100).cast("long").alias("vc"),
+    )
+    purch = (
+        ev.filter(F.col("event_type") == "purchase")
+        .select(
+            F.col("event_id").alias("pid"),
+            F.col("user_id").alias("p_user"),
+            F.col("ts").alias("pts"),
+            (F.col("ts") - F.expr("INTERVAL 7 DAY")).alias("wstart"),
+            F.col("day").alias("p_day"),
+            F.to_date(F.col("ts") - F.expr("INTERVAL 7 DAY")).alias("w_day"),
+            "vc",
+        )
+        .persist()
+    )
+    # day-grain type counts — the table a real deployment maintains
+    # incrementally
+    du = (
+        ev.groupBy("user_id", "day", "event_type")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .persist()
+    )
+    # interior anchors: days strictly between w_day and p_day
+    # (≤6 rows/purchase, independent of event density)
+    interior = (
+        purch.filter(F.expr("datediff(p_day, w_day) >= 2"))
+        .select(
+            "pid",
+            "p_user",
+            # sequence() reverses when stop < start, hence the ≥2
+            # guard above
+            F.explode(
+                F.expr(
+                    "transform(sequence(1, datediff(p_day, w_day) - 1), "
+                    "i -> date_add(w_day, i))"
+                )
+            ).alias("a_day"),
+        )
+        .join(
+            du,
+            (F.col("user_id") == F.col("p_user"))
+            & (F.col("day") == F.col("a_day")),
+        )
+        .select("pid", "event_type", "cnt")
+    )
+    # boundary days at event grain: window-start day (ts >= wstart)
+    # and purchase day (ts < pts) — for SUB-7-day spans where
+    # w_day == p_day, only the double-bounded purchase-day branch may
+    # apply, and the start-day branch must not double-count
+    bnd_start = (
+        purch.filter(F.col("w_day") != F.col("p_day"))
+        .join(
+            ev.select("user_id", "ts", "day", "event_type"),
+            (F.col("user_id") == F.col("p_user"))
+            & (F.col("day") == F.col("w_day"))
+            & (F.col("ts") >= F.col("wstart"))
+            & (F.col("ts") < F.col("pts")),
+        )
+        .select("pid", "event_type", F.lit(1).alias("cnt"))
+    )
+    bnd_end = purch.join(
+        ev.select("user_id", "ts", "day", "event_type"),
+        (F.col("user_id") == F.col("p_user"))
+        & (F.col("day") == F.col("p_day"))
+        & (F.col("ts") >= F.col("wstart"))
+        & (F.col("ts") < F.col("pts")),
+    ).select("pid", "event_type", F.lit(1).alias("cnt"))
+    touch_t = (
+        interior.unionByName(bnd_start)
+        .unionByName(bnd_end)
+        .groupBy("pid", "event_type")
+        .agg(F.sum("cnt").alias("cnt_type"))
+        .persist()
+    )
+    n_t = touch_t.groupBy("pid").agg(F.sum("cnt_type").alias("n_t"))
+    split = (
+        touch_t.join(n_t, "pid")
+        .join(purch.select("pid", "vc"), "pid")
+        .select(
+            "event_type",
+            "cnt_type",
+            (F.col("cnt_type") * F.expr("vc DIV n_t")).alias("cents"),
+        )
+    )
+    direct = (
+        purch.join(n_t, purch.pid == n_t.pid, "left_anti")
+        .select(
+            F.lit("direct").alias("event_type"),
+            F.lit(1).alias("cnt_type"),
+            F.col("vc").alias("cents"),
+        )
+    )
+    return (
+        split.unionByName(direct)
+        .groupBy("event_type")
+        .agg(
+            F.sum("cnt_type").alias("n_attributions"),
+            F.sum("cents").alias("attributed_cents"),
+        )
+        .orderBy("event_type")
+    )
+
+
+@query(
+    "events_bot_regularity_audit",
+    """
+    WITH g AS (
+        SELECT user_id,
+               epoch_us(ts) - lag(epoch_us(ts))
+                   OVER (PARTITION BY user_id ORDER BY ts, event_id)
+                   AS gap_us
+        FROM events
+    ),
+    m AS (
+        SELECT user_id, count(*) AS n_gaps,
+               CAST(sum(gap_us) AS BIGINT) AS span_us,
+               CAST(min(gap_us) AS BIGINT) AS min_gap_us,
+               CAST(max(gap_us) AS BIGINT) AS max_gap_us
+        FROM g WHERE gap_us IS NOT NULL
+        GROUP BY 1
+    )
+    SELECT user_id, n_gaps, span_us, min_gap_us, max_gap_us,
+           span_us // n_gaps AS mean_gap_us,
+           ((max_gap_us - min_gap_us) * 10 * n_gaps <= span_us)
+               AS metronome_flag,
+           (n_gaps * 3600000000 >= span_us * 100) AS high_rate_flag
+    FROM m
+    ORDER BY user_id
+    """,
+)
+def _events_bot_regularity_audit(spark, t):
+    # bot/abuse screen — the traffic-hygiene pass a training-data
+    # pipeline runs before events feed anything downstream. Per user:
+    # inter-event gap moments in exact integer micros plus two flags,
+    # both as pure integer comparisons (no float thresholds to drift):
+    #   metronome_flag — gap range ≤ 10% of the mean gap
+    #     ((max−min)·10·n ≤ Σgap): inhuman regularity;
+    #   high_rate_flag — ≥100 events/hour sustained over the span
+    #     (n·3600e6 ≥ span·100).
+    # Plan: one user-partitioned lag window (value-partitioned,
+    # spill-backed), one user-grain aggregate with map-side combine.
+    g = (
+        t["events"]
+        .select(
+            "user_id",
+            "event_id",
+            F.unix_micros("ts").alias("us"),
+        )
+        .withColumn(
+            "gap_us",
+            F.col("us")
+            - F.lag("us").over(
+                Window.partitionBy("user_id").orderBy("us", "event_id")
+            ),
+        )
+        .filter(F.col("gap_us").isNotNull())
+    )
+    m = g.groupBy("user_id").agg(
+        F.count(F.lit(1)).alias("n_gaps"),
+        F.sum("gap_us").alias("span_us"),
+        F.min("gap_us").alias("min_gap_us"),
+        F.max("gap_us").alias("max_gap_us"),
+    )
+    return m.select(
+        "user_id",
+        "n_gaps",
+        "span_us",
+        "min_gap_us",
+        "max_gap_us",
+        F.expr("span_us DIV n_gaps").alias("mean_gap_us"),
+        (
+            (F.col("max_gap_us") - F.col("min_gap_us"))
+            * 10
+            * F.col("n_gaps")
+            <= F.col("span_us")
+        ).alias("metronome_flag"),
+        (
+            F.col("n_gaps") * F.lit(3_600_000_000)
+            >= F.col("span_us") * 100
+        ).alias("high_rate_flag"),
+    ).orderBy("user_id")
+
+
+@query(
+    "events_daily_anomaly_seasonal",
+    """
+    WITH daily AS (
+        SELECT CAST(ts AS DATE) AS d,
+               CAST(isodow(ts) AS INT) AS dow,
+               count(*) AS n
+        FROM events GROUP BY 1, 2
+    ),
+    prof AS (
+        SELECT dow, CAST(sum(n) AS BIGINT) AS sum_n,
+               count(*) AS n_days
+        FROM daily GROUP BY 1
+    ),
+    res AS (
+        SELECT d.d, d.n,
+               (p.sum_n * 100) // p.n_days AS expected_e2,
+               d.n * 100 - (p.sum_n * 100) // p.n_days AS residual_e2
+        FROM daily d JOIN prof p USING (dow)
+    ),
+    r2 AS (
+        SELECT d, n, expected_e2, residual_e2,
+               row_number() OVER (ORDER BY abs(residual_e2), d) AS rn,
+               count(*) OVER () AS n_total
+        FROM res
+    ),
+    mad AS (
+        SELECT max(CASE WHEN rn = (n_total + 1) // 2
+                        THEN abs(residual_e2) END) AS mad_e2
+        FROM r2
+    )
+    SELECT CAST(r.d AS VARCHAR) AS d, r.n, r.expected_e2,
+           r.residual_e2, m.mad_e2,
+           (abs(r.residual_e2) > 5 * m.mad_e2) AS is_anomaly
+    FROM res r CROSS JOIN mad m
+    ORDER BY 1
+    """,
+)
+def _events_daily_anomaly_seasonal(spark, t):
+    # seasonality-adjusted anomaly screen: each day's event count vs
+    # its WEEKDAY's mean (the dow profile removes the weekly rhythm
+    # that fools a flat z-score), residuals scored against their MAD
+    # (median absolute residual — robust, so one outage day doesn't
+    # inflate the yardstick that should flag it). Exact integers
+    # end-to-end: expectations in centi-events via truncating
+    # division, the MAD rank-extracted as an actual |residual|, the
+    # flag a pure integer comparison. Plan: fact → day grain (tiny),
+    # 7-row dow profile, one bounded rank window over days, 1-row MAD
+    # broadcast. The global window rides the DAY-grain table —
+    # calendar-bounded by construction.
+    daily = (
+        t["events"]
+        .groupBy(
+            F.to_date("ts").alias("d"),
+            (F.weekday("ts") + F.lit(1)).alias("dow"),
+        )
+        .agg(F.count(F.lit(1)).alias("n"))
+        .persist()
+    )
+    prof = daily.groupBy("dow").agg(
+        F.sum("n").alias("sum_n"), F.count(F.lit(1)).alias("n_days")
+    )
+    res = (
+        daily.join(F.broadcast(prof), "dow")
+        .select(
+            "d",
+            "n",
+            F.expr("(sum_n * 100) DIV n_days").alias("expected_e2"),
+            F.expr("n * 100 - (sum_n * 100) DIV n_days").alias(
+                "residual_e2"
+            ),
+        )
+        .persist()
+    )
+    w = Window.orderBy(F.abs(F.col("residual_e2")), "d")
+    r2 = res.select(
+        F.abs(F.col("residual_e2")).alias("abs_r"),
+        F.row_number().over(w).alias("rn"),
+        F.count(F.lit(1)).over(Window.partitionBy()).alias("n_total"),
+    )
+    mad = r2.agg(
+        F.max(
+            F.when(F.col("rn") == F.expr("(n_total + 1) DIV 2"),
+                   F.col("abs_r"))
+        ).alias("mad_e2")
+    )
+    return (
+        res.crossJoin(F.broadcast(mad))
+        .select(
+            F.date_format("d", "yyyy-MM-dd").alias("d"),
+            "n",
+            "expected_e2",
+            "residual_e2",
+            "mad_e2",
+            (F.abs(F.col("residual_e2")) > 5 * F.col("mad_e2")).alias(
+                "is_anomaly"
+            ),
+        )
+        .orderBy("d")
+    )
+
+
+@query(
+    "events_error_burst_windows",
+    """
+    WITH w AS (
+        SELECT epoch_us(ts) // 600000000 AS win, count(*) AS n_err
+        FROM events WHERE event_type = 'error'
+        GROUP BY 1
+    ),
+    r AS (
+        SELECT win, n_err,
+               row_number() OVER (ORDER BY n_err, win) AS rn,
+               count(*) OVER () AS nt
+        FROM w
+    ),
+    med AS (
+        SELECT max(CASE WHEN rn = (nt + 1) // 2 THEN n_err END)
+                   AS median_err
+        FROM r
+    )
+    SELECT w.win, w.n_err, m.median_err,
+           (w.n_err >= 3 * m.median_err) AS is_burst
+    FROM w CROSS JOIN med m
+    ORDER BY w.win
+    """,
+)
+def _events_error_burst_windows(spark, t):
+    # incident detection: error counts per 10-minute window flagged
+    # when ≥3× the median window ("is this error rate an incident or
+    # baseline noise?"). Median rather than mean so sustained outages
+    # don't drag the yardstick up after the fact; rank-extracted as
+    # an actual count, threshold a pure integer comparison. Plan: the
+    # pushed error filter reaches the scan, one window-grain
+    # aggregate; the global rank rides only the calendar-bounded
+    # window table (allowlisted); 1-row median broadcast.
+    w = (
+        t["events"]
+        .filter(F.col("event_type") == "error")
+        .groupBy(
+            F.expr("unix_micros(ts) DIV 600000000").alias("win")
+        )
+        .agg(F.count(F.lit(1)).alias("n_err"))
+        .persist()
+    )
+    rank_w = Window.orderBy("n_err", "win")
+    r = w.select(
+        "n_err",
+        F.row_number().over(rank_w).alias("rn"),
+        F.count(F.lit(1)).over(Window.partitionBy()).alias("nt"),
+    )
+    med = r.agg(
+        F.max(
+            F.when(F.col("rn") == F.expr("(nt + 1) DIV 2"), F.col("n_err"))
+        ).alias("median_err")
+    )
+    return (
+        w.crossJoin(F.broadcast(med))
+        .select(
+            "win",
+            "n_err",
+            "median_err",
+            (F.col("n_err") >= 3 * F.col("median_err")).alias("is_burst"),
+        )
+        .orderBy("win")
+    )
+
+
+@query(
+    "events_markov_transition",
+    """
+    WITH seq AS (
+        SELECT user_id, event_type,
+               lag(event_type) OVER (
+                   PARTITION BY user_id ORDER BY ts, event_id
+               ) AS prev_type
+        FROM events
+    )
+    SELECT prev_type, event_type AS next_type,
+           COUNT(*) AS n_transitions
+    FROM seq WHERE prev_type IS NOT NULL
+    GROUP BY 1, 2 ORDER BY 1, 2
+    """,
+)
+def _events_markov_transition(spark, t):
+    # event-type transition matrix from each user's time-ordered
+    # stream — the sufficient statistic for next-action Markov models
+    # and bot-loop detection. One user-partitioned lag window (ordered
+    # by (ts, event_id) for tie determinism; partitioned, so no
+    # global-window hazard) + one (prev, next)-grain aggregate.
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    seq = t["events"].select(
+        "user_id",
+        "event_type",
+        F.lag("event_type").over(w).alias("prev_type"),
+    )
+    return (
+        seq.filter(F.col("prev_type").isNotNull())
+        .groupBy("prev_type", F.col("event_type").alias("next_type"))
+        .agg(F.count(F.lit(1)).alias("n_transitions"))
+        .orderBy("prev_type", "next_type")
     )

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from ..operators.multimodal import (
     FRAME_BYTES,
     extract_features,
+    png_roundtrip,
     sample_frames,
     synthesize_media,
 )
@@ -105,3 +106,41 @@ def _multimodal_audio_windows(spark, t):
     from ..operators.multimodal import window_signal
 
     return window_signal(synthesize_media(t["documents"]))
+
+
+@query(
+    "multimodal_png_roundtrip",
+    """
+    SELECT CAST(doc_id % 5 AS INT) AS filter_type,
+           COUNT(*) AS n_images,
+           COUNT(*) AS n_roundtrip_ok,
+           CAST(SUM((32 + (doc_id % 8) * 16)
+                    * (32 + (doc_id % 4) * 16) * 3) AS BIGINT)
+               AS pixel_bytes_total
+    FROM documents
+    WHERE doc_id % 3 = 0
+    GROUP BY 1
+    ORDER BY 1
+    """,
+)
+def _multimodal_png_roundtrip(spark, t):
+    # REAL codec work in the decode slot: every image
+    # payload is tiled onto its (h, w, 3) metadata grid, PNG-encoded
+    # with a per-doc scanline filter (doc_id % 5 cycles all five
+    # predictors), decoded back by the stdlib-zlib decoder, and
+    # byte-compared. The oracle predicts n_images and pixel bytes from
+    # the synthesis formulas and — the actual codec check — expects
+    # n_roundtrip_ok == n_images: any filter/inflate/CRC bug in
+    # operators/png.py flips roundtrip_ok rows false and hash-fails
+    # this query. Per-pixel equality is additionally pinned byte-exact
+    # (incl. hand-built container fixtures) in tests/test_png.py.
+    rt = png_roundtrip(synthesize_media(t["documents"]))
+    return (
+        rt.groupBy("filter_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_images"),
+            F.sum(F.col("roundtrip_ok").cast("long")).alias("n_roundtrip_ok"),
+            F.sum("n_pixel_bytes").alias("pixel_bytes_total"),
+        )
+        .orderBy("filter_type")
+    )

@@ -1,5 +1,7 @@
 """OLAP surface beyond the reference's grammar: rollup subtotals, set
-operations, and running-window aggregates — all oracle-checked.
+operations, running-window aggregates, sketches, SCD2 reads, and the
+order/customer business reports (cohort LTV and survival, revenue
+shares, concentration, backlog) — all oracle-checked.
 
 Engine-parity notes:
 - rollup subtotal rows carry NULL grouping keys in both engines;
@@ -15,7 +17,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..operators.dedup import H60_SQL
-from .registry import query
+from .registry import ORACLE, query
 
 
 @query(
@@ -160,7 +162,7 @@ def _olap_cube_counts(spark, t):
 def _approx_percentile_price(spark, t):
     # sketch-based percentile (GK, constant memory, mergeable — the
     # 100 TB path), emitted in SELF-VERIFYING interval-assertion form
-    # (VERDICT r3 #1): Spark's sketch value can't hash-match any other
+    #: Spark's sketch value can't hash-match any other
     # engine's, so the query asserts its own accuracy contract — the
     # estimate's RANK among the group's prices must sit within eps of
     # the 0.5 target — and emits that as a boolean next to the exact
@@ -770,7 +772,7 @@ def _sample_stratified_by_status(spark, t):
     # Bernoulli per row — the rebalancing step when one source/class
     # dominates a training corpus). The sampled SET is seed- and
     # engine-specific by construction, so the query emits the
-    # self-verifying form (VERDICT r3 #1): the exact stratum totals
+    # self-verifying form: the exact stratum totals
     # are the hash-compared values and the realized sampling rate is
     # asserted within 0.05 of the requested fraction per stratum
     # (frac=1.0 must be exact). For reproducible HOLDOUT splits use
@@ -856,7 +858,7 @@ def _rollup_incremental_merge(spark, t):
 def _sketch_distinct_users_daily(spark, t):
     # mergeable DataSketches HLL distinct-user rollup (the incremental
     # 100 TB path: one sketch per day, rollups merge sketches, never
-    # rescan), self-verified (VERDICT r3 #1): exact per-day distincts
+    # rescan), self-verified: exact per-day distincts
     # are the hash-compared values; the lg_k=12 estimate (~1.6% rse)
     # is asserted within max(5, 5%) of exact. Merge-equality pinned in
     # tests/test_sketches.py.
@@ -1228,3 +1230,1144 @@ def _basket_part_pairs(spark, t):
         .select("part_a", "part_b", "n_orders", "rank")
         .orderBy("rank")
     )
+
+
+@query(
+    "customer_rfm_segments",
+    """
+    WITH m AS (
+        SELECT o_custkey,
+               date_diff('day', max(o_orderdate),
+                         (SELECT max(o_orderdate) FROM orders)) AS r_days,
+               count(*) AS f_orders,
+               sum(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS m_cents
+        FROM orders GROUP BY 1
+    ),
+    q AS (
+        SELECT quantile_cont(r_days, 0.25) AS r1, quantile_cont(r_days, 0.5) AS r2,
+               quantile_cont(r_days, 0.75) AS r3,
+               quantile_cont(f_orders, 0.25) AS f1, quantile_cont(f_orders, 0.5) AS f2,
+               quantile_cont(f_orders, 0.75) AS f3,
+               quantile_cont(m_cents, 0.25) AS m1, quantile_cont(m_cents, 0.5) AS m2,
+               quantile_cont(m_cents, 0.75) AS m3
+        FROM m
+    )
+    SELECT r_score, f_score, m_score,
+           count(*) AS n_customers,
+           CAST(sum(m_cents) AS BIGINT) AS segment_cents
+    FROM (
+        SELECT
+            -- recency: LOWER days-since-last-order is better → invert
+            4 - ((r_days > r1)::INT + (r_days > r2)::INT + (r_days > r3)::INT)
+                AS r_score,
+            1 + (f_orders > f1)::INT + (f_orders > f2)::INT + (f_orders > f3)::INT
+                AS f_score,
+            1 + (m_cents > m1)::INT + (m_cents > m2)::INT + (m_cents > m3)::INT
+                AS m_score,
+            m_cents
+        FROM m, q
+    )
+    GROUP BY 1, 2, 3
+    ORDER BY 1, 2, 3
+    """,
+)
+def _customer_rfm_segments(spark, t):
+    # RFM segmentation with BROADCAST quartile thresholds — never an
+    # ntile() global window (the single-task trap the ranking family
+    # avoids). Metrics are integers (days, counts, cents), so the
+    # interpolated quartiles are exact halves in double and the
+    # bucket comparisons cannot ulp-flip between engines. The exact
+    # percentile over the customer-grain metric table is the one
+    # driver-sized step (|customers| longs); at extreme cardinality
+    # swap it for the KLL sketch (operators/sketches.py) — the
+    # downstream bucketing is unchanged.
+    o = t["orders"]
+    max_od = o.agg(F.max("o_orderdate").alias("mx"))
+    # customer-grain metric table feeds the quartile agg AND the
+    # scoring join — persisted so the fact scan+agg runs once
+    m = (
+        o.crossJoin(F.broadcast(max_od))
+        .groupBy("o_custkey")
+        .agg(
+            F.datediff(F.first("mx"), F.max("o_orderdate")).alias("r_days"),
+            F.count(F.lit(1)).alias("f_orders"),
+            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
+                "m_cents"
+            ),
+        )
+        .persist()
+    )
+    q = m.agg(
+        *[
+            F.expr(f"percentile({c}, {p})").alias(f"{c[0]}{i}")
+            for c in ("r_days", "f_orders", "m_cents")
+            for i, p in ((1, 0.25), (2, 0.5), (3, 0.75))
+        ]
+    )
+    scored = m.crossJoin(F.broadcast(q)).select(
+        (
+            4
+            - (
+                (F.col("r_days") > F.col("r1")).cast("int")
+                + (F.col("r_days") > F.col("r2")).cast("int")
+                + (F.col("r_days") > F.col("r3")).cast("int")
+            )
+        ).alias("r_score"),
+        (
+            1
+            + (F.col("f_orders") > F.col("f1")).cast("int")
+            + (F.col("f_orders") > F.col("f2")).cast("int")
+            + (F.col("f_orders") > F.col("f3")).cast("int")
+        ).alias("f_score"),
+        (
+            1
+            + (F.col("m_cents") > F.col("m1")).cast("int")
+            + (F.col("m_cents") > F.col("m2")).cast("int")
+            + (F.col("m_cents") > F.col("m3")).cast("int")
+        ).alias("m_score"),
+        "m_cents",
+    )
+    return (
+        scored.groupBy("r_score", "f_score", "m_score")
+        .agg(
+            F.count(F.lit(1)).alias("n_customers"),
+            F.sum("m_cents").alias("segment_cents"),
+        )
+        .orderBy("r_score", "f_score", "m_score")
+    )
+
+
+@query(
+    "orders_open_backlog_daily",
+    """
+    WITH bounds AS (
+        SELECT o.o_orderkey, o.o_orderdate AS start_day,
+               max(l.l_shipdate) AS end_day
+        FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
+        GROUP BY 1, 2
+    ),
+    deltas AS (
+        SELECT start_day AS day, 1 AS delta FROM bounds
+        UNION ALL
+        SELECT end_day + INTERVAL 1 DAY, -1 FROM bounds
+    ),
+    daily AS (
+        SELECT day, CAST(sum(delta) AS BIGINT) AS d
+        FROM deltas GROUP BY 1
+    )
+    SELECT strftime(day, '%Y-%m-%d') AS day,
+           CAST(sum(d) OVER (ORDER BY day) AS BIGINT) AS n_open
+    FROM daily
+    ORDER BY day
+    """,
+)
+def _orders_open_backlog_daily(spark, t):
+    # interval-stabbing backlog: how many orders were OPEN (placed but
+    # not fully shipped) on each day. The scale-safe shape is the
+    # ±1-delta trick: each order contributes exactly two rows (+1 at
+    # placement, −1 after its last shipment), the deltas aggregate at
+    # DAY grain, and the running sum is a window over the day-grain
+    # table — calendar-bounded rows (~2.4k days), allowlisted in
+    # tests/test_window_sweep.py, never an interval×day fan-out or a
+    # fact-grain window.
+    # order-grain interval table feeds both delta branches —
+    # persisted so the orders⋈lineitem join runs once
+    bounds = (
+        t["orders"]
+        .select("o_orderkey", "o_orderdate")
+        .join(
+            t["lineitem"].select("l_orderkey", "l_shipdate"),
+            F.col("o_orderkey") == F.col("l_orderkey"),
+        )
+        .groupBy("o_orderkey", "o_orderdate")
+        .agg(F.max("l_shipdate").alias("end_day"))
+        .persist()
+    )
+    deltas = bounds.select(
+        F.col("o_orderdate").alias("day"), F.lit(1).alias("delta")
+    ).unionByName(
+        bounds.select(
+            F.date_add(F.col("end_day"), 1).cast("timestamp").alias("day"),
+            F.lit(-1).alias("delta"),
+        )
+    )
+    daily = deltas.groupBy("day").agg(F.sum("delta").alias("d"))
+    w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
+    return (
+        daily.withColumn("n_open", F.sum("d").over(w))
+        .select(
+            F.date_format("day", "yyyy-MM-dd").alias("day"),
+            "n_open",
+        )
+        .orderBy("day")
+    )
+
+
+@query(
+    "nation_revenue_share",
+    """
+    WITH rev AS (
+        SELECT r.r_name AS region, n.n_name AS nation,
+               sum(CAST(ROUND(o.o_totalprice * 100) AS BIGINT)) AS cents
+        FROM orders o
+        JOIN customer c ON o.o_custkey = c.c_custkey
+        JOIN nation n ON c.c_nationkey = n.n_nationkey
+        JOIN region r ON n.n_regionkey = r.r_regionkey
+        GROUP BY 1, 2
+    )
+    SELECT region, nation,
+           CAST(cents AS BIGINT) AS nation_cents,
+           CAST(sum(cents) OVER (PARTITION BY region) AS BIGINT)
+               AS region_cents,
+           CAST(cents * 10000 // sum(cents) OVER (PARTITION BY region)
+                AS BIGINT) AS share_bp
+    FROM rev
+    ORDER BY region, nation
+    """,
+)
+def _nation_revenue_share(spark, t):
+    # ratio-to-report: each nation's share of its region's revenue.
+    # The fact scan aggregates to nation grain FIRST (25 rows), so the
+    # share window runs partitioned over a dim-sized table — the
+    # window is an output-grain formality, not a data-movement step.
+    # customer is SF-proportional, so it joins via a pinned
+    # SHUFFLE_HASH on o_custkey (q8/q21 precedent) — only
+    # the fixed-size nation/region dims broadcast; the other real
+    # shuffle is the nation-grain aggregate with map-side combine.
+    rev = (
+        t["orders"]
+        .join(
+            t["customer"].select("c_custkey", "c_nationkey").hint(
+                "shuffle_hash"
+            ),
+            F.col("o_custkey") == F.col("c_custkey"),
+        )
+        .join(
+            F.broadcast(t["nation"]),
+            F.col("c_nationkey") == F.col("n_nationkey"),
+        )
+        .join(
+            F.broadcast(t["region"]),
+            F.col("n_regionkey") == F.col("r_regionkey"),
+        )
+        .groupBy(
+            F.col("r_name").alias("region"), F.col("n_name").alias("nation")
+        )
+        .agg(
+            F.sum(
+                F.round(F.col("o_totalprice") * 100).cast("long")
+            ).alias("cents")
+        )
+    )
+    w = Window.partitionBy("region")
+    return rev.select(
+        "region",
+        "nation",
+        F.col("cents").alias("nation_cents"),
+        F.sum("cents").over(w).alias("region_cents"),
+        F.expr(
+            "cents * 10000 DIV (sum(cents) OVER (PARTITION BY region))"
+        ).alias("share_bp"),
+    ).orderBy("region", "nation")
+
+
+@query(
+    "nation_top_customers_concat",
+    """
+    SELECT n.n_name AS nation,
+           count(*) AS n_customers,
+           array_to_string(list_sort(list(c.c_name))[1:5], ',')
+               AS top5_names
+    FROM customer c JOIN nation n ON c.c_nationkey = n.n_nationkey
+    GROUP BY 1
+    ORDER BY 1
+    """,
+)
+def _nation_top_customers_concat(spark, t):
+    # ordered string aggregation (SQL string_agg / listagg surface):
+    # per nation, the 5 alphabetically-first customer names, comma-
+    # joined. The count aggregates over ALL customers, but the list is
+    # rank-FILTERED to ≤5 per group BEFORE collect_list — per-group
+    # window state and collected-array memory stay bounded at any
+    # scale, unlike a collect-then-slice which materializes the whole
+    # group. array_sort after collect makes the (unordered) list
+    # deterministic.
+    c = t["customer"].join(
+        F.broadcast(t["nation"]),
+        F.col("c_nationkey") == F.col("n_nationkey"),
+    )
+    w = Window.partitionBy("n_name").orderBy("c_name", "c_custkey")
+    counts = c.groupBy(F.col("n_name").alias("nation")).agg(
+        F.count(F.lit(1)).alias("n_customers")
+    )
+    top5 = (
+        c.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= 5)
+        .groupBy(F.col("n_name").alias("nation"))
+        .agg(
+            F.array_join(
+                F.array_sort(F.collect_list("c_name")), ","
+            ).alias("top5_names")
+        )
+    )
+    return (
+        counts.join(top5, "nation")
+        .select("nation", "n_customers", "top5_names")
+        .orderBy("nation")
+    )
+
+
+@query(
+    "orders_daily_status_spine",
+    """
+    WITH days AS (SELECT DISTINCT o_orderdate AS day FROM orders),
+    statuses AS (SELECT DISTINCT o_orderstatus AS status FROM orders),
+    counts AS (
+        SELECT o_orderdate AS day, o_orderstatus AS status,
+               count(*) AS n
+        FROM orders GROUP BY 1, 2
+    )
+    SELECT strftime(d.day, '%Y-%m-%d') AS day, s.status AS status,
+           CAST(COALESCE(c.n, 0) AS BIGINT) AS n_orders
+    FROM days d
+    CROSS JOIN statuses s
+    LEFT JOIN counts c ON c.day = d.day AND c.status = s.status
+    ORDER BY 1, 2
+    """,
+)
+def _orders_daily_status_spine(spark, t):
+    # dense-spine gap filling: every (day, status) combination with
+    # explicit zeros — the reporting shape downstream charting and
+    # window functions need (a missing row silently breaks lag/moving
+    # averages). The spine is the cross join of two SMALL distinct
+    # sets (calendar days × 3 statuses), never a fact-grain product;
+    # the fact contributes one (day,status)-grain aggregate that
+    # left-joins onto the spine via broadcast.
+    o = t["orders"]
+    days = o.select(F.col("o_orderdate").alias("day")).distinct()
+    statuses = o.select(F.col("o_orderstatus").alias("status")).distinct()
+    counts = o.groupBy(
+        F.col("o_orderdate").alias("day"),
+        F.col("o_orderstatus").alias("status"),
+    ).agg(F.count(F.lit(1)).alias("n"))
+    return (
+        days.crossJoin(F.broadcast(statuses))
+        .join(counts, ["day", "status"], "left")
+        .select(
+            F.date_format("day", "yyyy-MM-dd").alias("day"),
+            "status",
+            F.coalesce("n", F.lit(0)).alias("n_orders"),
+        )
+        .orderBy("day", "status")
+    )
+
+
+@query(
+    "orders_first_vs_repeat_revenue",
+    """
+    WITH flagged AS (
+        SELECT year(o_orderdate) AS yr,
+               CAST(ROUND(o_totalprice * 100) AS BIGINT) AS cents,
+               CASE WHEN row_number() OVER (PARTITION BY o_custkey
+                                            ORDER BY o_orderdate,
+                                                     o_orderkey) = 1
+                    THEN 1 ELSE 0 END AS is_first
+        FROM orders
+    )
+    SELECT yr,
+           CAST(sum(CASE WHEN is_first = 1 THEN cents ELSE 0 END)
+                AS BIGINT) AS first_cents,
+           CAST(sum(CASE WHEN is_first = 0 THEN cents ELSE 0 END)
+                AS BIGINT) AS repeat_cents,
+           CAST(sum(is_first) AS BIGINT) AS n_first_orders,
+           CAST(sum(1 - is_first) AS BIGINT) AS n_repeat_orders,
+           CAST((sum(CASE WHEN is_first = 1 THEN cents ELSE 0 END) * 10000)
+                // sum(cents) AS BIGINT) AS first_share_bp
+    FROM flagged
+    GROUP BY 1
+    ORDER BY 1
+    """,
+)
+def _orders_first_vs_repeat_revenue(spark, t):
+    # acquisition-vs-retention revenue split: each order is flagged as
+    # the customer's FIRST (deterministic tie-break on orderkey) via a
+    # customer-partitioned window — bounded frames, one user-keyed
+    # shuffle — then revenue splits by year. Integer cents; share as
+    # basis points.
+    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
+    flagged = t["orders"].select(
+        F.year("o_orderdate").alias("yr"),
+        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        (F.row_number().over(w) == 1).cast("int").alias("is_first"),
+    )
+    first_cents = F.sum(
+        F.when(F.col("is_first") == 1, F.col("cents")).otherwise(0)
+    )
+    return (
+        flagged.groupBy("yr")
+        .agg(
+            first_cents.alias("first_cents"),
+            F.sum(
+                F.when(F.col("is_first") == 0, F.col("cents")).otherwise(0)
+            ).alias("repeat_cents"),
+            F.sum("is_first").alias("n_first_orders"),
+            F.sum(1 - F.col("is_first")).alias("n_repeat_orders"),
+            F.expr(
+                "(sum(CASE WHEN is_first = 1 THEN cents ELSE 0 END)"
+                " * 10000) DIV sum(cents)"
+            ).alias("first_share_bp"),
+        )
+        .orderBy("yr")
+    )
+
+
+@query(
+    "part_brand_supplier_hhi",
+    """
+    WITH sq AS (
+        SELECT l_partkey, l_suppkey,
+               CAST(sum(l_quantity) AS BIGINT) AS qty
+        FROM lineitem GROUP BY 1, 2
+    ),
+    tot AS (
+        SELECT l_partkey, CAST(sum(qty) AS BIGINT) AS tot_qty
+        FROM sq GROUP BY 1
+    ),
+    hhi AS (
+        SELECT sq.l_partkey,
+               CAST(sum(((sq.qty * 10000) // t.tot_qty)
+                        * ((sq.qty * 10000) // t.tot_qty)) AS BIGINT)
+                   AS hhi
+        FROM sq JOIN tot t USING (l_partkey)
+        GROUP BY 1
+    )
+    SELECT p.p_brand AS brand,
+           count(*) AS n_parts,
+           CAST(sum(h.hhi) // count(*) AS BIGINT) AS avg_hhi,
+           CAST(max(h.hhi) AS BIGINT) AS max_hhi,
+           CAST(sum(CASE WHEN h.hhi >= 50000000 THEN 1 ELSE 0 END)
+                AS BIGINT) AS n_concentrated
+    FROM hhi h JOIN part p ON p.p_partkey = h.l_partkey
+    GROUP BY 1
+    ORDER BY 1
+    """,
+)
+def _part_brand_supplier_hhi(spark, t):
+    # supply-chain concentration: Herfindahl index of each part's
+    # supplier quantity shares, rolled up per brand (avg/max HHI and
+    # the count of parts above the 0.5 concentration line). Fully
+    # integer: shares in basis points via truncating division, HHI =
+    # Σ share_bp² ≤ 10⁸ — exact BIGINTs, no float accumulation
+    # anywhere, so it hash-matches any engine. Plan: one
+    # (part,supplier)-grain aggregate off the fact, part-grain
+    # marginal reusing that table (persisted — two consumers), the
+    # HHI aggregate rides the same part partitioning, brand dim
+    # broadcasts.
+    sq = (
+        t["lineitem"]
+        .groupBy("l_partkey", "l_suppkey")
+        .agg(F.sum("l_quantity").cast("long").alias("qty"))
+        .persist()
+    )
+    tot = sq.groupBy("l_partkey").agg(F.sum("qty").alias("tot_qty"))
+    share = F.expr("(qty * 10000) DIV tot_qty")
+    hhi = (
+        sq.join(tot, "l_partkey")
+        .select("l_partkey", (share * share).alias("sh2"))
+        .groupBy("l_partkey")
+        .agg(F.sum("sh2").alias("hhi"))
+    )
+    return (
+        hhi.join(
+            F.broadcast(t["part"].select("p_partkey", "p_brand")),
+            F.col("l_partkey") == F.col("p_partkey"),
+        )
+        .groupBy(F.col("p_brand").alias("brand"))
+        .agg(
+            F.count(F.lit(1)).alias("n_parts"),
+            F.expr("sum(hhi) DIV count(1)").alias("avg_hhi"),
+            F.max("hhi").alias("max_hhi"),
+            F.sum(
+                (F.col("hhi") >= 50_000_000).cast("int")
+            ).alias("n_concentrated"),
+        )
+        .orderBy("brand")
+    )
+
+
+@query(
+    "lineitem_discount_band_revenue",
+    """
+    SELECT CAST(ROUND(l_discount * 100) AS INT) AS discount_pct,
+           count(*) AS n_items,
+           CAST(sum(CAST(ROUND(l_extendedprice * 100) AS BIGINT))
+                AS BIGINT) AS gross_cents,
+           CAST(sum(CAST(ROUND(l_extendedprice * l_discount * 100)
+                         AS BIGINT)) AS BIGINT) AS discount_cents
+    FROM lineitem
+    GROUP BY 1
+    ORDER BY 1
+    """,
+)
+def _lineitem_discount_band_revenue(spark, t):
+    # pricing-band report: revenue given away per discount level — the
+    # q6/q19 money math as a reporting grid instead of a filter. One
+    # map-side-combinable aggregate at ≤11 output rows; all money in
+    # integer cents (the per-row ROUND happens before aggregation, so
+    # both engines round the same scalar, never a compared float).
+    return (
+        t["lineitem"]
+        .groupBy(
+            F.round(F.col("l_discount") * 100)
+            .cast("int")
+            .alias("discount_pct")
+        )
+        .agg(
+            F.count(F.lit(1)).alias("n_items"),
+            F.sum(
+                F.round(F.col("l_extendedprice") * 100).cast("long")
+            ).alias("gross_cents"),
+            F.sum(
+                F.round(
+                    F.col("l_extendedprice") * F.col("l_discount") * 100
+                ).cast("long")
+            ).alias("discount_cents"),
+        )
+        .orderBy("discount_pct")
+    )
+
+
+@query(
+    "customer_segment_value_profile",
+    """
+    WITH o AS (
+        SELECT o_custkey, count(*) AS n_orders,
+               sum(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS cents
+        FROM orders GROUP BY 1
+    )
+    SELECT c.c_mktsegment AS segment,
+           count(*) AS n_customers,
+           CAST(sum(COALESCE(o.n_orders, 0)) AS BIGINT) AS n_orders,
+           CAST(sum(COALESCE(o.cents, 0)) AS BIGINT) AS revenue_cents,
+           CAST(sum(CASE WHEN o.o_custkey IS NULL THEN 1 ELSE 0 END)
+                AS BIGINT) AS n_inactive,
+           CAST(sum(COALESCE(o.cents, 0))
+                // greatest(sum(COALESCE(o.n_orders, 0)), 1) AS BIGINT)
+               AS avg_order_cents
+    FROM customer c LEFT JOIN o ON o.o_custkey = c.c_custkey
+    GROUP BY 1
+    ORDER BY 1
+    """,
+)
+def _customer_segment_value_profile(spark, t):
+    # market-segment value profile: customers, orders, revenue,
+    # inactive count, and average order value per segment — the BI
+    # rollup behind q3's segment filter. The fact aggregates to
+    # customer grain FIRST (one shuffle with map-side combine), then
+    # left-joins the customer dim so never-ordered customers are
+    # counted, then a 5-row segment aggregate. Average crosses as
+    # integer cents with a greatest(,1) guard both engines share.
+    o = (
+        t["orders"]
+        .groupBy("o_custkey")
+        .agg(
+            F.count(F.lit(1)).alias("n_orders"),
+            F.sum(
+                F.round(F.col("o_totalprice") * 100).cast("long")
+            ).alias("cents"),
+        )
+    )
+    return (
+        t["customer"]
+        .join(o, F.col("o_custkey") == F.col("c_custkey"), "left")
+        .groupBy(F.col("c_mktsegment").alias("segment"))
+        .agg(
+            F.count(F.lit(1)).alias("n_customers"),
+            F.sum(F.coalesce("n_orders", F.lit(0))).alias("n_orders"),
+            F.sum(F.coalesce("cents", F.lit(0))).alias("revenue_cents"),
+            F.sum(
+                F.col("o_custkey").isNull().cast("int")
+            ).alias("n_inactive"),
+            F.expr(
+                "sum(COALESCE(cents, 0))"
+                " DIV greatest(sum(COALESCE(n_orders, 0)), 1)"
+            ).alias("avg_order_cents"),
+        )
+        .orderBy("segment")
+    )
+
+
+@query(
+    "supplier_nation_trade_matrix",
+    """
+    SELECT cn.n_name AS cust_nation, sn.n_name AS supp_nation,
+           count(*) AS n_items,
+           CAST(sum(CAST(ROUND(l.l_extendedprice
+                               * (1 - l.l_discount) * 100) AS BIGINT))
+                AS BIGINT) AS revenue_cents
+    FROM lineitem l
+    JOIN orders o ON l.l_orderkey = o.o_orderkey
+    JOIN customer c ON o.o_custkey = c.c_custkey
+    JOIN nation cn ON c.c_nationkey = cn.n_nationkey
+    JOIN supplier s ON l.l_suppkey = s.s_suppkey
+    JOIN nation sn ON s.s_nationkey = sn.n_nationkey
+    GROUP BY 1, 2
+    ORDER BY 1, 2
+    """,
+)
+def _supplier_nation_trade_matrix(spark, t):
+    # full nation×nation trade matrix — Q7 without its two-nation
+    # filter, as the ≤625-row reporting grid. customer is
+    # SF-proportional (~150k rows/SF — billions at 100 TB), so it
+    # arrives via a pinned SHUFFLE_HASH join on o_custkey, never a
+    # broadcast (same rule as q8/q21). The orders side is
+    # first reduced to (orderkey, cust_nation) so the big
+    # lineitem⋈orders orderkey shuffle carries one string, not the
+    # customer row; supplier-scale and nation dims broadcast; revenue
+    # in per-row integer cents rounded before aggregation.
+    n = t["nation"].select("n_nationkey", "n_name")
+    rev = F.round(
+        F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100
+    ).cast("long")
+    cust = (
+        t["customer"]
+        .select("c_custkey", "c_nationkey")
+        .join(
+            F.broadcast(
+                n.select(
+                    F.col("n_nationkey").alias("ck"),
+                    F.col("n_name").alias("cust_nation"),
+                )
+            ),
+            F.col("c_nationkey") == F.col("ck"),
+        )
+        .select("c_custkey", "cust_nation")
+    )
+    orders_nat = (
+        t["orders"]
+        .select("o_orderkey", "o_custkey")
+        .join(
+            cust.hint("shuffle_hash"),
+            F.col("o_custkey") == F.col("c_custkey"),
+        )
+        .select("o_orderkey", "cust_nation")
+    )
+    return (
+        t["lineitem"]
+        .join(
+            orders_nat.hint("shuffle_hash"),
+            F.col("l_orderkey") == F.col("o_orderkey"),
+        )
+        .join(
+            F.broadcast(t["supplier"].select("s_suppkey", "s_nationkey")),
+            F.col("l_suppkey") == F.col("s_suppkey"),
+        )
+        .join(
+            F.broadcast(
+                n.select(
+                    F.col("n_nationkey").alias("sk"),
+                    F.col("n_name").alias("supp_nation"),
+                )
+            ),
+            F.col("s_nationkey") == F.col("sk"),
+        )
+        .groupBy("cust_nation", "supp_nation")
+        .agg(
+            F.count(F.lit(1)).alias("n_items"),
+            F.sum(rev).alias("revenue_cents"),
+        )
+        .orderBy("cust_nation", "supp_nation")
+    )
+
+
+@query(
+    "orders_cohort_ltv",
+    """
+    WITH first AS (
+        SELECT o_custkey, CAST(min(year(o_orderdate)) AS INT) AS cohort_year
+        FROM orders GROUP BY 1
+    )
+    SELECT f.cohort_year,
+           CAST(year(o.o_orderdate) AS INT) AS order_year,
+           count(DISTINCT o.o_custkey) AS n_active,
+           count(*) AS n_orders,
+           CAST(sum(CAST(ROUND(o.o_totalprice * 100) AS BIGINT))
+                AS BIGINT) AS revenue_cents
+    FROM orders o JOIN first f ON o.o_custkey = f.o_custkey
+    GROUP BY 1, 2
+    ORDER BY 1, 2
+    """,
+)
+def _orders_cohort_ltv(spark, t):
+    # customer-lifetime-value triangle: customers cohorted by first-
+    # order year, revenue and active-customer counts per (cohort,
+    # order year). The retention/LTV report every subscription and
+    # marketplace team reads. Plan: one custkey-grain aggregate for
+    # the cohort stamp, then a custkey shuffle join back onto orders
+    # (both sides SF-proportional — pinned SHUFFLE_HASH, never a
+    # broadcast), then the ≤|years|² cell aggregate; count(DISTINCT
+    # custkey) partial-aggregates on the custkey partitioning it
+    # already rides. Exact integer cents.
+    first = (
+        t["orders"]
+        .groupBy("o_custkey")
+        .agg(F.min(F.year("o_orderdate")).alias("cohort_year"))
+        .withColumnRenamed("o_custkey", "f_custkey")
+    )
+    return (
+        t["orders"]
+        .join(
+            first.hint("shuffle_hash"),
+            F.col("o_custkey") == F.col("f_custkey"),
+        )
+        .groupBy(
+            "cohort_year", F.year("o_orderdate").alias("order_year")
+        )
+        .agg(
+            F.count_distinct("o_custkey").alias("n_active"),
+            F.count(F.lit(1)).alias("n_orders"),
+            F.sum(
+                F.round(F.col("o_totalprice") * 100).cast("long")
+            ).alias("revenue_cents"),
+        )
+        .orderBy("cohort_year", "order_year")
+    )
+
+
+_LTV_ORACLE = ORACLE["orders_cohort_ltv"]
+
+
+@query("orders_cohort_ltv_incremental", _LTV_ORACLE)
+def _orders_cohort_ltv_incremental(spark, t):
+    # incremental maintenance of the LTV triangle — same oracle as
+    # orders_cohort_ltv, so the driver proves delta-merge ≡ full
+    # recompute. The hard part of incrementalizing this report is
+    # n_active: count(DISTINCT custkey) per cell is NOT mergeable from
+    # cell aggregates, so the maintained state is
+    #   - cust_first: custkey → cohort_year   (customer-grain)
+    #   - presence:   distinct (cohort, year, custkey)  (the exact-
+    #     distinct state a production pipeline keeps as a bucketed
+    #     table; HLL is the approximate alternative)
+    #   - cells:      additive n_orders / revenue per (cohort, year)
+    # A date-split delta (here: orders from 1999-01-01) can only ADD
+    # orders after the base window, so an existing customer's cohort
+    # never changes — new customers cohort at their first delta year.
+    # Every merge is a custkey- or cell-grain shuffle; the fact is
+    # scanned once per side.
+    split = "1999-01-01"
+    o = t["orders"].select(
+        "o_custkey",
+        "o_orderdate",
+        F.year("o_orderdate").alias("yr"),
+        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+    )
+    base = o.filter(F.col("o_orderdate") < F.lit(split))
+    delta = o.filter(F.col("o_orderdate") >= F.lit(split))
+
+    cust_first_base = base.groupBy("o_custkey").agg(
+        F.min("yr").alias("cohort_year")
+    )
+    # new-in-delta customers cohort at their first delta year
+    delta_first = delta.groupBy("o_custkey").agg(
+        F.min("yr").alias("delta_first")
+    )
+    cust_first = (
+        cust_first_base.join(
+            delta_first.withColumnRenamed("o_custkey", "d_custkey"),
+            F.col("o_custkey") == F.col("d_custkey"),
+            "full_outer",
+        )
+        .select(
+            F.coalesce("o_custkey", "d_custkey").alias("o_custkey"),
+            F.coalesce("cohort_year", "delta_first").alias("cohort_year"),
+        )
+        .persist()
+    )
+
+    def presence(side):
+        return (
+            side.select("o_custkey", "yr")
+            .distinct()
+            .join(cust_first.hint("shuffle_hash"), "o_custkey")
+            .select("cohort_year", "yr", "o_custkey")
+        )
+
+    presence_all = presence(base).unionByName(presence(delta)).distinct()
+    n_active = presence_all.groupBy("cohort_year", "yr").agg(
+        F.count(F.lit(1)).alias("n_active")
+    )
+
+    def cells(side):
+        return (
+            side.join(cust_first.hint("shuffle_hash"), "o_custkey")
+            .groupBy("cohort_year", "yr")
+            .agg(
+                F.count(F.lit(1)).alias("n_orders"),
+                F.sum("cents").alias("revenue_cents"),
+            )
+        )
+
+    merged = (
+        cells(base)
+        .unionByName(cells(delta))
+        .groupBy("cohort_year", "yr")
+        .agg(
+            F.sum("n_orders").alias("n_orders"),
+            F.sum("revenue_cents").alias("revenue_cents"),
+        )
+    )
+    return (
+        merged.join(n_active, ["cohort_year", "yr"])
+        .select(
+            "cohort_year",
+            F.col("yr").alias("order_year"),
+            "n_active",
+            "n_orders",
+            "revenue_cents",
+        )
+        .orderBy("cohort_year", "order_year")
+    )
+
+
+@query(
+    "orders_scd2_asof_revenue",
+    """
+    WITH scd AS (
+        SELECT c.n_nationkey AS k,
+               CASE WHEN c.n_nationkey % 3 = 0 THEN (c.n_regionkey + 1) % 5
+                    ELSE c.n_regionkey END AS region_new,
+               c.n_regionkey AS region_old,
+               c.n_nationkey % 3 = 0 AS changed
+        FROM nation c
+    ),
+    versions AS (
+        SELECT k, region_old AS region, DATE '1990-01-01' AS valid_from,
+               CASE WHEN changed THEN DATE '2000-01-01' END AS valid_to
+        FROM scd
+        UNION ALL
+        SELECT k, region_new, DATE '2000-01-01', CAST(NULL AS DATE)
+        FROM scd WHERE changed
+    )
+    SELECT CAST(year(o.o_orderdate) AS INT) AS yr,
+           v.region,
+           count(*) AS n_orders,
+           CAST(sum(CAST(ROUND(o.o_totalprice * 100) AS BIGINT))
+                AS BIGINT) AS revenue_cents
+    FROM orders o
+    JOIN customer c ON o.o_custkey = c.c_custkey
+    JOIN versions v
+      ON v.k = c.c_nationkey
+     AND o.o_orderdate >= v.valid_from
+     AND (v.valid_to IS NULL OR o.o_orderdate < v.valid_to)
+    GROUP BY 1, 2
+    ORDER BY 1, 2
+    """,
+)
+def _orders_scd2_asof_revenue(spark, t):
+    # the report SCD2 exists FOR: each fact row joined to the dim
+    # version valid AT ITS OWN date (orders before the 2000-01-01
+    # region change report under the old region, after under the new
+    # — a current-version join would silently rewrite history).
+    # Built on operators/scd.scd2_apply (same scenario as
+    # scd2_nation_update); the versioned dim is dim-sized so the
+    # as-of lookup is an EQUI broadcast join on nationkey with the
+    # validity window as a residual — per-row as-of at zero extra
+    # shuffles. customer joins via pinned SHUFFLE_HASH
+    # (SF-proportional); the one real aggregate is (year, region).
+    from ..operators.scd import scd2_apply
+
+    nation = t["nation"]
+    dim = nation.select(
+        F.col("n_nationkey").alias("k"),
+        F.col("n_regionkey").alias("region"),
+        F.lit("1990-01-01").cast("date").alias("valid_from"),
+        F.lit(None).cast("date").alias("valid_to"),
+        F.lit(True).alias("is_current"),
+    )
+    updates = nation.filter(F.col("n_nationkey") % 3 == 0).select(
+        F.col("n_nationkey").alias("k"),
+        ((F.col("n_regionkey") + 1) % 5).alias("region"),
+        F.lit("2000-01-01").cast("date").alias("change_date"),
+    )
+    versions = scd2_apply(dim, updates, ["k"], ["region"]).select(
+        "k", "region", "valid_from", "valid_to"
+    )
+    return (
+        t["orders"]
+        .join(
+            t["customer"]
+            .select("c_custkey", "c_nationkey")
+            .hint("shuffle_hash"),
+            F.col("o_custkey") == F.col("c_custkey"),
+        )
+        .join(
+            F.broadcast(versions),
+            (F.col("k") == F.col("c_nationkey"))
+            & (F.col("o_orderdate") >= F.col("valid_from"))
+            & (
+                F.col("valid_to").isNull()
+                | (F.col("o_orderdate") < F.col("valid_to"))
+            ),
+        )
+        .groupBy(
+            F.year("o_orderdate").alias("yr"),
+            "region",
+        )
+        .agg(
+            F.count(F.lit(1)).alias("n_orders"),
+            F.sum(
+                F.round(F.col("o_totalprice") * 100).cast("long")
+            ).alias("revenue_cents"),
+        )
+        .orderBy("yr", "region")
+    )
+
+
+@query(
+    "orders_cohort_survival",
+    """
+    WITH first AS (
+        SELECT o_custkey, CAST(min(year(o_orderdate)) AS INT) AS cohort_year
+        FROM orders GROUP BY 1
+    ),
+    cohort AS (
+        SELECT cohort_year, count(*) AS n_cohort FROM first GROUP BY 1
+    ),
+    active AS (
+        SELECT DISTINCT f.cohort_year,
+               CAST(year(o.o_orderdate) AS INT) - f.cohort_year AS k,
+               o.o_custkey
+        FROM orders o JOIN first f ON o.o_custkey = f.o_custkey
+    ),
+    alive AS (
+        SELECT cohort_year, k, count(*) AS n_alive
+        FROM active GROUP BY 1, 2
+    )
+    SELECT a.cohort_year, a.k, a.n_alive, c.n_cohort,
+           a.n_alive * 10000 // c.n_cohort AS survival_bp
+    FROM alive a JOIN cohort c USING (cohort_year)
+    ORDER BY 1, 2
+    """,
+)
+def _orders_cohort_survival(spark, t):
+    # cohort survival curves — the Kaplan-Meier-flavored cut of the
+    # LTV triangle: for each acquisition cohort, the share of
+    # customers still ordering k years later, in exact basis points.
+    # ("Still ordering at k" = placed an order in year cohort+k — the
+    # discrete-activity definition matching the triangle's n_active.)
+    # Plan: the custkey cohort stamp (one custkey-grain aggregate), a
+    # pinned SHUFFLE_HASH join back onto orders, distinct at
+    # (cohort, k, custkey) riding the same custkey partitioning, then
+    # two dim-sized rollups. Integer-exact throughout.
+    first = (
+        t["orders"]
+        .groupBy("o_custkey")
+        .agg(F.min(F.year("o_orderdate")).alias("cohort_year"))
+        .withColumnRenamed("o_custkey", "f_custkey")
+        .persist()
+    )
+    cohort = first.groupBy("cohort_year").agg(
+        F.count(F.lit(1)).alias("n_cohort")
+    )
+    active = (
+        t["orders"]
+        .join(
+            first.hint("shuffle_hash"),
+            F.col("o_custkey") == F.col("f_custkey"),
+        )
+        .select(
+            "cohort_year",
+            (F.year("o_orderdate") - F.col("cohort_year")).alias("k"),
+            "o_custkey",
+        )
+        .distinct()
+    )
+    alive = active.groupBy("cohort_year", "k").agg(
+        F.count(F.lit(1)).alias("n_alive")
+    )
+    return (
+        alive.join(F.broadcast(cohort), "cohort_year")
+        .select(
+            "cohort_year",
+            "k",
+            "n_alive",
+            "n_cohort",
+            F.expr("n_alive * 10000 DIV n_cohort").alias("survival_bp"),
+        )
+        .orderBy("cohort_year", "k")
+    )
+
+
+@query(
+    "part_sourcing_risk_grid",
+    """
+    WITH ps AS (
+        SELECT l_partkey,
+               count(DISTINCT l_suppkey) AS n_suppliers,
+               CAST(sum(CAST(ROUND(l_extendedprice * (1 - l_discount)
+                                   * 100) AS BIGINT)) AS BIGINT) AS cents
+        FROM lineitem GROUP BY 1
+    ),
+    tot AS (SELECT CAST(sum(cents) AS BIGINT) AS total_cents FROM ps)
+    SELECT CAST(ps.n_suppliers AS INT) AS n_suppliers,
+           count(*) AS n_parts,
+           CAST(sum(ps.cents) AS BIGINT) AS revenue_cents,
+           CAST(sum(ps.cents) * 10000 // t.total_cents AS BIGINT)
+               AS revenue_share_bp
+    FROM ps CROSS JOIN tot t
+    GROUP BY 1, t.total_cents
+    ORDER BY 1
+    """,
+)
+def _part_sourcing_risk_grid(spark, t):
+    # supply-chain resilience grid: revenue concentration by how many
+    # distinct suppliers actually ship each part (the low end is the
+    # at-risk single/dual-sourced revenue procurement teams track).
+    # Complements part_brand_supplier_hhi: HHI measures WITHIN-part
+    # share concentration, this measures sourcing REDUNDANCY. Grain =
+    # observed supplier-count values, bounded by suppliers-per-part
+    # (a catalog property, not data volume). Plan: one (part)-grain
+    # aggregate with the distinct-supplier count riding it, a 1-row
+    # total broadcast, a bounded rollup. Exact cents and basis
+    # points.
+    ps = (
+        t["lineitem"]
+        .groupBy("l_partkey")
+        .agg(
+            F.count_distinct("l_suppkey").alias("n_suppliers"),
+            F.sum(
+                F.round(
+                    F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100
+                ).cast("long")
+            ).alias("cents"),
+        )
+        .persist()
+    )
+    tot = ps.agg(F.sum("cents").alias("total_cents"))
+    return (
+        ps.crossJoin(F.broadcast(tot))
+        .groupBy(
+            F.col("n_suppliers").cast("int").alias("n_suppliers"),
+            "total_cents",
+        )
+        .agg(
+            F.count(F.lit(1)).alias("n_parts"),
+            F.sum("cents").alias("revenue_cents"),
+        )
+        .select(
+            "n_suppliers",
+            "n_parts",
+            "revenue_cents",
+            F.expr(
+                "revenue_cents * 10000 DIV total_cents"
+            ).alias("revenue_share_bp"),
+        )
+        .orderBy("n_suppliers")
+    )
+
+
+@query(
+    "orders_zorder_key",
+    # DuckDB twin generated by zorder_key_sql at import time below —
+    # identical bit interleaving, so keys hash-match exactly
+    None,
+)
+def _orders_zorder_key(spark, t):
+    # Morton (z-order) clustering key over (custkey, order-day) — the
+    # multi-dimensional data-skipping layout primitive
+    # (operators/zorder.py; measured row-group pruning in
+    # tests/test_zorder.py). Pure bit-shift expressions: whole-stage
+    # codegen, engine-portable, hash-oracled bit-for-bit. The raw
+    # (unnormalized) key is the oracled surface; the write path uses
+    # the min/max-normalized variant.
+    from ..operators.zorder import zorder_key
+
+    day = F.datediff(
+        F.to_date("o_orderdate"), F.lit("1995-01-01").cast("date")
+    ).cast("long")
+    return (
+        t["orders"]
+        .select(
+            "o_orderkey",
+            F.col("o_custkey").alias("ck"),
+            day.alias("day"),
+        )
+        .select(
+            "o_orderkey",
+            zorder_key(["ck", "day"], bits=16).alias("zkey"),
+        )
+        .orderBy("o_orderkey")
+    )
+
+
+def _install_zorder_oracle() -> None:
+    from ..operators.zorder import zorder_key_sql
+    from .registry import ORACLE
+
+    zexpr = zorder_key_sql(["ck", "day"], bits=16)
+    ORACLE["orders_zorder_key"] = f"""
+    SELECT o_orderkey, {zexpr} AS zkey
+    FROM (
+        SELECT o_orderkey, o_custkey AS ck,
+               date_diff('day', DATE '1995-01-01',
+                         CAST(o_orderdate AS DATE))::BIGINT AS day
+        FROM orders
+    ) ORDER BY o_orderkey
+    """
+
+
+_install_zorder_oracle()
+
+
+@query(
+    "parts_copurchase_triangles",
+    """
+    WITH items AS (
+        SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
+    ),
+    edges AS (
+        SELECT a.l_partkey AS lo, b.l_partkey AS hi
+        FROM items a JOIN items b
+          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+        GROUP BY 1, 2 HAVING count(*) >= 2
+    )
+    SELECT (SELECT count(*) FROM (SELECT lo AS n FROM edges
+                                  UNION SELECT hi FROM edges)) AS n_nodes,
+           (SELECT count(*) FROM edges) AS n_edges,
+           (SELECT count(*) FROM edges e1
+              JOIN edges e2 ON e2.lo = e1.lo AND e2.hi > e1.hi
+              JOIN edges e3 ON e3.lo = e1.hi AND e3.hi = e2.hi)
+               AS n_triangles
+    """,
+)
+def _parts_copurchase_triangles(spark, t):
+    # triangle census of the part co-purchase graph (edge = parts
+    # ordered together in >=2 orders) — the graph-density kernel
+    # behind clustering coefficients and substitute/complement
+    # screens. Spark runs the degree-ORIENTED algorithm
+    # (operators/graph.py::triangle_count: out-degree O(sqrt(E)) per
+    # node, so wedge generation is O(E^1.5) worst case instead of a
+    # hub-node sum-of-degrees-squared blowup); the oracle counts the
+    # same triangles with DuckDB's canonical three-way join. Same
+    # count, different join order — the algorithmic claim is exactly
+    # what the hash compare verifies.
+    items = (
+        t["lineitem"].select("l_orderkey", "l_partkey").distinct().persist()
+    )
+    a = items.select(
+        F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("pa")
+    )
+    b = items.select(
+        F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("pb")
+    )
+    edges = (
+        a.join(b, "k")
+        .filter(F.col("pa") < F.col("pb"))
+        .groupBy("pa", "pb")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .filter(F.col("n") >= 2)
+        .select(F.col("pa").alias("doc_a"), F.col("pb").alias("doc_b"))
+    )
+    from ..operators.graph import triangle_count
+
+    return triangle_count(edges)

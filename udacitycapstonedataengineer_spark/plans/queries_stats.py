@@ -1,6 +1,8 @@
 """Statistical / ML-housekeeping queries: deterministic dataset
-splits, histograms, and robust outlier detection — all exact-math,
-all DuckDB-oracled.
+splits, histograms, robust outlier detection, data profiling and
+integrity audits, and order time-series diagnostics (autocorrelation,
+drawdown, forecast error, Benford, Gini) — all exact-math, all
+DuckDB-oracled.
 """
 
 from __future__ import annotations
@@ -1090,4 +1092,635 @@ def _orders_profile_drift(spark, t):
         F.col("mean_cents_floor__a").alias("mean_a"),
         F.col("mean_cents_floor__b").alias("mean_b"),
         drifted.alias("drifted"),
+    )
+
+
+@query(
+    "supplier_lead_time_trend",
+    """
+    WITH xy AS (
+        SELECT l.l_suppkey,
+               year(o.o_orderdate) * 12 + month(o.o_orderdate) AS x,
+               date_diff('day', o.o_orderdate, l.l_shipdate) AS y
+        FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+    )
+    SELECT l_suppkey,
+           count(*) AS n_items,
+           CAST(count(*) * sum(x * y) - sum(x) * sum(y) AS BIGINT) AS num,
+           CAST(count(*) * sum(x * x) - sum(x) * sum(x) AS BIGINT) AS den,
+           CAST((count(*) * sum(x * y) - sum(x) * sum(y)) * 10000
+                // (count(*) * sum(x * x) - sum(x) * sum(x)) AS BIGINT)
+               AS slope_bp
+    FROM xy
+    GROUP BY 1
+    HAVING count(*) * sum(x * x) - sum(x) * sum(x) <> 0
+    ORDER BY 1
+    """,
+)
+def _supplier_lead_time_trend(spark, t):
+    # per-supplier TREND of order→ship lag: grouped least-squares
+    # slope in pure int64 (x = month index, y = lag days; slope as
+    # basis points via integer floor-div) — the closed-form
+    # n·Σxy − Σx·Σy over n·Σx² − (Σx)², so the whole regression is
+    # one map-side-combinable aggregate over the lineitem⋈orders
+    # join: no per-group iteration, no floats until never. The join
+    # shuffles on orderkey (bucketing co-locates it at scale); the
+    # supplier-grain agg is a second, far smaller shuffle.
+    xy = (
+        t["lineitem"]
+        .join(
+            t["orders"].select("o_orderkey", "o_orderdate"),
+            F.col("l_orderkey") == F.col("o_orderkey"),
+        )
+        .select(
+            "l_suppkey",
+            (F.year("o_orderdate") * 12 + F.month("o_orderdate")).alias("x"),
+            F.datediff("l_shipdate", "o_orderdate").alias("y"),
+        )
+    )
+    g = xy.groupBy("l_suppkey").agg(
+        F.count(F.lit(1)).alias("n_items"),
+        F.sum(F.col("x") * F.col("y")).alias("sxy"),
+        F.sum("x").alias("sx"),
+        F.sum("y").alias("sy"),
+        F.sum(F.col("x") * F.col("x")).alias("sxx"),
+    )
+    num = F.col("n_items") * F.col("sxy") - F.col("sx") * F.col("sy")
+    den = F.col("n_items") * F.col("sxx") - F.col("sx") * F.col("sx")
+    return (
+        g.select(
+            "l_suppkey",
+            "n_items",
+            num.alias("num"),
+            den.alias("den"),
+            F.expr(
+                "(n_items * sxy - sx * sy) * 10000"
+                " DIV (n_items * sxx - sx * sx)"
+            ).alias("slope_bp"),
+        )
+        .filter(F.col("den") != 0)
+        .orderBy("l_suppkey")
+    )
+
+
+@query(
+    "referential_integrity_audit",
+    """
+    SELECT 'orders->customer' AS fk, count(*) AS n_rows,
+           CAST(sum(CASE WHEN c.c_custkey IS NULL THEN 1 ELSE 0 END)
+                AS BIGINT) AS n_orphans
+    FROM orders o LEFT JOIN customer c ON o.o_custkey = c.c_custkey
+    UNION ALL
+    SELECT 'lineitem->orders', count(*),
+           CAST(sum(CASE WHEN o.o_orderkey IS NULL THEN 1 ELSE 0 END)
+                AS BIGINT)
+    FROM lineitem l LEFT JOIN orders o ON l.l_orderkey = o.o_orderkey
+    UNION ALL
+    SELECT 'lineitem->part', count(*),
+           CAST(sum(CASE WHEN p.p_partkey IS NULL THEN 1 ELSE 0 END)
+                AS BIGINT)
+    FROM lineitem l LEFT JOIN part p ON l.l_partkey = p.p_partkey
+    UNION ALL
+    SELECT 'lineitem->supplier', count(*),
+           CAST(sum(CASE WHEN s.s_suppkey IS NULL THEN 1 ELSE 0 END)
+                AS BIGINT)
+    FROM lineitem l LEFT JOIN supplier s ON l.l_suppkey = s.s_suppkey
+    ORDER BY 1
+    """,
+)
+def _referential_integrity_audit(spark, t):
+    # referential-integrity audit: orphan counts for every fact→dim
+    # FK, the pre-flight check a warehouse load runs before
+    # publishing. Each check is a LEFT join counting null dim keys —
+    # expressed as one aggregate per FK so map-side combine collapses
+    # each to (total, orphans) long before the union. Dim sides
+    # (customer/part/supplier keysets) broadcast at these
+    # cardinalities; lineitem→orders is the one genuine shuffle and
+    # rides the orderkey bucketing at scale. A healthy load reports 0
+    # orphans — the row (with its non-zero n_rows) is the evidence,
+    # not an empty result.
+    def audit(fact, fact_key, dim, dim_key, label):
+        return (
+            fact.select(F.col(fact_key))
+            .join(
+                dim.select(F.col(dim_key)),
+                F.col(fact_key) == F.col(dim_key),
+                "left",
+            )
+            .agg(
+                F.lit(label).alias("fk"),
+                F.count(F.lit(1)).alias("n_rows"),
+                F.sum(
+                    F.when(F.col(dim_key).isNull(), 1).otherwise(0)
+                ).alias("n_orphans"),
+            )
+        )
+
+    checks = [
+        audit(t["orders"], "o_custkey", t["customer"], "c_custkey",
+              "orders->customer"),
+        audit(t["lineitem"], "l_orderkey", t["orders"], "o_orderkey",
+              "lineitem->orders"),
+        audit(t["lineitem"], "l_partkey", t["part"], "p_partkey",
+              "lineitem->part"),
+        audit(t["lineitem"], "l_suppkey", t["supplier"], "s_suppkey",
+              "lineitem->supplier"),
+    ]
+    out = checks[0]
+    for c in checks[1:]:
+        out = out.unionByName(c)
+    return out.select(
+        "fk", "n_rows", "n_orphans"
+    ).orderBy("fk")
+
+
+@query(
+    "orders_hot_keys_skew",
+    """
+    SELECT o_custkey,
+           count(*) AS n_orders,
+           CAST(count(*) * 10000 // (SELECT count(*) FROM orders)
+                AS BIGINT) AS share_bp
+    FROM orders
+    GROUP BY 1
+    ORDER BY n_orders DESC, o_custkey
+    LIMIT 10
+    """,
+)
+def _orders_hot_keys_skew(spark, t):
+    # hot-key diagnostics: the 10 heaviest join/agg keys and their
+    # share of the fact table — the profile you run BEFORE choosing a
+    # salting or skew-join strategy (the engine's own AQE skew
+    # threshold is keyed off exactly this distribution). Plan: one
+    # map-side-combinable count per key, broadcast 1-row total,
+    # TakeOrdered for the top-10 (never a global sort shuffle).
+    # Deterministic tie-break on the key itself.
+    o = t["orders"]
+    total = o.agg(F.count(F.lit(1)).alias("n_total"))
+    return (
+        o.groupBy("o_custkey")
+        .agg(F.count(F.lit(1)).alias("n_orders"))
+        .crossJoin(F.broadcast(total))
+        .select(
+            "o_custkey",
+            "n_orders",
+            F.expr("n_orders * 10000 DIV n_total").alias("share_bp"),
+        )
+        .orderBy(F.desc("n_orders"), "o_custkey")
+        .limit(10)
+    )
+
+
+@query(
+    "orders_interorder_gap_stats",
+    """
+    WITH g AS (
+        SELECT date_diff('day',
+                         lag(o_orderdate) OVER (PARTITION BY o_custkey
+                                                ORDER BY o_orderdate,
+                                                         o_orderkey),
+                         o_orderdate) AS gap
+        FROM orders
+    )
+    SELECT count(*) AS n_gaps,
+           CAST(sum(gap) AS BIGINT) AS sum_gap_days,
+           CAST(sum(gap) * 100 // count(*) AS BIGINT) AS avg_gap_e2,
+           quantile_cont(gap, 0.25) AS p25_gap,
+           quantile_cont(gap, 0.5) AS p50_gap,
+           quantile_cont(gap, 0.75) AS p75_gap,
+           CAST(max(gap) AS INT) AS max_gap
+    FROM g WHERE gap IS NOT NULL
+    """,
+)
+def _orders_interorder_gap_stats(spark, t):
+    # purchase-cadence profile: days between consecutive orders of the
+    # same customer, summarized globally. The lag window is PARTITIONED
+    # by customer (bounded frames, no single-task trap); the final
+    # 1-row aggregate is map-side combinable. Quantiles sit on integer
+    # day counts at dyadic p, so the interpolated values are exact
+    # halves/quarters in double — no cross-engine ulp drift. The mean
+    # crosses as a rational (×100, truncating integer division).
+    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
+    g = (
+        t["orders"]
+        .select(
+            F.datediff(
+                "o_orderdate", F.lag("o_orderdate").over(w)
+            ).alias("gap")
+        )
+        .filter(F.col("gap").isNotNull())
+    )
+    return g.agg(
+        F.count(F.lit(1)).alias("n_gaps"),
+        F.sum("gap").alias("sum_gap_days"),
+        F.expr("sum(gap) * 100 DIV count(1)").alias("avg_gap_e2"),
+        F.expr("percentile(gap, 0.25)").alias("p25_gap"),
+        F.expr("percentile(gap, 0.5)").alias("p50_gap"),
+        F.expr("percentile(gap, 0.75)").alias("p75_gap"),
+        F.max("gap").alias("max_gap"),
+    )
+
+
+@query(
+    "orders_value_gini",
+    """
+    WITH cents AS (
+        SELECT o_orderkey,
+               CAST(ROUND(o_totalprice * 100) AS BIGINT) AS c
+        FROM orders
+    ),
+    ranked AS (
+        SELECT c, row_number() OVER (ORDER BY c, o_orderkey) AS rnk
+        FROM cents
+    )
+    SELECT count(*) AS n_orders,
+           CAST(sum(c) AS BIGINT) AS total_cents,
+           CAST(sum(rnk * c) AS DOUBLE) AS rank_weighted_cents,
+           CAST(2 * sum(rnk * c) - (count(*) + 1) * sum(c) AS DOUBLE)
+               / CAST(count(*) * sum(c) AS DOUBLE) AS gini
+    FROM ranked
+    """,
+)
+def _orders_value_gini(spark, t):
+    # exact Gini coefficient of order-value inequality — the scalar
+    # the Pareto top-share curve summarizes. Needs a total-order rank
+    # over the fact, which is exactly what the DISTRIBUTED exact
+    # ranking provides (range partition + per-partition row_number +
+    # broadcast offsets; the oracle's global row_number is the
+    # single-task shape the operator exists to avoid). The closed
+    # form G = (2·Σrank·x − (n+1)·Σx) / (n·Σx) aggregates the
+    # rank-weighted sum in a DECIMAL(38,0) accumulator (Σrank·cents
+    # is ~n²·c̄/2 — already past int64 at the ×10 probe; DuckDB's sum
+    # widens to HUGEINT on its own), then the ratio is ONE
+    # deterministic conversion+division: the exact decimal/int128
+    # values round to the same nearest double in both engines.
+    # Deterministic tie-break on (cents, orderkey).
+    cents = t["orders"].select(
+        "o_orderkey",
+        F.round(F.col("o_totalprice") * 100).cast("long").alias("c"),
+    )
+    ranked = with_global_rank(cents, ["c", "o_orderkey"], "rnk")
+    src = "sum(cast(rnk * c as decimal(38,0)))"
+    sc = "cast(sum(c) as decimal(38,0))"
+    return ranked.agg(
+        F.count(F.lit(1)).alias("n_orders"),
+        F.sum("c").alias("total_cents"),
+        F.expr(f"CAST({src} AS DOUBLE)").alias("rank_weighted_cents"),
+        F.expr(
+            f"CAST(2 * {src} - (count(1) + 1) * {sc} AS DOUBLE)"
+            f" / CAST(count(1) * {sc} AS DOUBLE)"
+        ).alias("gini"),
+    )
+
+
+@query(
+    "orders_daily_autocorr",
+    """
+    WITH daily AS (
+        SELECT CAST(o_orderdate AS DATE) AS d, count(*) AS n
+        FROM orders GROUP BY 1
+    ),
+    lags AS (SELECT * FROM (VALUES (1), (7), (28)) AS t(lag_days)),
+    pairs AS (
+        SELECT l.lag_days, a.n AS x, b.n AS y
+        FROM daily a
+        JOIN lags l ON TRUE
+        JOIN daily b ON b.d = a.d + l.lag_days
+    ),
+    m AS (
+        SELECT lag_days, count(*) AS n_pairs,
+               CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
+               sum(x::HUGEINT * y) AS sxy,
+               sum(x::HUGEINT * x) AS sxx,
+               sum(y::HUGEINT * y) AS syy
+        FROM pairs GROUP BY 1
+    )
+    SELECT lag_days, n_pairs,
+           (CAST(n_pairs AS DOUBLE) * CAST(sxy AS DOUBLE)
+            - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
+           / (sqrt(CAST(n_pairs AS DOUBLE) * CAST(sxx AS DOUBLE)
+                   - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
+              * sqrt(CAST(n_pairs AS DOUBLE) * CAST(syy AS DOUBLE)
+                     - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))
+               AS autocorr
+    FROM m
+    ORDER BY lag_days
+    """,
+)
+def _orders_daily_autocorr(spark, t):
+    # lag-{1,7,28} autocorrelation of the daily order-count series —
+    # the seasonality detector behind orders_monthly_seasonality
+    # (weekly/monthly rhythm shows up as high lag-7/lag-28 r). The
+    # fact collapses to a date-grain series FIRST (≤ a few thousand
+    # rows at any SF), so the lag self-join and the five exact moments
+    # run on a dim-sized table; moments accumulate as exact integers
+    # (decimal cross-products — the stats_corr_exact pattern) and ONE
+    # shared IEEE formula produces the double on both engines.
+    daily = (
+        t["orders"]
+        .groupBy(F.to_date("o_orderdate").alias("d"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .persist()
+    )
+    lags = spark.range(0).sparkSession.createDataFrame(
+        [(1,), (7,), (28,)], "lag_days int"
+    )
+    b = daily.select(F.col("d").alias("bd"), F.col("n").alias("y"))
+    pairs = (
+        daily.crossJoin(F.broadcast(lags))
+        .join(
+            F.broadcast(b),
+            F.col("bd") == F.expr("date_add(d, lag_days)"),
+        )
+        .select("lag_days", F.col("n").alias("x"), "y")
+    )
+    m = pairs.groupBy("lag_days").agg(
+        F.count(F.lit(1)).alias("n_pairs"),
+        F.sum("x").alias("sx"),
+        F.sum("y").alias("sy"),
+        F.sum(F.col("x").cast("decimal(38,0)") * F.col("y")).alias("sxy"),
+        F.sum(F.col("x").cast("decimal(38,0)") * F.col("x")).alias("sxx"),
+        F.sum(F.col("y").cast("decimal(38,0)") * F.col("y")).alias("syy"),
+    )
+    nd = F.col("n_pairs").cast("double")
+    sx, sy = F.col("sx").cast("double"), F.col("sy").cast("double")
+    sxy = F.col("sxy").cast("double")
+    sxx, syy = F.col("sxx").cast("double"), F.col("syy").cast("double")
+    # zero variance on either side → autocorr undefined → NULL. DuckDB
+    # division by zero already yields NULL, so the oracle agrees; an
+    # unguarded divide errors under Spark's ANSI mode (hypothesis
+    # found the constant-series case in round 8).
+    denom = F.sqrt(nd * sxx - sx * sx) * F.sqrt(nd * syy - sy * sy)
+    corr = F.when(denom != 0, (nd * sxy - sx * sy) / denom)
+    return m.select("lag_days", "n_pairs", corr.alias("autocorr")).orderBy(
+        "lag_days"
+    )
+
+
+@query(
+    "orders_monthly_price_bands",
+    """
+    WITH o AS (
+        SELECT CAST(year(o_orderdate) * 100 + month(o_orderdate) AS INT)
+                   AS ym,
+               CAST(ROUND(o_totalprice * 100) AS BIGINT) AS cents,
+               o_orderkey
+        FROM orders
+    ),
+    r AS (
+        SELECT ym, cents,
+               row_number() OVER (PARTITION BY ym
+                                  ORDER BY cents, o_orderkey) AS rn,
+               count(*) OVER (PARTITION BY ym) AS n
+        FROM o
+    )
+    SELECT ym, CAST(max(n) AS BIGINT) AS n_orders,
+           max(CASE WHEN rn = (n + 1) // 2 THEN cents END) AS p50_cents,
+           max(CASE WHEN rn = (9 * n + 9) // 10 THEN cents END) AS p90_cents,
+           max(CASE WHEN rn = (99 * n + 99) // 100 THEN cents END)
+               AS p99_cents
+    FROM r GROUP BY ym ORDER BY ym
+    """,
+)
+def _orders_monthly_price_bands(spark, t):
+    # exact P50/P90/P99 order-value bands per month — the SLO-style
+    # percentile report, discrete (type-1) quantiles so every value is
+    # an actual order amount and every band is an exact BIGINT (no
+    # interpolation, no float drift). Rank extraction: row_number
+    # within each month (a value-partitioned window — per-month sort
+    # is spill-backed at scale) + the partition count, then one cell
+    # aggregate picks the ceil(p·n) ranks via integer arithmetic.
+    # Month count is bounded (~84 here), so the output is dim-sized.
+    o = t["orders"].select(
+        (F.year("o_orderdate") * 100 + F.month("o_orderdate")).alias("ym"),
+        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        "o_orderkey",
+    )
+    w = Window.partitionBy("ym").orderBy("cents", "o_orderkey")
+    r = o.select(
+        "ym",
+        "cents",
+        F.row_number().over(w).alias("rn"),
+        F.count(F.lit(1)).over(Window.partitionBy("ym")).alias("n"),
+    )
+    pick = lambda expr: F.max(  # noqa: E731
+        F.when(F.col("rn") == F.expr(expr), F.col("cents"))
+    )
+    return (
+        r.groupBy("ym")
+        .agg(
+            F.max("n").alias("n_orders"),
+            pick("(n + 1) DIV 2").alias("p50_cents"),
+            pick("(9 * n + 9) DIV 10").alias("p90_cents"),
+            pick("(99 * n + 99) DIV 100").alias("p99_cents"),
+        )
+        .orderBy("ym")
+    )
+
+
+@query(
+    "lineitem_selfjoin_fanout_profile",
+    """
+    WITH c AS (
+        SELECT l_partkey, count(*) AS cnt
+        FROM lineitem GROUP BY 1
+    ),
+    b AS (
+        -- length(bin(x))-1 == floor(log2(x)) in EXACT integer terms
+        -- (libm log2 can ulp-flip at powers of two across engines)
+        SELECT CAST(length(bin(cnt)) - 1 AS INT) AS bucket,
+               cnt
+        FROM c
+    )
+    SELECT bucket,
+           count(*) AS n_keys,
+           CAST(sum(cnt) AS BIGINT) AS n_rows,
+           CAST(sum(cnt * (cnt - 1) // 2) AS BIGINT) AS n_selfjoin_pairs
+    FROM b
+    GROUP BY bucket
+    ORDER BY bucket
+    """,
+)
+def _lineitem_selfjoin_fanout_profile(spark, t):
+    # join fan-out profiler — the skew-planning diagnostic run BEFORE
+    # a self-equi-join: per log2 key-frequency bucket, how many keys,
+    # rows, and C(cnt,2) pair comparisons a self-join on l_partkey
+    # would generate. Σ pairs is the exact cost of the naive join; the
+    # bucket tail shows whether a skew cap / salting is needed (the
+    # number the LSH max_bucket cap and operators/skew.py act on).
+    # One key-grain count with map-side combine, then a ≤64-row bucket
+    # rollup. All integer: the log2 bucket comes from length(bin(cnt))
+    # (libm log2 can ulp-flip at exact powers of two across engines)
+    # and the pair count uses integer division; per-key pairs stay in
+    # BIGINT for any cnt ≤ ~4.3B — past that the profile's answer is
+    # "don't run this join".
+    c = (
+        t["lineitem"]
+        .groupBy("l_partkey")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+    return (
+        c.select(
+            F.expr("CAST(length(bin(cnt)) - 1 AS INT)").alias("bucket"),
+            "cnt",
+        )
+        .groupBy("bucket")
+        .agg(
+            F.count(F.lit(1)).alias("n_keys"),
+            F.sum("cnt").alias("n_rows"),
+            F.sum(
+                F.expr("cnt * (cnt - 1) DIV 2")
+            ).alias("n_selfjoin_pairs"),
+        )
+        .orderBy("bucket")
+    )
+
+
+@query(
+    "orders_monthly_forecast_eval",
+    """
+    WITH m AS (
+        SELECT CAST(year(o_orderdate) * 100 + month(o_orderdate) AS INT)
+                   AS ym,
+               CAST(sum(CAST(ROUND(o_totalprice * 100) AS BIGINT))
+                    AS BIGINT) AS cents
+        FROM orders GROUP BY 1
+    )
+    SELECT a.ym, a.cents AS actual_cents, f.cents AS forecast_cents,
+           abs(a.cents - f.cents) AS abs_err_cents,
+           abs(a.cents - f.cents) * 10000 // f.cents AS err_bp
+    FROM m a JOIN m f ON f.ym = a.ym - 100
+    ORDER BY a.ym
+    """,
+)
+def _orders_monthly_forecast_eval(spark, t):
+    # forecast-evaluation harness with the naive seasonal baseline:
+    # forecast(month) = same month last year, scored per month in
+    # exact integer cents and basis-point error — the baseline every
+    # real forecasting model must beat, and the exact-arithmetic
+    # error-accounting pattern its evaluation reuses (a float MAPE
+    # would drift across engines; |a−f|·10⁴ DIV f cannot). Plan: one
+    # month-grain aggregate off the fact, then a self-equi-join on
+    # the ≤84-row month table (broadcast by size).
+    m = (
+        t["orders"]
+        .groupBy(
+            (F.year("o_orderdate") * 100 + F.month("o_orderdate")).alias(
+                "ym"
+            )
+        )
+        .agg(
+            F.sum(
+                F.round(F.col("o_totalprice") * 100).cast("long")
+            ).alias("cents")
+        )
+        .persist()
+    )
+    f = m.select(
+        (F.col("ym") + 100).alias("fym"), F.col("cents").alias("fc")
+    )
+    return (
+        m.join(F.broadcast(f), F.col("ym") == F.col("fym"))
+        .select(
+            "ym",
+            F.col("cents").alias("actual_cents"),
+            F.col("fc").alias("forecast_cents"),
+            F.abs(F.col("cents") - F.col("fc")).alias("abs_err_cents"),
+            F.expr(
+                "abs(cents - fc) * 10000 DIV fc"
+            ).alias("err_bp"),
+        )
+        .orderBy("ym")
+    )
+
+
+@query(
+    "orders_daily_drawdown",
+    """
+    WITH daily AS (
+        SELECT CAST(o_orderdate AS DATE) AS d, count(*) AS n
+        FROM orders GROUP BY 1
+    ),
+    r AS (
+        SELECT d, n,
+               max(n) OVER (ORDER BY d
+                            ROWS BETWEEN UNBOUNDED PRECEDING
+                            AND CURRENT ROW) AS peak
+        FROM daily
+    )
+    SELECT CAST(d AS VARCHAR) AS d, n, peak,
+           (peak - n) * 10000 // peak AS drawdown_bp
+    FROM r
+    ORDER BY 1
+    """,
+)
+def _orders_daily_drawdown(spark, t):
+    # running-peak drawdown of the daily order series — the
+    # demand-collapse detector (how far below the best day so far is
+    # today, in basis points). Finance's max-drawdown machinery
+    # applied to volume. The fact collapses to the day grain first;
+    # the running max is an unpartitioned window ONLY over that
+    # calendar-bounded table (window-sweep allowlisted), and the
+    # drawdown is integer basis points — no float path.
+    daily = (
+        t["orders"]
+        .groupBy(F.to_date("o_orderdate").alias("d"))
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    w = (
+        Window.orderBy("d")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return (
+        daily.select(
+            "d",
+            "n",
+            F.max("n").over(w).alias("peak"),
+        )
+        .select(
+            F.date_format("d", "yyyy-MM-dd").alias("d"),
+            "n",
+            "peak",
+            F.expr("(peak - n) * 10000 DIV peak").alias("drawdown_bp"),
+        )
+        .orderBy("d")
+    )
+
+
+@query(
+    "orders_benford_screen",
+    """
+    SELECT o_orderstatus,
+           CAST(substring(CAST(CAST(floor(o_totalprice) AS BIGINT)
+                               AS VARCHAR), 1, 1) AS INT) AS lead_digit,
+           COUNT(*) AS n_orders,
+           CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+               AS cents_total
+    FROM orders
+    WHERE o_totalprice >= 1
+    GROUP BY 1, 2 ORDER BY 1, 2
+    """,
+)
+def _orders_benford_screen(spark, t):
+    # first-significant-digit histogram of order totals by status —
+    # the Benford anomaly screen. Digit extraction is a string prefix
+    # of the truncated integer part (identical semantics both
+    # engines); money crosses the oracle in integer cents
+    # (functions/exact.py convention), never summed as double.
+    lead = F.substring(
+        F.floor("o_totalprice").cast("long").cast("string"), 1, 1
+    ).cast("int")
+    return (
+        t["orders"]
+        .filter(F.col("o_totalprice") >= 1)
+        .groupBy(
+            "o_orderstatus", lead.alias("lead_digit")
+        )
+        .agg(
+            F.count(F.lit(1)).alias("n_orders"),
+            F.sum(
+                F.round(F.col("o_totalprice") * 100).cast("long")
+            ).alias("cents_total"),
+        )
+        .orderBy("o_orderstatus", "lead_digit")
     )

@@ -1,7 +1,7 @@
 """Structured Streaming twins for the text/LM maintenance surface.
 
 ``stream_kn_bigram_counts`` is the ingest loop behind
-``text_kn_bigram_incremental`` (plans/queries_round11.py): arriving
+``text_kn_bigram_incremental`` (plans/queries_text.py): arriving
 documents land their bigram counts as APPEND-ONLY PARTIALS onto the
 standing count table. Appending partials instead of read-modify-write
 is the 100 TB-shaped choice: count tables are additively mergeable
@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 def _batch_bigram_counts(docs: DataFrame) -> DataFrame:
     """(w1, w2, c): one micro-batch's bigram counts — the same
-    tokenize/explode shape as plans.queries_round8._doc_bigrams
+    tokenize/explode shape as plans.queries_text._doc_bigrams
     (imported lazily there to keep streaming/ import-light); kept
     local so the stream has no plans-module dependency."""
     return (
@@ -78,7 +78,7 @@ def stream_kn_bigram_counts(
 def kn_counts_compact(spark: SparkSession, table_path: str) -> DataFrame:
     """(w1, w2, c12): the standing bigram-count table — partials
     summed. Readers that want the derived KN statistics feed this to
-    ``plans.queries_round11.kn_bigram_merge`` (as the standing side);
+    ``plans.queries_text.kn_bigram_merge`` (as the standing side);
     a maintenance job can also write the compacted frame back and
     truncate the partials."""
     return (
@@ -401,10 +401,10 @@ def _sweep_orphan_dir(path: str, stale_sec: float) -> None:
         )
 
 
-# --- trigram siblings (round 12) -------------------------------------
+# --- trigram siblings ------------------------------------------------
 # The landing/compaction discipline one level down KN's recursion:
-# trigram partials feed plans.queries_round12.kn_trigram_merge (the
-# r13 text_kn_trigram_incremental draft) the same way bigram partials
+# trigram partials feed plans.queries_text.kn_trigram_merge (behind
+# text_kn_trigram_incremental) the same way bigram partials
 # feed kn_bigram_merge. Same append-only O(batch types) writes, same
 # 2× read-amplification trigger (kn_compact_due is grain-agnostic —
 # it consumes two counts), same swap.
@@ -413,10 +413,10 @@ def _sweep_orphan_dir(path: str, stale_sec: float) -> None:
 def _batch_trigram_counts(docs: DataFrame) -> DataFrame:
     """(w1, w2, w3, c): one micro-batch's trigram counts — the same
     tokenize/explode shape as the registered ``text_kn_trigram_prob``
-    extraction (plans/queries_round10.py:124-148); kept local so the
-    stream has no plans-module dependency.
+    extraction (plans/queries_text.py); kept local so the stream has
+    no plans-module dependency.
     ``test_batch_trigram_counts_matches_doc_trigrams`` pins the two
-    together (the ADVICE r11 #4 discipline)."""
+    together."""
     return (
         docs.select(
             F.expr(r"split(lower(trim(text)), '\\s+')").alias("toks")

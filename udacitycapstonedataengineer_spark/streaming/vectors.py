@@ -181,7 +181,7 @@ def stream_ivfpq_drift_stats(
     """Append-mode stream of (vec_id, cell, energy): each arriving
     vector's frozen-model cell and fixed-point residual energy
     (floor(r·scale)² summed — the exact-BIGINT statistic
-    ``plans/queries_round10.ivfpq_drift_stats`` aggregates), as a
+    ``plans/queries_sim.ivfpq_drift_stats`` aggregates), as a
     stateless projection. The per-cell drift aggregation happens at
     read time over the appended stats table (or in the foreachBatch
     sink), so the stream itself stays shuffle-free and append-safe —

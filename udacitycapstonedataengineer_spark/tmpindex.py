@@ -1,7 +1,7 @@
 """Lifecycle for pid-scoped temp index directories (ADVICE r11 #1).
 
-``ann_topk_ivfpq_served`` (plans/queries_round9.py:109) and
-``ann_ivfpq_recall_curve_served`` (plans/queries_round11.py:60) write
+``ann_topk_ivfpq_served`` and ``ann_ivfpq_recall_curve_served``
+(plans/queries_sim.py) write
 their cell-partitioned parquet index under
 ``{tempdir}/spark_graft_*_{pid}`` — pid-scoped so concurrent driver /
 bench / test processes never collide, ``mode('overwrite')`` so
