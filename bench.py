@@ -1,37 +1,52 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default 32).
+
+Every HEADLINE query is timed median-of-3 and, unless
+SPARK_GRAFT_SWEEP=0, every other registered query once; each run
+writes to the no-op sink, so the full plan (scan → shuffle → agg) is
+timed without driver-side result serialization. Timings are compared
+with the previous round's baselines (same scale factor and core count
+only): shared-set totals and the queries over 1.5× their baseline.
 
 Prints ONE JSON line:
-    {"metric": "...", "value": total_sec, "unit": "sec",
-     "queries": {name: sec, ...}, "sf": ...}
-
-Each query is executed with the no-op sink so we time the full plan
-(scan → shuffle → agg) without driver-side result serialization.
+    {"metric": "headline_queries_total", "value": total_sec,
+     "unit": "sec", "queries": {name: sec, ...}, "sf": ..., "cpus": ...}
 
 The driver records only the LAST 2000 chars of stdout (BENCH_r05.json
 has "parsed": null because the round-5 line outgrew that buffer), so
-the printed line is kept under the buffer: per-query timings are
-included heaviest-first until the line would overflow, the rest are
-summarized by count, and the FULL per-query map is written to
-BENCH_DETAIL_after_r{N}_{writer}.json (N = newest committed BENCH_r*,
-so the driver's end-of-round run lands in a file the next round can
-pair with its BENCH_r{N+1}.json when rebuilding the baseline; writer
-= $SPARK_GRAFT_BENCH_WRITER, default "driver", so the builder's
-canary-certified anchor run and the driver's run COEXIST instead of
-the last run clobbering the first — VERDICT r13 wrong #2).
+the printed line is kept under the buffer (see _fit_line) and the FULL
+result is written to BENCH_DETAIL_after_r{N}_{writer}.json (N = newest
+committed BENCH_r*, so the driver's end-of-round run lands in a file
+the next round can pair with its BENCH_r{N+1}.json when rebuilding the
+baseline; writer = $SPARK_GRAFT_BENCH_WRITER, default "driver", so a
+builder's anchor run and the driver's run coexist).
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
+import re
+import sys
 import time
 
 from udacitycapstonedataengineer_spark.plans.queries import QUERIES
 from udacitycapstonedataengineer_spark.session import get_spark
 
+# Median-of-3 tier, in the order the rounds added them: the reference
+# star-schema surface and TPC-H first, then the training-data pipeline
+# families. Where a query has a build-heavy or naive twin, the shape
+# that ships is benched here and the twin gets its single-shot timing
+# from the sweep: events_linear_attribution (naive interval join),
+# semdedup_clusters and semdedup_survivors_incremental (fixed-k twins
+# of the budgeted family; semdedup_survivors stays as the contrast
+# shape), ann_ivfpq_recall_curve and ann_ivfpq_recall_at_k (in-query
+# index build; the served twins read the written index). The
+# *_served_filtered queries differ from their served twins only by a
+# predicate in the pruned probe scan, and text_kn_trigram_stream_served
+# runs a full streaming ingest per call: both are sweep-only.
 HEADLINE = [
-    # reference surface (star-schema ETL)
     "star_revenue_by_region_year",
     "tpch_q1_pricing_summary",
     "tpch_q3_shipping_priority",
@@ -50,7 +65,6 @@ HEADLINE = [
     "tpch_q9_product_profit",
     "tpch_q13_customer_distribution",
     "tpch_q21_waiting_suppliers",
-    # training-data pipeline extensions
     "text_tfidf_top_terms",
     "dedup_exact_groups",
     "dedup_minhash_lsh",
@@ -62,14 +76,11 @@ HEADLINE = [
     "events_sessionize",
     "text_quality_score",
     "multimodal_features",
-    # round-2b stats/corpus suite — heaviest new shuffle shapes
-    # (VERDICT r2 #4)
     "orders_equidepth_deciles",
     "docs_global_dup_spans",
     "events_rolling_7d_active_users",
     "docs_contamination_check",
     "dedup_clusters",
-    # round-4 additions
     "docs_novelty_hapax",
     "text_keyword_search_topk",
     "corpus_source_overlap",
@@ -81,48 +92,32 @@ HEADLINE = [
     "basket_part_pairs",
     "events_conversion_latency_stats",
     "orders_profile_drift",
-    # round-5: the remaining query families bench never covered
     "bloom_membership_orders",
     "scd2_point_in_time_read",
     "docs_length_percentiles_by_source",
     "lineitem_shipping_lag_stats",
     "events_power_users_pareto",
     "orders_monthly_seasonality",
-    # round-5 new queries — the non-trivial shapes
     "customer_rfm_segments",
     "supplier_lead_time_trend",
     "orders_open_backlog_daily",
     "docs_shingle_containment",
     "referential_integrity_audit",
-    # round-5b: engagement/diagnostics — the non-trivial shapes
     "events_dau_mau_stickiness",
     "docs_token_rarity",
     "orders_interorder_gap_stats",
-    # round-5c: vocab sweep, session profiling, iterative PageRank
     "text_vocab_coverage",
     "events_session_duration_stats",
     "graph_pagerank_eventtypes",
-    # round-5d: bitmap aggregate, quantized centroids
     "events_activity_bitmap",
     "embeddings_label_centroid",
-    # round-5e: parameter sweeps
     "dedup_threshold_sweep",
     "docs_pack_budget_sweep",
-    # round-5f: growth/concentration
     "orders_first_vs_repeat_revenue",
     "part_brand_supplier_hhi",
-    # round-5g: lang-id audit (per-row model expr over the corpus)
     "docs_langid_agreement",
-    # round-5h: ranking-path Gini
     "orders_value_gini",
-    # round-5i: five-way star grid
     "supplier_nation_trade_matrix",
-    # round-6: cohort/collocation/attribution — the non-trivial shapes.
-    # events_linear_attribution (naive interval join) is DEMOTED from
-    # this list (VERDICT r6 #2): it stays registered as the oracle/
-    # probe twin, but the benched shape is the bounded daygrain
-    # rewrite below — the bench measures what would ship. The sweep
-    # tier still gives the naive twin a timing datapoint each round.
     "orders_cohort_ltv",
     "text_bigram_pmi",
     "orders_monthly_price_bands",
@@ -143,17 +138,12 @@ HEADLINE = [
     "orders_cohort_survival",
     "part_sourcing_risk_grid",
     "events_error_burst_windows",
-    # round-7: real PNG codec through the multimodal pipeline;
-    # 5-gram repetition screen; user-stream transition matrix
     "multimodal_png_roundtrip",
     "docs_ngram_repetition",
     "events_markov_transition",
     "embeddings_gram_matrix",
     "text_bm25_linear_topk",
     "parts_copurchase_triangles",
-    # round-8: composed IVF-PQ index end-to-end; BM25 served from the
-    # standing postings index (same oracle as the scan twin);
-    # SemDeDup within-cell pairs; KN continuation counts
     "ann_topk_ivfpq",
     "text_bm25_indexed_topk",
     "semdedup_pairs",
@@ -161,221 +151,48 @@ HEADLINE = [
     "text_kn_continuation_counts",
     "docs_oov_bigram_rate",
     "ann_topk_int8",
-    # semdedup_clusters (fixed-k) DEMOTED to the sweep tier (VERDICT
-    # r15 next #6): with the budgeted family registered at both the
-    # batch and incremental layers, ONE fixed-k row stays headline as
-    # the documented contrast shape — semdedup_survivors below — and
-    # the rest get their timing datapoint from the sweep.
-    # round-9: served-from-parquet IVF-PQ probe (write + read-back
-    # partition-pruned); incremental append under the frozen model;
-    # interpolated KN bigram probs; SemDeDup survivor corpus
     "ann_topk_ivfpq_served",
     "ann_topk_ivfpq_incremental",
     "text_kn_bigram_prob",
-    # semdedup_survivors: the ONE fixed-k row kept headline as the
-    # contrast shape for the budgeted family (VERDICT r15 next #6)
     "semdedup_survivors",
-    # round-10: trigram KN with recursive back-off; IVF-PQ drift
-    # governance (frozen-model residual stats).
-    # semdedup_survivors_incremental (fixed-k, 8.3 s clean-anchor)
-    # DEMOTED to the sweep tier (VERDICT r15 next #6): its budgeted
-    # twin below is the scale shape that ships.
     "text_kn_trigram_prob",
     "ivfpq_index_drift",
-    # ann_ivfpq_recall_curve (13.9 s clean-anchor, the most expensive
-    # headline row after the r14 demotions — cost is the in-query
-    # index BUILD the replayable oracle demands) is DEMOTED to the
-    # sweep tier (VERDICT r14 next #4, the ann_ivfpq_recall_at_k
-    # precedent): its served twin below reads the WRITTEN index and
-    # stays headline as the shape that ships; the sweep still times
-    # the build twin every round.
     "ivfpq_rebuild_decision",
-    # round-11: recall curve served from the written cell-partitioned
-    # index; KN append-equals-rebuild merge over standing count tables
     "ann_ivfpq_recall_curve_served",
     "text_kn_bigram_incremental",
-    # round-13: the r12-staged registrations — the two-grain trigram
-    # merge, LM-scored quality filtering over the KN bigram model.
-    # ann_ivfpq_recall_at_k (14.6 s driver-bench, the single most
-    # expensive row — cost is the in-query index BUILD the replayable
-    # oracle demands) is DEMOTED to the sweep tier now that its
-    # served twin below reads the WRITTEN index (VERDICT r13 next #5,
-    # the events_linear_attribution precedent: the benched shape is
-    # the one that ships; the sweep still times the build twin).
     "text_kn_trigram_incremental",
     "docs_lm_quality_score",
-    # round-14: the r13-staged registrations — post-append recall@k
-    # served from the written index (the cheaper production twin of
-    # the demoted build-heavy row) and the temperature mixture.
-    # text_kn_trigram_stream_served runs a full Structured-Streaming
-    # ingest per invocation — sweep-tier only (one datapoint/round).
     "ann_ivfpq_recall_at_k_served",
     "corpus_mixture_temperature",
-    # round-15: the r14-staged registrations — budgeted-k SemDeDup
-    # survivors (the corpus-linear scale shape that closes the fixed-k
-    # deviation; the fixed-k twin stays registered as the contrast
-    # shape) and the 3-point temperature sweep (bounded histogram
-    # fan-out over the r14 mixture).
-    # ann_ivfpq_recall_at_k_served_filtered is sweep-tier only: its
-    # unfiltered twin above already carries the headline cost of the
-    # IDENTICAL build+write+append pipeline — the filtered delta is a
-    # predicate inside the pruned probe scan, not a new plan shape.
     "semdedup_survivors_budgeted",
     "corpus_mixture_temperature_alpha",
-    # round-16: the r15-staged registrations — the end-to-end corpus
-    # pipeline report (gates → exact dedup → budgeted SemDeDup →
-    # temperature mixture → packing counts as ONE oracled row set)
-    # and the budgeted incremental survivors (closes the fixed-k
-    # deviation at the incremental layer; its fixed-k twin moves to
-    # the sweep per next #6 above).
-    # ann_ivfpq_recall_curve_served_filtered is sweep-tier only, the
-    # ann_ivfpq_recall_at_k_served_filtered precedent: the filtered
-    # delta is a predicate inside the pruned probe scan of the same
-    # written index — its unfiltered served-curve twin keeps the
-    # headline slot for that plan shape.
     "corpus_pipeline_report",
     "semdedup_survivors_incremental_budgeted",
 ]
 
-# Session-contamination canary (VERDICT r10 #2): a fixed trivial query
-# timed (median-of-3) immediately after warmup AND again after the
-# full headline+sweep run. Three contamination signatures, any of
-# which auto-annotates every regression flagged from that session as
-# contaminated rather than adjudicated as code:
-#   ratio high  (last/first > 1.5)  — session degraded under its own
-#                                     weight; late-slot timings lie;
-#   ratio low   (last/first < 1/3)  — session started loaded;
-#                                     early-slot timings lie;
-#   level high  (min(first,last) > 1.5× the canary's committed
-#               baseline) — loaded THROUGHOUT, ratio ≈ 1 — the r10
-#               driver session's actual signature: every sub-second
-#               query read ~2-3× high at once, which a pure ratio
-#               test cannot see.
-# The low-side limit is asymmetric by calibration, not symmetry: even
-# after warm runs, an IDLE session's first reading sits ~2× its last
-# (JVM tiered compilation — the end-of-session value benefits from
-# the whole session's warmth), so idle ratios measure ~0.4-0.5 and a
-# symmetric 1/1.5 bound false-positives every run. A genuinely
-# loaded-at-start session pushes the first reading further: the one
-# contended session observed this round read 0.31 (r11 calibration
-# runs: idle 0.42/0.50, contended 0.31).
-CANARY = "global_counts"
-_CANARY_LIMIT = 1.5
-_CANARY_LOW = 1.0 / 3.0
-# Mid-session readings (VERDICT r11 wrong #3): first/last alone cannot
-# see a load spike in the MIDDLE of the ~7-minute run — it passes both
-# endpoint signatures while inflating whichever queries it straddles
-# (the r11 parts_copurchase_triangles flag's exact shape). A single
-# canary execution lands every _CANARY_EVERY timed queries (~0.2 s
-# each, <1% overhead); each flagged regression then carries its
-# NEAREST readings so it self-adjudicates.
-_CANARY_EVERY = 25
-# an IDLE session's first reading sits ~2× its final one (JVM tiered
-# compilation — r11 calibration: first 0.396 vs last 0.188, committed
-# baseline 0.199), so the first reading gets 2× slack before the
-# level test calls it hot; mid/late readings are past that regime.
-_CANARY_FIRST_SLACK = 2.0
-
-
-def canary_reading_hot(
-    sec: float, baseline: float | None, is_first: bool = False
-) -> bool:
-    """Level test for ONE canary reading against the committed
-    baseline: hot = the session was loaded around the moment this
-    reading was taken. Without a baseline there is no absolute
-    reference — endpoint ratio signatures (canary_verdict) still
-    apply, per-reading rulings don't."""
-    if not baseline or baseline <= 0:
-        return False
-    limit = _CANARY_LIMIT * (_CANARY_FIRST_SLACK if is_first else 1.0)
-    return sec > limit * baseline
-
-
-def canary_segment_context(
-    readings: list[dict], pos: int, baseline: float | None
-) -> dict:
-    """The nearest interleaved readings around queue position ``pos``
-    (a query's index in the timed sequence) + a per-segment ruling:
-    the segment is hot if either bounding reading fails the level
-    test. Pure so tests can replay synthetic sessions."""
-    before = None
-    after = None
-    for r in readings:
-        if r["after_n"] <= pos and (
-            before is None or r["after_n"] > before["after_n"]
-        ):
-            before = r
-        if r["after_n"] > pos and (
-            after is None or r["after_n"] < after["after_n"]
-        ):
-            after = r
-    first = readings[0] if readings else None
-    hot = any(
-        canary_reading_hot(r["sec"], baseline, is_first=(r is first))
-        for r in (before, after)
-        if r is not None
-    )
-    ctx: dict = {"segment_hot": hot}
-    if before is not None:
-        ctx["canary_before"] = before["sec"]
-    if after is not None:
-        ctx["canary_after"] = after["sec"]
-    return ctx
-
-
-# Certification start gate (VERDICT r14 next #6): the r14 driver bench
-# session was contaminated end-to-end and the builder burned three
-# certification reruns on a VM that turns bursty-noisy in unpredictable
-# windows. The canary self-diagnoses ~200 s INTO a run; a BUILDER
-# (certification) run now refuses to START on a machine that already
-# looks loaded — 1-min load average over _GATE_MAX_LOAD, or the warmed
-# start-canary probe failing the same first-reading level test the
-# session verdict applies (canary_reading_hot with first-reading slack
-# — a flat 1.5× would false-refuse every idle run, see the
-# _CANARY_FIRST_SLACK calibration note). Driver runs are never gated
-# (the grading driver must always get a bench line; its session canary
-# still self-diagnoses); SPARK_GRAFT_BENCH_FORCE=1 bypasses.
+# Start gate: a BUILDER run (SPARK_GRAFT_BENCH_WRITER=builder, the
+# anchor the next round's baselines come from) refuses to START on a
+# machine whose 1-min load average is over _GATE_MAX_LOAD. Driver runs
+# are never gated: the grading driver must always get a bench line.
+# Any SPARK_GRAFT_BENCH_FORCE value but "0" bypasses the gate.
 _GATE_MAX_LOAD = 2.0
 
 
-def gate_checks(stamp: str, force: str) -> tuple[bool, bool]:
-    """(check_load, check_canary) for this run. Certification
-    (builder) runs are gated; FORCE in {1, all, true} bypasses both;
-    FORCE=load skips ONLY the load-average check — a back-to-back
-    rerun sees the machine's OWN decaying 1-min load for ~3-4 min
-    after the previous local[32] run, and an all-or-nothing bypass
-    would needlessly drop the warmed-canary protection with it. Pure
-    so tests can enumerate the matrix."""
-    if stamp != "builder" or force in ("1", "all", "true"):
-        return False, False
-    return (force != "load"), True
+def start_gated(stamp: str, force: str) -> bool:
+    """Whether this run checks the start load. Pure so tests can
+    enumerate the matrix."""
+    return stamp == "builder" and force == "0"
 
 
-def start_gate_verdict(
-    load1: float | None,
-    canary_sec: float | None,
-    canary_base: float | None,
-    max_load: float = _GATE_MAX_LOAD,
-) -> str | None:
+def start_gate_verdict(load1: float | None) -> str | None:
     """None = clear to start; else the human-readable refusal reason.
-    Pure so tests can replay synthetic machine states."""
-    if load1 is not None and load1 > max_load:
+    An unreadable load average (None) never refuses."""
+    if load1 is not None and load1 > _GATE_MAX_LOAD:
         return (
-            f"1-min load average {load1:.2f} > {max_load:g} — refusing "
-            "to start a certification bench on a loaded machine. If "
-            "this is YOUR just-finished run decaying, wait ~3-4 min or "
-            "set SPARK_GRAFT_BENCH_FORCE=load (skips only this check; "
-            "=1 bypasses the canary checkpoint too)"
-        )
-    if canary_sec is not None and canary_reading_hot(
-        canary_sec, canary_base, is_first=True
-    ):
-        return (
-            f"start canary {canary_sec:.3f}s exceeds "
-            f"{_CANARY_LIMIT * _CANARY_FIRST_SLACK:g}x the committed "
-            f"baseline {canary_base:.3f}s — refusing to start a "
-            "certification bench on a loaded machine "
-            "(SPARK_GRAFT_BENCH_FORCE=1 overrides)"
+            f"1-min load average {load1:.2f} > {_GATE_MAX_LOAD:g} — refusing "
+            "to start a builder bench on a loaded machine. If this is "
+            "YOUR just-finished run decaying, wait ~3-4 min or set "
+            "SPARK_GRAFT_BENCH_FORCE=1"
         )
     return None
 
@@ -384,256 +201,11 @@ def _refuse(reason: str) -> None:
     """Print the refusal on BOTH streams (stdout is what the driver
     tail-captures; stderr is what a human at the terminal reads) and
     exit non-zero so wrapper scripts stop instead of recording a
-    contaminated anchor."""
-    import sys
-
+    loaded-machine anchor."""
     line = {"metric": "bench_refused", "reason": reason}
     print(json.dumps(line))
     print(f"bench: {reason}", file=sys.stderr)
     raise SystemExit(2)
-
-
-def canary_verdict(
-    first: float, last: float, baseline: float | None = None
-) -> bool:
-    """True = the session is contaminated (any of the three
-    signatures above). Pure so the decision is unit-testable
-    (tests/test_round11.py) — the bench's regression flags inherit
-    whatever this returns."""
-    if first and first > 0:
-        ratio = last / first
-        if ratio > _CANARY_LIMIT or ratio < _CANARY_LOW:
-            return True
-    if baseline and baseline > 0:
-        if min(first, last) > _CANARY_LIMIT * baseline:
-            return True
-    return False
-
-# Saturating canary (round 12): the level canary above is a 1-stage,
-# I/O-light count — its readings calibrate session LOAD but not the
-# machine's sustained all-core throughput. The r12 anchor exposed the
-# gap: a VM where every sub-second query sat AT its committed
-# baseline (canary clean end-to-end) while the 32-thread-saturating
-# families (ANN/SemDeDup) read ~1.1-1.3× — equal single-thread
-# latency, lower sustained throughput. One fixed, data-independent
-# all-core workload (a codegen'd arithmetic fold over spark.range
-# across all cores — no I/O, no shuffle) measured at both endpoints
-# gives cross-ROUND comparisons a machine-speed denominator the way
-# the level canary already calibrates within-session load.
-_SAT_ROWS = 1 << 30
-
-
-def saturating_canary_sec(spark, cpus: int, rows: int = _SAT_ROWS) -> float:
-    """One all-core arithmetic pass; seconds. Deterministic workload,
-    zero I/O — the only variables are the JVM and the silicon."""
-    t0 = time.perf_counter()
-    spark.range(0, rows, 1, numPartitions=int(cpus)).selectExpr(
-        "sum(id * 3 + id % 7) AS s"
-    ).write.format("noop").mode("overwrite").save()
-    return round(time.perf_counter() - t0, 3)
-
-
-def saturating_canary_median(
-    spark, cpus: int, rows: int = _SAT_ROWS, n: int = 3
-) -> tuple[float, list[float]]:
-    """Median-of-n endpoint reading (VERDICT r12 wrong #2): the r12
-    single-reading endpoints spread 33% on a busy VM — exactly the
-    noise the denominator exists to remove. Returns (median,
-    raw_readings) so the sidecar records what the median came from."""
-    reads = [saturating_canary_sec(spark, cpus, rows) for _ in range(n)]
-    return round(sorted(reads)[len(reads) // 2], 3), reads
-
-
-# the statistic behind sat_canary.best_sec this harness computes;
-# recorded in the sidecar so a future statistic change can refuse to
-# compare unlike-vs-unlike (ADVICE r13 #3: the min→median transition
-# round compared a median against a min baseline, biasing the
-# normalized ratio optimistic)
-_SAT_STAT = "median3"
-
-
-def sat_stat_of(sat: dict) -> str:
-    """The statistic kind behind a sidecar's sat_canary.best_sec:
-    explicit ``stat`` field where written (r14+); inferred for older
-    files — per-endpoint raw ``readings`` only exist under the
-    median-of-3 harness (r13), anything before was a single reading."""
-    stat = sat.get("stat")
-    if isinstance(stat, str) and stat:
-        return stat
-    return _SAT_STAT if "readings" in sat else "single"
-
-
-def _load_sat_baseline(
-    root: str | None = None,
-) -> tuple[float | None, int | None, str | None]:
-    """(best_sec, cpus, stat) of the previous round's committed sat
-    canary, from the same detail sidecar _load_baseline anchors
-    per-query numbers to; (None, None, None) when absent."""
-    sidecar, _path = _load_prev_detail(root)
-    sat = sidecar.get("sat_canary", {})
-    try:
-        # float() inside the try: a hand-edited / non-numeric sidecar
-        # value must degrade to no-baseline, not crash the bench at
-        # startup (ADVICE r12 #3 — TypeError escaped the old net).
-        # bool explicitly rejected: float(True) == 1.0 would pass.
-        val = sat.get("best_sec")
-        if isinstance(val, bool):
-            return None, None, None
-        val = float(val)
-        cpus = sat.get("cpus")
-        if val > 0:
-            return val, int(cpus) if cpus else None, sat_stat_of(sat)
-        return None, None, None
-    except (OSError, ValueError, TypeError):
-        return None, None, None
-
-
-# Isolated-baseline table (VERDICT r12 next #6): fresh-JVM 5-run
-# medians from scripts/isolated_query.py at sf0.1 on an idle machine,
-# pinned in PERF_NOTES (r11 adjudication table, r12 watch-close + r12
-# extension). Isolated readings run 1.5-2.7× the warmed in-suite
-# anchors on this VM (JVM tiered compilation), so a flag is ruled by
-# rerunning scripts/isolated_query.py and comparing ISOLATED-vs-
-# ISOLATED against this row — never isolated-vs-warmed. Names absent
-# here have no pinned row yet; their flags say so explicitly.
-ISOLATED_BASELINE: dict[str, float] = {
-    # r16 pins (VERDICT r15 wrong #1/#3, next #2): the six outstanding
-    # adjudications from the contaminated r15 driver session — all
-    # sit at 1.5-2.3× their warmed clean-anchor values, i.e. squarely
-    # inside the documented isolated-vs-warmed tiered-compilation
-    # band, confirming the driver flags were VM noise (rulings in
-    # PERF_NOTES). text_kn_trigram_prob was the ESCALATED one — the
-    # escalation clears with this pin.
-    "text_kn_trigram_prob": 2.225,
-    "dedup_threshold_sweep": 3.741,
-    "docs_langid_agreement": 1.294,
-    "orders_value_gini": 1.412,
-    "supplier_nation_trade_matrix": 1.131,
-    "orders_cohort_ltv": 0.987,
-    # r15 pins (VERDICT r14 wrong #1/#3, next #2/#3): the IVF-PQ topk
-    # clean-anchor drift adjudicated (isolated 11.135 vs the r11 pin
-    # 10.294 = +8%, NOT the ≥1.3× the +34% anchor move suggested —
-    # session/VM state, ruling in PERF_NOTES) and the first live
-    # escalation (dedup_exact_groups) honored
-    "ann_topk_ivfpq": 11.135,  # supersedes r11's 10.294
-    "ann_topk_ivfpq_served": 12.127,
-    "dedup_exact_groups": 0.478,
-    # r14 pins (VERDICT r13 wrong #1 / next #2): the three r13 flags
-    # that self-adjudicated "session" in hot canary segments — pinned
-    # on an idle machine (load 0.09 at start) so any future flag on
-    # them arrives "isolated-baseline-pinned" instead of terminally
-    # session-ruled
-    "orders_cohort_ltv_incremental": 1.495,
-    "events_linear_attribution_daygrain": 2.665,
-    "events_session_duration_stats": 0.913,
-    # r13 adjudication runs (idle machine; the four r13 bench flags
-    # all ruled does-not-reproduce against these)
-    "semdedup_pairs": 4.491,
-    "ann_topk_bruteforce": 0.688,
-    "text_bm25_indexed_topk": 0.964,
-    "parts_copurchase_triangles": 4.788,  # supersedes r12's 5.775
-    # r12 extension table (round close, load avg ~0.1)
-    "star_revenue_by_region_year": 1.657,
-    "dedup_clusters": 4.024,
-    "text_kn_bigram_incremental": 2.505,
-    "events_heavy_hitters": 1.709,
-    "scd2_point_in_time_read": 1.389,
-    # r12 watch-close table
-    "orders_profile_drift": 1.438,
-    "events_mad_outliers": 1.178,
-    "docs_novelty_hapax": 1.387,
-    # r12 lenient-flag adjudication
-    # tpch_q9_product_profit refreshed r16 (VERDICT r15 wrong #3):
-    # the r13 pin predated two rounds of diffs and the warmed anchor
-    # had moved 0.78→1.12 (1.43×); isolated-vs-isolated reads
-    # 1.027→1.105 (+8%) — the plan did not regress, the anchor move
-    # was session/VM state plus noise-floor drift. Supersedes 1.027.
-    "tpch_q9_product_profit": 1.105,
-    "orders_monthly_forecast_eval": 1.095,
-    # r11 adjudication table
-    "dedup_by_key": 1.421,
-    "null_profile": 0.474,
-    "sas_date_decode": 0.531,
-    "docs_ngram_repetition": 1.020,
-    "text_bm25_linear_topk": 1.243,
-}
-
-
-def adjudicate_flag(
-    row: dict,
-    isolated_sec: float | None,
-    prev_ruling: str | None = None,
-) -> dict:
-    """Self-contained ruling for one lenient regression flag (VERDICT
-    r12 next #6 — flags arrive in the detail sidecar pre-adjudicated
-    instead of waiting a round for a manual protocol run). Pure so
-    tests can replay synthetic flags.
-
-    Ruling order mirrors the manual protocol PERF_NOTES r10-r12
-    applied by hand:
-    1. session — the whole session or the flag's bracketing canary
-       segment is hot; the timing lies, no plan action. A SECOND
-       consecutive session ruling on the same unpinned query
-       escalates (VERDICT r13 wrong #1: a real regression on a query
-       that only ever runs in hot segments would be session-ruled
-       round after round with nothing forcing the isolated
-       measurement);
-    2. isolated-baseline-pinned — clean segment, pinned fresh-JVM
-       median attached: rerun scripts/isolated_query.py and rule
-       isolated-vs-isolated mechanically;
-    3. unadjudicated — clean segment, no pinned row: the isolated run
-       both rules this flag AND pins the row for future rounds."""
-    out = dict(row)
-    if isolated_sec is not None:
-        out["isolated_baseline_sec"] = isolated_sec
-    if out.get("contaminated") or out.get("segment_hot"):
-        out["ruling"] = "session"
-        if isolated_sec is None and (prev_ruling or "").startswith(
-            "session"
-        ):
-            out["ruling"] = "session-repeat-run-scripts/isolated_query.py"
-    elif isolated_sec is not None:
-        out["ruling"] = "isolated-baseline-pinned"
-    else:
-        out["ruling"] = "unadjudicated-run-scripts/isolated_query.py"
-    return out
-
-
-def escalated_names(regressions: dict) -> list[str]:
-    """Names whose ruling escalated to session-repeat (ADVICE r14 #3:
-    these must reach the printed line, not just the sidecar). Pure."""
-    return sorted(
-        n
-        for n, r in regressions.items()
-        if isinstance(r, dict)
-        and str(r.get("ruling", "")).startswith("session-repeat")
-    )
-
-
-def salvage_suspects(
-    timings: dict[str, float],
-    baseline: dict[str, float],
-    qpos: dict[str, int],
-    readings: list[dict],
-    canary_base: float | None,
-) -> list[str]:
-    """Headline queries eligible for the end-of-run burst re-read
-    (VERDICT r15 next #7): flagged as a regression against the
-    committed baseline AND timed inside a hot canary segment. Pure so
-    tests can replay synthetic sessions."""
-    if not canary_base:
-        return []
-    return [
-        n
-        for n, t in timings.items()
-        if n in baseline
-        and baseline[n] > 0
-        and t > 1.5 * baseline[n]
-        and n in qpos
-        and canary_segment_context(readings, qpos[n], canary_base)[
-            "segment_hot"
-        ]
-    ]
 
 
 def _drop_persisted(spark) -> None:
@@ -663,27 +235,22 @@ def _drop_persisted(spark) -> None:
 # auto-failed.
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    # baseline loads are pure file reads — load them up front so the
-    # certification start gate can use the committed canary level
-    baseline, baseline_src, sweep_sourced = _load_baseline()
-    canary_base = baseline.get(CANARY) if baseline else None
-    check_load, check_canary = gate_checks(
-        _writer_stamp(),
-        os.environ.get("SPARK_GRAFT_BENCH_FORCE", "0").lower(),
-    )
-    if check_load:
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    if start_gated(
+        _writer_stamp(), os.environ.get("SPARK_GRAFT_BENCH_FORCE", "0")
+    ):
         try:
             load1 = os.getloadavg()[0]
         except OSError:
             load1 = None
-        reason = start_gate_verdict(load1, None, canary_base)
+        reason = start_gate_verdict(load1)
         if reason:
             _refuse(reason)
+    baseline, baseline_src, sweep_sourced = _load_baseline()
     spark = get_spark(
         app_name="bench",
         master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
+        shuffle_partitions=cpus,
         # one executor's worth of heap: a 240-query × 3-run session at
         # the default 1g flirted with executor-side GC pressure even
         # after the plan-string cap removed the listener-string OOM
@@ -691,55 +258,13 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    # warm the JVM + file listing so query 1 doesn't pay startup cost
-    QUERIES[HEADLINE[0]](spark, sf_dir).write.format("noop").mode("overwrite").save()
-
-    def _canary_run() -> float:
-        runs = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            QUERIES[CANARY](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            runs.append(time.perf_counter() - t0)
-        _drop_persisted(spark)
-        return round(sorted(runs)[1], 3)
-
-    # warm the canary's own codegen so the first MEASURED reading is
-    # as comparable to the last as early-JVM state allows (see note)
-    for _ in range(3):
-        QUERIES[CANARY](spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-    canary_first = _canary_run()
-    if check_canary:
-        # second gate checkpoint: the warmed start canary against the
-        # committed level (first-reading slack applies — see note)
-        reason = start_gate_verdict(None, canary_first, canary_base)
-        if reason:
-            spark.stop()
-            _refuse(reason)
-    # saturating canary: warm once (codegen), then median-of-3 — a
-    # single endpoint reading spread 33% on the r12 driver VM
-    saturating_canary_sec(spark, cpus)
-    sat_first, sat_first_reads = saturating_canary_median(spark, cpus)
-
-    # interleaved canary readings (VERDICT r11 wrong #3): position 0 is
-    # the endpoint first reading; one single-shot reading lands after
-    # every _CANARY_EVERY timed queries, the endpoint last reading
-    # closes the list after the sweep.
-    readings: list[dict] = [{"after_n": 0, "sec": canary_first}]
-    qpos: dict[str, int] = {}
-    timed = 0
-
-    def _canary_mark() -> None:
+    def _run(name: str) -> float:
         t0 = time.perf_counter()
-        QUERIES[CANARY](spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        readings.append(
-            {"after_n": timed, "sec": round(time.perf_counter() - t0, 3)}
-        )
+        QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+        return time.perf_counter() - t0
+
+    # warm the JVM + file listing so query 1 doesn't pay startup cost
+    _run(HEADLINE[0])
 
     # median-of-3 (VERDICT r7 #2): a single-run / best-of-2 harness
     # cannot support regression calls against a documented 0.9-1.4×
@@ -750,17 +275,8 @@ def main() -> None:
     for name in HEADLINE:
         if name not in QUERIES:
             continue
-        runs = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - t0)
-        timings[name] = round(sorted(runs)[1], 3)
-        qpos[name] = timed
-        timed += 1
+        timings[name] = round(sorted(_run(name) for _ in range(3))[1], 3)
         _drop_persisted(spark)
-        if timed % _CANARY_EVERY == 0:
-            _canary_mark()
 
     # full-registry sweep tier (VERDICT r6 #3): every registered query
     # gets ONE timing datapoint per round — single-shot (no median-of-3,
@@ -772,159 +288,27 @@ def main() -> None:
         for name in QUERIES:
             if name in timings:
                 continue
-            t0 = time.perf_counter()
             try:
-                QUERIES[name](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
+                sweep[name] = round(_run(name), 3)
             except Exception:  # noqa: BLE001 — one bad query must not
                 sweep[name] = -1.0  # sink the whole sweep; -1 = errored
-                continue
-            sweep[name] = round(time.perf_counter() - t0, 3)
-            qpos[name] = timed
-            timed += 1
             _drop_persisted(spark)
-            if timed % _CANARY_EVERY == 0:
-                _canary_mark()
 
-    # a timed-count that is an exact multiple of _CANARY_EVERY lands a
-    # mark at the same position the endpoint reading takes — drop the
-    # mark so the readings list has one entry per position and the
-    # endpoint (median-of-3) value wins
-    if readings and readings[-1]["after_n"] == timed:
-        readings.pop()
-    canary_last = _canary_run()
-    readings.append({"after_n": timed, "sec": canary_last})
-
-    # Mid-run burst salvage (VERDICT r15 next #7): attempts A/B of the
-    # r15 certification died to VM bursts the start gate cannot see.
-    # A HEADLINE query that reads as a regression AND was timed inside
-    # a hot canary segment gets ONE re-read at end of run, gated on a
-    # fresh canary re-check (a still-hot session would just re-measure
-    # the burst). The re-read is the same median-of-3 statistic and
-    # replaces the burst-inflated value; the original lands in the
-    # sidecar as evidence. Sweep rows stay single-shot by contract.
-    salvage: dict[str, dict] = {}
-    salvage_skipped: float | None = None
-    if baseline and canary_base:
-        suspects = salvage_suspects(
-            timings, baseline, qpos, readings, canary_base
-        )
-        if suspects:
-            recheck = _canary_run()
-            if canary_reading_hot(recheck, canary_base):
-                salvage_skipped = recheck
-            else:
-                for n in suspects:
-                    runs = []
-                    for _ in range(3):
-                        t0 = time.perf_counter()
-                        QUERIES[n](spark, sf_dir).write.format(
-                            "noop"
-                        ).mode("overwrite").save()
-                        runs.append(time.perf_counter() - t0)
-                    sec = round(sorted(runs)[1], 3)
-                    _drop_persisted(spark)
-                    salvage[n] = {
-                        "hot_sec": timings[n],
-                        "sec": sec,
-                        "recheck_canary_sec": recheck,
-                    }
-                    timings[n] = sec
-
-    sat_last, sat_last_reads = saturating_canary_median(spark, cpus)
-
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     out = {
         "metric": "headline_queries_total",
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
-        "sf": float(sf) if sf else None,
+        "sf": _run_sf(),
+        # baselines are only read from runs at the same core count
+        "cpus": cpus,
         "n_queries": len(timings),
-        "canary": {
-            "query": CANARY,
-            "first_sec": canary_first,
-            "last_sec": canary_last,
-            "ratio": round(canary_last / canary_first, 3)
-            if canary_first > 0
-            else None,
-            "readings": readings,
-        },
     }
-    out["sat_canary"] = {
-        "rows": _SAT_ROWS,
-        "cpus": int(cpus),  # the workload shape; ratios across
-        # different cpu counts are not comparable
-        "first_sec": sat_first,
-        "last_sec": sat_last,
-        # raw per-endpoint readings behind the medians (VERDICT r12
-        # wrong #2) — sidecar evidence for any future ruling
-        "readings": {"first": sat_first_reads, "last": sat_last_reads},
-        # best of the two endpoint MEDIANS = the least-interfered
-        # estimate of the silicon's sustained throughput
-        "best_sec": round(min(sat_first, sat_last), 3),
-        "stat": _SAT_STAT,
-    }
-    sat_base, sat_base_cpus, sat_base_stat = _load_sat_baseline()
-    if sat_base and (sat_base_cpus is None or sat_base_cpus == int(cpus)):
-        out["sat_canary"]["baseline_sec"] = sat_base
-        out["sat_canary"]["baseline_stat"] = sat_base_stat
-        if sat_base_stat == _SAT_STAT:
-            # >1 = this machine delivers LESS sustained all-core
-            # throughput per second than the committed-anchor machine;
-            # a shared_ratio reader divides by this to separate VM
-            # speed from plan changes (informational — raw timings
-            # stay raw)
-            out["sat_canary"]["throughput_ratio"] = round(
-                out["sat_canary"]["best_sec"] / sat_base, 3
-            )
-        # unlike statistic (ADVICE r13 #3): medians are systematically
-        # ≥ mins, so a cross-statistic ratio would read spuriously
-        # slow — baseline_stat stays as the annotation, no ratio
-    if canary_verdict(canary_first, canary_last):
-        # degraded under its own weight (high) / started loaded (low)
-        out["canary_contaminated"] = True
-    # VERDICT r16 next #10 (salvage transparency): total seconds the
-    # burst salvage subtracted from the headline, always on the
-    # printed line — zero on a clean run, so a reviewer can subtract
-    # it without opening the sidecar.
-    out["salvaged_delta_sec"] = (
-        round(sum(v["hot_sec"] - v["sec"] for v in salvage.values()), 3)
-        if salvage
-        else 0.0
-    )
-    if salvage:
-        out["salvage"] = salvage
-        out["salvage_n"] = len(salvage)
-    if salvage_skipped is not None:
-        # a re-read was warranted but the session was STILL hot at
-        # end of run — the flagged values stand, annotated below
-        out["salvage_skipped_canary_sec"] = salvage_skipped
     if sweep:
         out["sweep_queries"] = sweep
         out["sweep_n"] = len(sweep)
         out["sweep_total"] = round(sum(v for v in sweep.values() if v > 0), 3)
         out["bench_coverage"] = f"{len(timings) + len(sweep)}/{len(QUERIES)}"
-    if canary_base and canary_base > 0:
-        out["canary"]["baseline_sec"] = canary_base
-        if canary_verdict(canary_first, canary_last, canary_base):
-            # includes loaded-THROUGHOUT (ratio ≈ 1 but the level is
-            # high) — the uniform-load signature a ratio test misses
-            out["canary_contaminated"] = True
-        # per-reading level rulings (VERDICT r11 wrong #3): a hot
-        # mid-session reading means a transient the endpoint
-        # signatures cannot see; the count lands on the printed line,
-        # the per-reading verdicts in the detail sidecar.
-        hot_n = sum(
-            canary_reading_hot(
-                r["sec"], canary_base, is_first=(r is readings[0])
-            )
-            for r in readings
-        )
-        out["canary"]["hot_readings"] = hot_n
-        if hot_n:
-            out["canary_transient"] = True
     if baseline:
         # round-over-round on the SHARED query set (VERDICT r4 #8):
         # machine-readable so the judge reads the ratio instead of
@@ -947,59 +331,13 @@ def main() -> None:
             out["shared_ratio"] = round(cur / prev, 3)
             out["shared_n"] = len(shared)
             out["prev_bench"] = baseline_src
-            # silicon-normalized round-over-round (VERDICT r12 next
-            # #3): divide out the machines' sustained-throughput
-            # difference so a ruling like r12's semdedup_survivors
-            # +17%-on-a-slower-VM is mechanical, not argued
-            tr = out["sat_canary"].get("throughput_ratio")
-            if tr and tr > 0:
-                out["shared_ratio_normalized"] = round(
-                    out["shared_ratio"] / tr, 3
-                )
         regressions = {
             n: {"sec": t, "baseline_sec": baseline[n]}
             for n, t in timings.items()
             if n in baseline and baseline[n] > 0 and t > 1.5 * baseline[n]
         }
         if regressions:
-            prev_rulings = _load_prev_rulings()
-            for name, row in list(regressions.items()):
-                if out.get("canary_contaminated"):
-                    row["contaminated"] = True
-                # nearest interleaved readings (VERDICT r11 wrong #3):
-                # a flag inside a hot segment self-adjudicates as a
-                # session transient instead of a code regression.
-                # A SALVAGED value is already the post-burst clean
-                # re-read — the hot segment describes the discarded
-                # reading, so it must not contaminate the new one.
-                if name in salvage:
-                    row["salvaged"] = True
-                    row["hot_sec"] = salvage[name]["hot_sec"]
-                elif name in qpos:
-                    ctx = canary_segment_context(
-                        readings, qpos[name], canary_base
-                    )
-                    row.update(ctx)
-                    if ctx["segment_hot"]:
-                        row["contaminated"] = True
-                # pre-adjudication (VERDICT r12 next #6): attach the
-                # pinned isolated-baseline row + a mechanical ruling;
-                # the previous round's ruling feeds the repeat-session
-                # escalation (VERDICT r13 wrong #1)
-                regressions[name] = adjudicate_flag(
-                    row,
-                    ISOLATED_BASELINE.get(name),
-                    prev_ruling=prev_rulings.get(name),
-                )
             out["regressions"] = regressions
-            # ADVICE r14 #3: an escalated ruling buried in the sidecar
-            # can keep escalating forever without the isolated run
-            # happening — surface the names on the PRINTED line (the
-            # one the driver records) so the protocol run is demanded
-            # where the next round will read it
-            escalated = escalated_names(regressions)
-            if escalated:
-                out["escalations"] = escalated
     _write_detail(out)
     print(json.dumps(_fit_line(out)))
     spark.stop()
@@ -1008,101 +346,57 @@ def main() -> None:
 # the driver's stdout tail buffer; the printed line must stay under it
 _TAIL_BUDGET = 1900
 # The one-line JSON contract exists FOR the driver's per-query
-# comparison (VERDICT r16 wrong #1: 11 adjudication rulings consumed
-# the whole budget and PERF got an empty per_query map two rounds
-# running). Per-query timings therefore have a guaranteed minimum
-# quota on the line; regression self-adjudication is compressed to
-# top-N severity with name+sec+baseline+ruling, everything else
-# sidecar-only.
+# comparison (VERDICT r16 wrong #1: regression rows consumed the whole
+# budget and PERF got an empty per_query map two rounds running), so
+# the heaviest timings have a guaranteed quota on the line ahead of
+# the regression rows.
 _MIN_LINE_QUERIES = 15
-_MAX_LINE_REGRESSIONS = 3
 
 
 def _fit_line(out: dict) -> dict:
-    """Shrink the printed line under the driver's 2000-char tail
-    capture: keep totals/ratios, guarantee a minimum quota of
-    heaviest-first per-query timings, then compressed regressions."""
-    compact = dict(out)
-    # the sweep map is sidecar-only (sweep_n/sweep_total/bench_coverage
-    # summarize it on the line)
-    compact.pop("sweep_queries", None)
-    # per-query salvage evidence is sidecar-only (salvage_n,
-    # salvaged_delta_sec + the per-regression "salvaged" annotation
-    # summarize it on the line)
-    compact.pop("salvage", None)
-    # interleaved canary readings are sidecar-only too (hot_readings
-    # summarizes them on the line)
-    if "readings" in compact.get("canary", {}):
-        compact["canary"] = {
-            k: v for k, v in compact["canary"].items() if k != "readings"
-        }
-    # sat-canary raw readings are sidecar-only too (the medians stay)
-    if "readings" in compact.get("sat_canary", {}):
-        compact["sat_canary"] = {
-            k: v for k, v in compact["sat_canary"].items() if k != "readings"
-        }
-    if len(json.dumps(compact)) <= _TAIL_BUDGET:
-        return compact
-    compact["detail"] = os.path.basename(_detail_path())
-    # compress regressions: top-N by severity ratio, each reduced to
-    # sec/baseline_sec/ruling (full adjudication rows live in the
-    # sidecar); the omitted count stays visible
-    regs = out.get("regressions") or {}
+    """Shrink the printed line under the driver's tail capture: drop
+    the sweep map (sweep_n/sweep_total/bench_coverage summarize it),
+    then add per-query timings heaviest first — the first
+    _MIN_LINE_QUERIES, then the regressions most severe first, then
+    the rest — until the budget is reached. The omitted counts stay on
+    the line; the detail sidecar has everything."""
+    line = {k: v for k, v in out.items() if k != "sweep_queries"}
+    if len(json.dumps(line)) <= _TAIL_BUDGET:
+        return line
+    line["detail"] = os.path.basename(_detail_path())
+    queries = sorted(out["queries"].items(), key=lambda kv: -kv[1])
+    regs = sorted(
+        (out.get("regressions") or {}).items(),
+        key=lambda kv: -kv[1]["sec"] / kv[1]["baseline_sec"],
+    )
+    # the omitted counts start at their maximum, so filling can only
+    # shorten them and never push a line that fit over the budget
+    line["queries"], line["queries_omitted"] = {}, len(queries)
     if regs:
-        ranked_r = sorted(
-            regs.items(),
-            key=lambda kv: -(
-                kv[1].get("sec", 0.0)
-                / max(kv[1].get("baseline_sec") or 1e-9, 1e-9)
-            ),
-        )
-        compact["regressions"] = {
-            n: {
-                "sec": r.get("sec"),
-                "baseline_sec": r.get("baseline_sec"),
-                "ruling": r.get("ruling"),
-            }
-            for n, r in ranked_r[:_MAX_LINE_REGRESSIONS]
-        }
-        if len(regs) > _MAX_LINE_REGRESSIONS:
-            compact["regressions_omitted"] = len(regs) - _MAX_LINE_REGRESSIONS
+        line["regressions"], line["regressions_omitted"] = {}, len(regs)
 
-    ranked = sorted(out["queries"].items(), key=lambda kv: -kv[1])
-    kept: dict[str, float] = {}
-    compact["queries"] = kept
+    def _fill(key: str, items: list) -> bool:
+        for name, v in items:
+            line[key][name] = v
+            if len(json.dumps(line)) > _TAIL_BUDGET:
+                del line[key][name]
+                return False
+        return True
 
-    def _fill_queries() -> None:
-        kept.clear()
-        compact["queries_omitted"] = len(ranked)
-        for name, sec in ranked:
-            kept[name] = sec
-            compact["queries_omitted"] = len(ranked) - len(kept)
-            if len(json.dumps(compact)) > _TAIL_BUDGET:
-                del kept[name]
-                compact["queries_omitted"] = len(ranked) - len(kept)
-                break
-
-    _fill_queries()
-    # the quota is the contract: if compressed rulings still crowd the
-    # timings out, shrink them to name→ruling, then drop the block
-    # entirely (count stays) — the sidecar has every detail
-    if len(kept) < _MIN_LINE_QUERIES and compact.get("regressions"):
-        compact["regressions"] = {
-            n: r.get("ruling") for n, r in compact["regressions"].items()
-        }
-        _fill_queries()
-    if len(kept) < _MIN_LINE_QUERIES and compact.get("regressions"):
-        compact.pop("regressions")
-        compact["regressions_omitted"] = len(regs)
-        _fill_queries()
-    return compact
+    # stop at the first timing that does not fit, so every kept timing
+    # is at least every omitted one
+    if _fill("queries", queries[:_MIN_LINE_QUERIES]):
+        _fill("regressions", regs)
+        _fill("queries", queries[_MIN_LINE_QUERIES:])
+    line["queries_omitted"] = len(queries) - len(line["queries"])
+    if regs:
+        line["regressions_omitted"] = len(regs) - len(line["regressions"])
+    return line
 
 
 def _newest_round() -> int:
-    import re
-
     n = -1
-    for f in __import__("glob").glob(
+    for f in glob.glob(
         os.path.join(os.path.dirname(__file__), "BENCH_r*.json")
     ):
         m = re.search(r"BENCH_r(\d+)\.json$", f)
@@ -1114,24 +408,20 @@ def _newest_round() -> int:
 def _writer_stamp() -> str:
     """Who is running this bench: ``driver`` (the grading driver's
     per-round run — the default, it sets no env) or ``builder``
-    (export SPARK_GRAFT_BENCH_WRITER=builder for certified-anchor
-    runs). Stamped into the detail filename so the two runs COEXIST
-    instead of the driver's noisier run clobbering the builder's
-    canary-certified anchor (VERDICT r13 wrong #2)."""
-    import re
-
+    (export SPARK_GRAFT_BENCH_WRITER=builder for anchor runs).
+    Stamped into the detail filename so the two runs COEXIST instead
+    of the driver's noisier run clobbering the builder's anchor
+    (VERDICT r13 wrong #2)."""
     w = os.environ.get("SPARK_GRAFT_BENCH_WRITER", "driver").lower()
     return re.sub(r"[^a-z0-9_-]", "", w) or "driver"
 
 
 def _detail_candidates(n: int, root: str | None = None) -> list[str]:
     """Possible sidecar files for round ``n``'s bench run, preference
-    order: builder (canary-certified anchor runs), driver, any OTHER
-    writer stamp found on disk (ADVICE r14 #2: a sidecar written under
-    a custom SPARK_GRAFT_BENCH_WRITER was silently never loaded as a
-    baseline), then the legacy unstamped name (pre-r14 files)."""
-    import glob
-
+    order: builder (anchor runs), driver, any OTHER writer stamp found
+    on disk (ADVICE r14 #2: a sidecar written under a custom
+    SPARK_GRAFT_BENCH_WRITER was silently never loaded as a baseline),
+    then the legacy unstamped name (pre-r14 files)."""
     root = root or os.path.dirname(__file__)
     base = os.path.join(root, f"BENCH_DETAIL_after_r{n:02d}")
     known = [base + "_builder.json", base + "_driver.json"]
@@ -1142,17 +432,16 @@ def _detail_candidates(n: int, root: str | None = None) -> list[str]:
         if p not in known
         and p != legacy
         # archived attempts (".attemptN.json", VERDICT r15 next #3)
-        # are rerun evidence, never baseline candidates — a hot
-        # attempt A must not anchor a round the clean attempt C
-        # already anchors
+        # are rerun evidence, never baseline candidates — an aborted
+        # attempt must not anchor a round the final attempt anchors
         and ".attempt" not in os.path.basename(p)
     )
     return known + extra + [legacy]
 
 
 def _run_sf() -> float | None:
-    """The scale factor THIS run targets, parsed from the env the
-    same way main() stamps it into the sidecar."""
+    """The scale factor THIS run targets, parsed from the directory
+    name (``.../sf0.1``); None when the name carries none."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     try:
         return float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
@@ -1160,99 +449,52 @@ def _run_sf() -> float | None:
         return None
 
 
-def _sf_mismatch(data: dict, run_sf: float | None) -> bool:
-    """ADVICE r15 #1: a canary-clean sidecar written at a DIFFERENT
-    scale factor (the documented sf0.01 smoke recipe) must never
-    anchor this run's baselines — at sf0.1 it would read ~10× low and
-    flag every query. Missing/None sf on either side degrades to
-    'no opinion' (legacy sidecars predate the field)."""
-    sf = data.get("sf")
-    if run_sf is None or not isinstance(sf, (int, float)):
-        return False
-    return abs(float(sf) - run_sf) > 1e-9
+def _run_cpus() -> int | None:
+    """The core count THIS run uses, parsed the way main() does."""
+    try:
+        return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    except ValueError:
+        return None
 
 
-def _detail_clean(data: dict) -> bool:
-    """A sidecar whose own canary evidence says the session was clean
-    — the run worth anchoring the next round's baseline to. A missing
-    or hand-mangled canary block (ADVICE r12 #3 discipline: bad
-    sidecars degrade, never crash the bench) counts as NOT clean —
-    no evidence is not evidence of cleanliness."""
-    canary = data.get("canary")
-    if not isinstance(canary, dict):
+def _mismatch(data: dict, key: str, want: float | None) -> bool:
+    """True when ``data[key]`` and this run's value are both numbers
+    and differ. A sidecar or wrapper written at a different scale
+    factor (ADVICE r15 #1: at sf0.1 an sf0.01 smoke run reads ~10× low
+    and flags every query) or core count (an 8-core run is no baseline
+    for a 32-core one) must never anchor this run's baselines.
+    Missing/None on either side degrades to 'no opinion' (legacy files
+    predate the field)."""
+    have = data.get(key)
+    if want is None or not isinstance(have, (int, float)):
         return False
-    return (
-        not data.get("canary_contaminated")
-        and not data.get("canary_transient")
-        and not canary.get("hot_readings", 0)
+    return not isinstance(have, bool) and abs(float(have) - want) > 1e-9
+
+
+def _foreign(data: dict) -> bool:
+    """Written at another scale factor or core count than this run."""
+    return _mismatch(data, "sf", _run_sf()) or _mismatch(
+        data, "cpus", _run_cpus()
     )
 
 
 def _load_prev_detail(root: str | None = None) -> tuple[dict, str]:
-    """The previous round's best detail sidecar: the first CLEAN
-    candidate in preference order, else the first that exists at all.
-    Returns ({}, "") when none exists."""
+    """The previous round's detail sidecar: the first candidate in
+    preference order that parses to a dict and was written at this
+    run's scale and core count. Returns ({}, "") when none exists."""
     n = _newest_round()
     if n < 0:
         return {}, ""
-    run_sf = _run_sf()
-    first: tuple[dict, str] | None = None
     for path in _detail_candidates(n - 1, root):
         try:
             with open(path) as f:
                 data = json.load(f)
         except (OSError, ValueError):
             continue
-        if not isinstance(data, dict):
-            continue  # hand-mangled sidecar (a bare list/str) degrades
-        if _sf_mismatch(data, run_sf):
-            continue  # a smoke-scale sidecar is not a baseline
-        if first is None:
-            first = (data, path)
-        if _detail_clean(data):
+        # a hand-mangled sidecar (a bare list/str) degrades to skipped
+        if isinstance(data, dict) and not _foreign(data):
             return data, path
-    return first if first is not None else ({}, "")
-
-
-def _load_prev_rulings(root: str | None = None) -> dict[str, str]:
-    """name → previous-round flag ruling, merged across ALL of the
-    previous round's sidecars (builder + driver + legacy), with
-    session-family rulings winning collisions.
-
-    Deliberately NOT _load_prev_detail: that chooser prefers a
-    canary-CLEAN sidecar, and a clean sidecar can by construction
-    never carry a "session" ruling (the ruling requires a hot segment,
-    which makes its sidecar unclean) — reading rulings through it
-    would make the repeat-session escalation unreachable. Here the
-    hot driver run's rulings are exactly the evidence wanted."""
-    n = _newest_round()
-    merged: dict[str, str] = {}
-    if n < 0:
-        return merged
-    run_sf = _run_sf()
-    for path in _detail_candidates(n - 1, root):
-        try:
-            with open(path) as f:
-                data = json.load(f)
-        except (OSError, ValueError):
-            continue
-        if not isinstance(data, dict):
-            continue
-        if _sf_mismatch(data, run_sf):
-            continue  # smoke-scale rulings don't feed escalations
-        regs = data.get("regressions")
-        if not isinstance(regs, dict):
-            continue
-        for name, row in regs.items():
-            ruling = row.get("ruling") if isinstance(row, dict) else None
-            if not isinstance(ruling, str):
-                continue
-            if name not in merged or (
-                ruling.startswith("session")
-                and not merged[name].startswith("session")
-            ):
-                merged[name] = ruling
-    return merged
+    return {}, ""
 
 
 def _detail_path() -> str:
@@ -1264,12 +506,11 @@ def _detail_path() -> str:
 
 def _archive_attempt(path: str) -> str | None:
     """VERDICT r15 next #3: the sidecar is keyed round+writer, so a
-    rerun used to DESTROY the previous attempt's full per-query map
-    (r15 lost attempt A's evidence to attempt C's overwrite; only the
-    printed line survived). Before overwriting, move the existing
-    file to the first free ``<stem>.attemptN.json`` — excluded from
-    _detail_candidates' baseline glob, so a hot attempt can never
-    become an anchor. Returns the archive path, or None."""
+    rerun used to DESTROY the previous attempt's full per-query map.
+    Before overwriting, move the existing file to the first free
+    ``<stem>.attemptN.json`` — excluded from _detail_candidates'
+    baseline glob, so an aborted attempt can never become an anchor.
+    Returns the archive path, or None."""
     if not os.path.exists(path):
         return None
     stem = path[: -len(".json")]
@@ -1298,15 +539,12 @@ def _write_detail(out: dict) -> None:
 def _load_baseline() -> tuple[dict[str, float], str, set[str]]:
     """Previous-round per-query baseline, rebuilt from (a) the full
     detail file the previous round's bench run wrote and (b) the
-    driver-committed BENCH_r{N}.json parsed line (authoritative where
-    present, possibly a heaviest-first subset), falling back through
-    older rounds for names neither covers. Third return: names whose
-    baseline came only from a single-shot sweep datapoint."""
-    import glob
-    import re
-
+    driver-committed BENCH_r{N}.json parsed lines: the newest one
+    written at this run's scale and core count is authoritative
+    (possibly a heaviest-first subset), older ones only fill names
+    nothing newer covers. Third return: names whose baseline came only
+    from a single-shot sweep datapoint."""
     root = os.path.dirname(__file__)
-    run_sf = _run_sf()
     merged: dict[str, float] = {}
     sweep_sourced: set[str] = set()
     src = []
@@ -1321,39 +559,30 @@ def _load_baseline() -> tuple[dict[str, float], str, set[str]]:
         merged.update(data.get("queries", {}))
         sweep_sourced -= set(data.get("queries", {}))
         src.append(os.path.basename(detail))
-    # newest-first driver files: authoritative where parsed
+    # newest first; same-round files (BENCH_r17.json, BENCH_r17_c8.json)
+    # in name order so the result never depends on glob order
     files = sorted(
         glob.glob(os.path.join(root, "BENCH_r*.json")),
-        key=lambda f: -int(re.search(r"BENCH_r(\d+)", f).group(1)),
+        key=lambda f: (-int(re.search(r"BENCH_r(\d+)", f).group(1)), f),
     )
-    for i, f in enumerate(files):
+    newest = True
+    for f in files:
         try:
             with open(f) as fh:
                 data = json.load(fh)
-            parsed = data.get("parsed", data)
-            # ADVICE r15 #1 extended: driver wrappers are sf-stamped
-            # too — an sf0.01 smoke run must not read the driver's
-            # sf0.1 lines as baselines (they flagged every smoke
-            # query as a fake regression)
-            if isinstance(parsed, dict) and _sf_mismatch(parsed, run_sf):
-                continue
-            qs = dict(parsed.get("queries", {})) if parsed else {}
-            if not qs:
-                # truncated line (r05): salvage "name": sec pairs
-                # from the recorded tail, skipping scalar meta keys
-                meta = {
-                    "value", "sf", "n_queries", "shared_total",
-                    "prev_shared_total", "shared_ratio", "shared_n",
-                    "sec", "baseline_sec", "queries_omitted",
-                }
-                for m2 in re.finditer(
-                    r'"([a-z0-9_]+)": ([0-9]+\.[0-9]+)', data.get("tail", "")
-                ):
-                    if m2.group(1) not in meta:
-                        qs[m2.group(1)] = float(m2.group(2))
         except (OSError, ValueError):
             continue
-        fresh = {k: v for k, v in qs.items() if i == 0 or k not in merged}
+        if not isinstance(data, dict):
+            continue
+        # the wrapper stamps sf/cpus at top level; a truncated line
+        # (r05) has "parsed": null and contributes no timings
+        parsed = data.get("parsed", data)
+        parsed = parsed if isinstance(parsed, dict) else {}
+        if _foreign(data) or _foreign(parsed):
+            continue
+        qs = parsed.get("queries") or {}
+        fresh = {k: v for k, v in qs.items() if newest or k not in merged}
+        newest = False
         if fresh:
             merged.update(fresh)
             sweep_sourced -= set(fresh)  # a real headline datapoint wins

@@ -1,13 +1,12 @@
-"""Isolated single-query timing harness (the PERF_NOTES adjudication
-protocol, VERDICT r10 #2).
+"""Isolated single-query timing harness.
 
 Fresh JVM, one generic warmup, then the target query N times with a
 persisted-block sweep between runs — the query executes FIRST in its
-own session, so no cumulative-session state (the contamination class
-that produced the r10 flags) can touch it. Isolated medians read
-~1.5× above the warmed in-suite bench (JVM tiered compilation), so
-compare isolated-vs-isolated or use them one-directionally: a flagged
-value that does NOT reproduce here was session state, not a plan.
+own session, so no cumulative-session state can touch it. Isolated
+medians read ~1.5× above the warmed in-suite bench (JVM tiered
+compilation), so compare isolated-vs-isolated or use them
+one-directionally: a bench regression flag that does NOT reproduce
+here was session state, not a plan.
 
 Usage: python scripts/isolated_query.py <query_name> [runs]
 Prints one JSON line {"query", "runs", "median"}.

@@ -279,9 +279,6 @@ def test_bench_and_probe_names_are_registered():
     missing_p = [n for n in probe.PROBE_QUERIES if n not in QUERIES]
     assert not missing_b, f"bench names not registered: {missing_b}"
     assert not missing_p, f"probe names not registered: {missing_p}"
-    # the canary runs first/last every session — an unregistered name
-    # would crash the bench before any timing lands
-    assert bench.CANARY in QUERIES
     # and no duplicates padding the lists
     assert len(bench.HEADLINE) == len(set(bench.HEADLINE))
     assert len(probe.PROBE_QUERIES) == len(set(probe.PROBE_QUERIES))

@@ -112,38 +112,6 @@ def test_kn_bigram_merge_on_empty_batch(spark, sf_dir):
     assert typesm.collect() == ftypes.collect()
 
 
-def test_canary_verdict_signatures():
-    """The bench canary's three contamination signatures as a pure
-    decision table (the r11 calibration data as fixtures): degraded
-    during run, started loaded, loaded throughout — and the idle
-    structural ratios (~0.4-0.5) must NOT trip it."""
-    import importlib.util
-    import os
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "bench_mod", os.path.join(root, "bench.py")
-    )
-    bench = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bench)
-    v = bench.canary_verdict
-    # idle sessions observed this round: clean
-    assert not v(0.373, 0.185, 0.199)   # bench5 (the committed anchor)
-    assert not v(0.403, 0.203, 0.199)   # bench3
-    assert not v(0.25, 0.25, 0.199)     # flat and at level
-    # started loaded (ratio < 1/3): bench4's transient-load session
-    assert v(1.132, 0.201, 0.199)
-    # degraded during the run (ratio > 1.5)
-    assert v(0.2, 0.35)
-    # loaded THROUGHOUT: ratio ≈ 1 but both readings over level
-    assert v(0.6, 0.55, 0.199)
-    # no baseline → level test silently off, ratio tests still live
-    assert not v(0.6, 0.55)
-    # degenerate first: no ratio, level may still decide
-    assert not v(0.0, 0.2)
-    assert v(0.4, 0.4, 0.199)
-
-
 def test_derive_k_policy():
     """The policy itself: ⌈n/target⌉ with a floor, deterministic,
     monotone in n — doubling the corpus at least doubles-ish k, so

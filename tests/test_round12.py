@@ -57,70 +57,6 @@ def test_rebuild_fill_skew_threshold_tracks_nlist():
     assert "* 8 >" not in src
 
 
-def _bench_mod():
-    import importlib.util
-    import os
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "bench_mod_r12", os.path.join(root, "bench.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
-
-def test_canary_reading_hot_levels():
-    """VERDICT r11 #3: per-reading level rulings. The first reading
-    gets 2× slack (idle sessions structurally read ~2× baseline at
-    position 0 — r11 calibration first 0.396 / baseline 0.199), every
-    later reading is judged at the plain 1.5× limit; no baseline →
-    no absolute ruling."""
-    b = _bench_mod()
-    base = 0.2
-    # idle endpoints (r11 calibration values) must NOT flag
-    assert not b.canary_reading_hot(0.396, base, is_first=True)
-    assert not b.canary_reading_hot(0.188, base)
-    # a mid-session reading at 2× baseline IS hot
-    assert b.canary_reading_hot(0.4, base)
-    assert not b.canary_reading_hot(0.29, base)
-    # first-reading slack: hot only past 3× baseline
-    assert b.canary_reading_hot(0.65, base, is_first=True)
-    # no baseline → never an absolute ruling
-    assert not b.canary_reading_hot(5.0, None)
-    assert not b.canary_reading_hot(5.0, 0.0)
-
-
-def test_canary_segment_context_adjudicates_mid_session_spike():
-    """The r11 parts_copurchase_triangles shape: endpoints clean, one
-    hot reading in the middle — queries inside the hot segment rule
-    contaminated, queries elsewhere stay clean."""
-    b = _bench_mod()
-    base = 0.2
-    readings = [
-        {"after_n": 0, "sec": 0.40},   # endpoint first (structural 2×)
-        {"after_n": 25, "sec": 0.21},
-        {"after_n": 50, "sec": 0.66},  # mid-session spike
-        {"after_n": 75, "sec": 0.20},
-        {"after_n": 100, "sec": 0.19},  # endpoint last — ratio clean
-    ]
-    # endpoint signatures all pass: the old canary is blind here
-    assert not b.canary_verdict(0.40, 0.19, base)
-    spiked = b.canary_segment_context(readings, 40, base)
-    assert spiked["segment_hot"]
-    assert spiked["canary_before"] == 0.21
-    assert spiked["canary_after"] == 0.66
-    also = b.canary_segment_context(readings, 60, base)
-    assert also["segment_hot"] and also["canary_before"] == 0.66
-    clean = b.canary_segment_context(readings, 80, base)
-    assert not clean["segment_hot"]
-    early = b.canary_segment_context(readings, 10, base)
-    assert not early["segment_hot"]  # first-reading slack holds
-    # position past the last reading: only the 'before' side exists
-    tail = b.canary_segment_context(readings, 100, base)
-    assert "canary_after" not in tail and not tail["segment_hot"]
-
-
 def test_governance_pair_parity_fast(spark, sf_dir):
     """Direct oracle parity for the two re-earned queries (they also
     run in the full test_oracle_parity sweep; this pins the r12 switch
@@ -586,23 +522,6 @@ def test_stream_kn_trigram_counts_matches_rebuild(spark, sf_dir, tmp_path):
     q2 = stream_kn_trigram_counts(stream2, table, ckpt)
     q2.awaitTermination()
     assert spark.read.parquet(table).count() == n_rows
-
-
-def test_saturating_canary(spark):
-    """The round-12 throughput canary: a fixed all-core arithmetic
-    fold (no I/O, no shuffle) whose seconds give cross-round bench
-    comparisons a machine-speed denominator — the r12 anchor showed a
-    VM at per-query baseline on every sub-second query while the
-    32-thread-saturating families read ~1.1-1.3×. Shrunk row count
-    here: only the mechanism is under test."""
-    b = _bench_mod()
-    sec = b.saturating_canary_sec(spark, cpus=4, rows=1 << 20)
-    assert sec > 0
-    # baseline loader never raises; (best_sec, cpus, stat) or Nones
-    base, cpus, stat = b._load_sat_baseline()
-    assert base is None or (isinstance(base, float) and base > 0)
-    assert cpus is None or (isinstance(cpus, int) and cpus > 0)
-    assert stat is None or isinstance(stat, str)
 
 
 def test_lm_quality_score_draft_oracle_parity(spark, sf_dir):

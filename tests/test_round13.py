@@ -1,27 +1,11 @@
 """Round-13 pins: the compaction swap's last-rename window + lossless
-crash rollback (VERDICT r12 wrong #1, ADVICE r12 #1/#2), the
-median-of-3 saturating canary + normalized round ratio (VERDICT r12
-wrong #2 / next #3), and the pre-adjudicated regression flags
-(VERDICT r12 next #6)."""
+crash rollback (VERDICT r12 wrong #1, ADVICE r12 #1/#2)."""
 
 from __future__ import annotations
 
-import json
 import os
 
 import pytest
-
-
-def _bench_mod():
-    import importlib.util
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "bench_mod_r13", os.path.join(root, "bench.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
 
 
 def _bigram_table(spark, sf_dir, tmp_path, name, n_appends=3, limit=40):
@@ -207,95 +191,6 @@ def test_kn_compaction_midswap_rollback_folds_recreated_live_path(
     assert _served(spark, table) == want
     assert not os.path.isdir(table + "__old")
     assert not os.path.isdir(table + "__compacting")
-
-
-def test_saturating_canary_median(spark):
-    """VERDICT r12 wrong #2: single endpoint readings spread 33% on a
-    busy VM; the endpoint statistic is now median-of-3 with the raw
-    readings recorded for the sidecar."""
-    b = _bench_mod()
-    med, reads = b.saturating_canary_median(spark, cpus=4, rows=1 << 20)
-    assert len(reads) == 3 and all(r > 0 for r in reads)
-    assert med == sorted(reads)[1]
-
-
-def test_load_sat_baseline_never_raises_on_bad_sidecar(tmp_path):
-    """ADVICE r12 #3: a hand-edited sidecar with a non-numeric
-    best_sec used to TypeError at `val > 0` and crash the bench at
-    startup; it must degrade to no-baseline instead."""
-    b = _bench_mod()
-    (tmp_path / "BENCH_r09.json").write_text("{}")
-    for bad in ('"oops"', "[1, 2]", "null", "true"):
-        (tmp_path / "BENCH_DETAIL_after_r08.json").write_text(
-            '{"sat_canary": {"best_sec": %s, "cpus": 32}}' % bad
-        )
-        b.__dict__["__file__"] = str(tmp_path / "bench.py")
-        base, cpus, stat = b._load_sat_baseline()
-        assert base is None and cpus is None and stat is None
-    # and a good sidecar still loads (no readings/stat field → the
-    # pre-median single-reading statistic is inferred, ADVICE r13 #3)
-    (tmp_path / "BENCH_DETAIL_after_r08.json").write_text(
-        '{"sat_canary": {"best_sec": 0.307, "cpus": 32}}'
-    )
-    base, cpus, stat = b._load_sat_baseline()
-    assert base == 0.307 and cpus == 32 and stat == "single"
-
-
-def test_adjudicate_flag_rulings():
-    """VERDICT r12 next #6: lenient flags arrive in the detail sidecar
-    pre-adjudicated — session rulings beat isolated rows, pinned rows
-    make the isolated protocol mechanical, unpinned flags say exactly
-    what to run."""
-    b = _bench_mod()
-    # hot segment → session, even with a pinned row attached
-    row = b.adjudicate_flag(
-        {"sec": 2.0, "baseline_sec": 1.0, "segment_hot": True}, 1.4
-    )
-    assert row["ruling"] == "session"
-    assert row["isolated_baseline_sec"] == 1.4
-    # contaminated session → session
-    row = b.adjudicate_flag(
-        {"sec": 2.0, "baseline_sec": 1.0, "contaminated": True}, None
-    )
-    assert row["ruling"] == "session"
-    # clean + pinned → mechanical isolated-vs-isolated comparison
-    row = b.adjudicate_flag({"sec": 2.0, "baseline_sec": 1.0}, 1.4)
-    assert row["ruling"] == "isolated-baseline-pinned"
-    assert row["isolated_baseline_sec"] == 1.4
-    # clean + unpinned → names the protocol to run
-    row = b.adjudicate_flag({"sec": 2.0, "baseline_sec": 1.0}, None)
-    assert "isolated_query" in row["ruling"]
-    assert "isolated_baseline_sec" not in row
-    # the pinned table only names registered queries
-    from udacitycapstonedataengineer_spark.plans.queries import QUERIES
-
-    unknown = [n for n in b.ISOLATED_BASELINE if n not in QUERIES]
-    assert not unknown, unknown
-
-
-def test_fit_line_strips_sat_readings():
-    """Raw sat-canary readings are sidecar-only; the printed line
-    keeps the medians and stays under the driver's tail buffer."""
-    b = _bench_mod()
-    out = {
-        "metric": "headline_queries_total",
-        "value": 1.0,
-        "queries": {"q": 1.0},
-        "canary": {"first_sec": 0.2, "readings": [{"after_n": 0, "sec": 0.2}]},
-        "sat_canary": {
-            "first_sec": 0.3,
-            "last_sec": 0.31,
-            "best_sec": 0.3,
-            "readings": {"first": [0.3, 0.31, 0.3], "last": [0.31]},
-        },
-    }
-    line = b._fit_line(out)
-    assert "readings" not in line["canary"]
-    assert "readings" not in line["sat_canary"]
-    assert line["sat_canary"]["best_sec"] == 0.3
-    assert len(json.dumps(line)) <= b._TAIL_BUDGET
-    # the original dict (what the sidecar gets) is untouched
-    assert "readings" in out["sat_canary"]
 
 
 def test_session_caps_plan_string_length():

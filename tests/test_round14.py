@@ -1,13 +1,11 @@
 """Round-14 pins: the reclaim loop's orphan-subdirectory sweep
 (ADVICE r13 #1 — a dead writer's ``_temporary/`` must not wedge
 recovery forever), its in-flight-writer safety, the empty-dir rename
-hole documented in ADVICE r13 #2, the writer-stamped bench detail
-sidecars (VERDICT r13 wrong #2 / next #4), and the sat-canary
-statistic-kind annotation (ADVICE r13 #3).
+hole documented in ADVICE r13 #2.
 
-No Spark session needed: ``_reclaim_live_path`` is pure-filesystem by
-design (the swap's last window must stay JVM-free), and the bench
-loaders are exercised on tmp_path sidecar trees.
+No Spark session needed for the reclaim pins: ``_reclaim_live_path``
+is pure-filesystem by design (the swap's last window must stay
+JVM-free).
 """
 
 from __future__ import annotations
@@ -21,18 +19,6 @@ from udacitycapstonedataengineer_spark.streaming.text import (
     _reclaim_live_path,
     _sweep_orphan_dir,
 )
-
-
-def _bench_mod():
-    import importlib.util
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "bench_mod_r14", os.path.join(root, "bench.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
 
 
 def _mk_swap_state(tmp_path):
@@ -184,150 +170,6 @@ def test_reclaim_rename_replaces_empty_recreated_dir(tmp_path, monkeypatch):
     assert not os.path.exists(src)
 
 
-def test_detail_path_is_writer_stamped(tmp_path, monkeypatch):
-    """VERDICT r13 wrong #2 / next #4: the driver's per-round bench
-    run used to clobber the builder's canary-certified anchor — the
-    sidecar path now carries the writer stamp so both coexist."""
-    b = _bench_mod()
-    (tmp_path / "BENCH_r13.json").write_text("{}")
-    b.__dict__["__file__"] = str(tmp_path / "bench.py")
-    monkeypatch.delenv("SPARK_GRAFT_BENCH_WRITER", raising=False)
-    assert b._detail_path().endswith("BENCH_DETAIL_after_r13_driver.json")
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_WRITER", "builder")
-    assert b._detail_path().endswith("BENCH_DETAIL_after_r13_builder.json")
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_WRITER", "We?ird//")
-    assert b._detail_path().endswith("BENCH_DETAIL_after_r13_weird.json")
-
-
-def _sidecar(clean: bool, tag: str) -> str:
-    import json
-
-    return json.dumps(
-        {
-            "queries": {tag: 1.0},
-            "canary": {"hot_readings": 0 if clean else 2},
-            "canary_transient": None if clean else True,
-            "sat_canary": {
-                "best_sec": 0.3,
-                "cpus": 32,
-                "stat": "median3",
-                "readings": {"first": [0.3], "last": [0.31]},
-            },
-        }
-    )
-
-
-def test_prev_detail_prefers_clean_then_builder(tmp_path):
-    """Baseline anchoring: a canary-clean sidecar beats a hot one
-    regardless of writer; among equally-(un)clean candidates the
-    builder's certified-anchor slot wins; the legacy unstamped name
-    (pre-r14 files) is the last fallback."""
-    b = _bench_mod()
-    (tmp_path / "BENCH_r09.json").write_text("{}")
-    b.__dict__["__file__"] = str(tmp_path / "bench.py")
-
-    # legacy only
-    (tmp_path / "BENCH_DETAIL_after_r08.json").write_text(
-        _sidecar(False, "legacy")
-    )
-    data, path = b._load_prev_detail()
-    assert "legacy" in data["queries"] and path.endswith("r08.json")
-
-    # hot builder + clean driver → the CLEAN run wins
-    (tmp_path / "BENCH_DETAIL_after_r08_builder.json").write_text(
-        _sidecar(False, "builder")
-    )
-    (tmp_path / "BENCH_DETAIL_after_r08_driver.json").write_text(
-        _sidecar(True, "driver")
-    )
-    data, path = b._load_prev_detail()
-    assert "driver" in data["queries"]
-
-    # both clean → builder preferred
-    (tmp_path / "BENCH_DETAIL_after_r08_builder.json").write_text(
-        _sidecar(True, "builder")
-    )
-    data, path = b._load_prev_detail()
-    assert "builder" in data["queries"]
-
-    # both hot → first existing in preference order (builder)
-    (tmp_path / "BENCH_DETAIL_after_r08_builder.json").write_text(
-        _sidecar(False, "builder")
-    )
-    (tmp_path / "BENCH_DETAIL_after_r08_driver.json").write_text(
-        _sidecar(False, "driver")
-    )
-    data, path = b._load_prev_detail()
-    assert "builder" in data["queries"]
-
-    # the per-query baseline loader rides the same chooser
-    merged, src, _swp = b._load_baseline()
-    assert "builder" in merged and "r08_builder" in src
-
-
-def test_sat_stat_recorded_and_mismatch_skips_ratio(tmp_path):
-    """ADVICE r13 #3: best_sec's statistic changed min→median in r13;
-    a ratio across unlike statistics is biased (median ≥ min), so the
-    sidecar records the statistic kind and the loader surfaces it —
-    explicit ``stat`` field where written, inferred for older files
-    (readings ⇒ median3, bare ⇒ single)."""
-    b = _bench_mod()
-    assert b.sat_stat_of({"stat": "median3"}) == "median3"
-    assert b.sat_stat_of({"stat": "min5"}) == "min5"
-    assert b.sat_stat_of({"readings": {"first": [1]}}) == "median3"
-    assert b.sat_stat_of({}) == "single"
-
-    (tmp_path / "BENCH_r09.json").write_text("{}")
-    b.__dict__["__file__"] = str(tmp_path / "bench.py")
-    (tmp_path / "BENCH_DETAIL_after_r08.json").write_text(
-        _sidecar(True, "anchor")
-    )
-    base, cpus, stat = b._load_sat_baseline()
-    assert base == 0.3 and cpus == 32 and stat == "median3"
-
-
-def test_adjudicate_flag_repeat_session_escalates():
-    """VERDICT r13 wrong #1: a query that regresses while the session
-    happens to be hot would be session-ruled round after round with
-    nothing ever forcing the isolated measurement. A second
-    consecutive session ruling on an unpinned query now escalates to
-    an explicit run-the-protocol ruling; a pinned query keeps the
-    plain session ruling (the pin already enables a mechanical
-    isolated-vs-isolated check next time it flags clean)."""
-    b = _bench_mod()
-    hot = {"sec": 2.0, "baseline_sec": 1.0, "segment_hot": True}
-    first = b.adjudicate_flag(dict(hot), None, prev_ruling=None)
-    assert first["ruling"] == "session"
-    second = b.adjudicate_flag(dict(hot), None, prev_ruling="session")
-    assert second["ruling"] == "session-repeat-run-scripts/isolated_query.py"
-    third = b.adjudicate_flag(dict(hot), None, prev_ruling=second["ruling"])
-    assert third["ruling"].startswith("session-repeat")
-    # pinned → no escalation needed; the session ruling stands
-    pinned = b.adjudicate_flag(dict(hot), 1.4, prev_ruling="session")
-    assert pinned["ruling"] == "session"
-    assert pinned["isolated_baseline_sec"] == 1.4
-    # clean-segment paths unchanged
-    clean = {"sec": 2.0, "baseline_sec": 1.0}
-    assert b.adjudicate_flag(dict(clean), 1.4)["ruling"] == (
-        "isolated-baseline-pinned"
-    )
-    assert b.adjudicate_flag(dict(clean), None)["ruling"].startswith(
-        "unadjudicated"
-    )
-
-
-def test_repeat_flag_targets_now_pinned():
-    """VERDICT r13 next #2: the three r13 session-ruled flags carry
-    isolated pins, so their next flag is mechanically adjudicable."""
-    b = _bench_mod()
-    for q in (
-        "orders_cohort_ltv_incremental",
-        "events_linear_attribution_daygrain",
-        "events_session_duration_stats",
-    ):
-        assert q in b.ISOLATED_BASELINE and b.ISOLATED_BASELINE[q] > 0
-
-
 # --- r15 staging drafts (VERDICT r13 next #6/#7) ----------------------
 
 
@@ -414,79 +256,6 @@ def test_recall_at_k_served_filtered_draft_partition_pruned(spark, sf_dir):
     filters = scan_partition_filters(df)
     cell_pruned = [f for f in filters if "cell" in f]
     assert cell_pruned, f"no cell PartitionFilters on any scan: {filters}"
-
-
-def test_prev_rulings_read_across_all_sidecars(tmp_path):
-    """Escalation reachability (code-review r14 #1): prev rulings must
-    NOT come through the clean-preferring sidecar chooser — a clean
-    sidecar can by construction never carry a session ruling, so the
-    repeat-session escalation would never fire. The rulings reader
-    merges across builder+driver+legacy, session-family winning."""
-    import json
-
-    b = _bench_mod()
-    (tmp_path / "BENCH_r09.json").write_text("{}")
-    b.__dict__["__file__"] = str(tmp_path / "bench.py")
-    # clean builder anchor (no regressions) + hot driver run that
-    # session-ruled query X — the steady-state shape
-    (tmp_path / "BENCH_DETAIL_after_r08_builder.json").write_text(
-        _sidecar(True, "builder")
-    )
-    hot = json.loads(_sidecar(False, "driver"))
-    hot["regressions"] = {
-        "x": {"sec": 2.0, "baseline_sec": 1.0, "ruling": "session"},
-        "y": {"sec": 2.0, "baseline_sec": 1.0, "ruling": "unadjudicated"},
-    }
-    (tmp_path / "BENCH_DETAIL_after_r08_driver.json").write_text(
-        json.dumps(hot)
-    )
-    # the baseline chooser still prefers the clean builder…
-    data, path = b._load_prev_detail()
-    assert "builder" in data["queries"]
-    # …but the rulings reader sees the driver's session ruling
-    rulings = b._load_prev_rulings()
-    assert rulings["x"] == "session"
-    assert rulings["y"] == "unadjudicated"
-    # end-to-end: that ruling escalates the next flag on x
-    flag = b.adjudicate_flag(
-        {"sec": 2.2, "baseline_sec": 1.0, "segment_hot": True},
-        None,
-        prev_ruling=rulings.get("x"),
-    )
-    assert flag["ruling"] == "session-repeat-run-scripts/isolated_query.py"
-    # session-family ruling wins a collision across sidecars
-    legacy = json.loads(_sidecar(False, "legacy"))
-    legacy["regressions"] = {"y": {"ruling": "session"}}
-    (tmp_path / "BENCH_DETAIL_after_r08.json").write_text(
-        json.dumps(legacy)
-    )
-    assert b._load_prev_rulings()["y"] == "session"
-
-
-def test_detail_loaders_degrade_on_mangled_sidecars(tmp_path):
-    """ADVICE r12 #3 discipline extended to the r14 loaders
-    (code-review r14 #3): a sidecar with "canary": null (or a whole
-    file that parses to a non-dict) must degrade — treated as
-    not-clean / skipped — never crash the bench at startup."""
-    import json
-
-    b = _bench_mod()
-    assert b._detail_clean({"canary": None}) is False
-    assert b._detail_clean({}) is False
-    assert b._detail_clean({"canary": {"hot_readings": 0}}) is True
-
-    (tmp_path / "BENCH_r09.json").write_text("{}")
-    b.__dict__["__file__"] = str(tmp_path / "bench.py")
-    (tmp_path / "BENCH_DETAIL_after_r08_builder.json").write_text(
-        json.dumps({"canary": None, "sat_canary": {"best_sec": 0.3,
-                                                   "cpus": 32}})
-    )
-    (tmp_path / "BENCH_DETAIL_after_r08_driver.json").write_text("[1, 2]")
-    data, path = b._load_prev_detail()  # must not raise
-    assert path.endswith("_builder.json")  # non-dict driver skipped
-    base, cpus, stat = b._load_sat_baseline()
-    assert base == 0.3 and cpus == 32 and stat == "single"
-    assert b._load_prev_rulings() == {}
 
 
 def test_sweep_orphan_dir_fails_live_on_unreadable_tree(tmp_path, monkeypatch):

@@ -1,18 +1,15 @@
-"""Round-15 pins: the certification start gate (VERDICT r14 next #6 —
-bench refuses to START a builder run on a loaded machine instead of
-self-diagnosing 200 s in), escalation surfacing on the printed line
-(ADVICE r14 #3), custom-writer-stamp sidecars as baselines (ADVICE
-r14 #2), and the orphan sweep's re-stat-before-rmtree + audit log
-(ADVICE r14 #1).
+"""Round-15 pins: the orphan sweep's re-stat-before-rmtree + audit log
+(ADVICE r14 #1), and checks on the corpus pipeline report, the
+budgeted incremental SemDeDup survivors and the filtered served
+recall curve.
 
-No Spark session needed: every target is a pure function or a
-filesystem-only path, exercised on tmp_path trees the way
-tests/test_round14.py established.
+No Spark session needed for the sweep pins: they are filesystem-only
+paths, exercised on tmp_path trees the way tests/test_round14.py
+established.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import time
 
@@ -21,151 +18,6 @@ import pytest
 from udacitycapstonedataengineer_spark.streaming.text import (
     _sweep_orphan_dir,
 )
-
-
-def _bench_mod():
-    import importlib.util
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "bench_mod_r15", os.path.join(root, "bench.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
-
-# --- certification start gate (VERDICT r14 next #6) -------------------
-
-
-def test_start_gate_refuses_on_load():
-    b = _bench_mod()
-    reason = b.start_gate_verdict(b._GATE_MAX_LOAD + 0.5, None, None)
-    assert reason and "load average" in reason
-    assert b.start_gate_verdict(b._GATE_MAX_LOAD - 0.5, None, None) is None
-    # unreadable load (None) alone never refuses
-    assert b.start_gate_verdict(None, None, None) is None
-
-
-def test_start_gate_canary_uses_first_reading_slack():
-    """A flat 1.5x level test would false-refuse every idle run (an
-    idle session's FIRST canary reading sits ~2x its last — the
-    _CANARY_FIRST_SLACK calibration); the gate must apply the same
-    first-reading slack the session verdict does."""
-    b = _bench_mod()
-    base = 0.2
-    limit = b._CANARY_LIMIT * b._CANARY_FIRST_SLACK  # 3.0x
-    ok_sec = base * (limit - 0.1)
-    hot_sec = base * (limit + 0.1)
-    assert b.start_gate_verdict(0.1, ok_sec, base) is None
-    reason = b.start_gate_verdict(0.1, hot_sec, base)
-    assert reason and "start canary" in reason
-    # no committed baseline -> no absolute reference, never refuses
-    assert b.start_gate_verdict(0.1, hot_sec, None) is None
-
-
-def test_gate_checks_matrix():
-    """Per-check bypass (post-review fix): FORCE=load skips only the
-    load-average check (a back-to-back rerun sees its OWN decaying
-    load), never the canary checkpoint; FORCE=1/all/true bypasses
-    both; non-builder stamps are never gated."""
-    b = _bench_mod()
-    assert b.gate_checks("builder", "0") == (True, True)
-    assert b.gate_checks("builder", "load") == (False, True)
-    for f in ("1", "all", "true"):
-        assert b.gate_checks("builder", f) == (False, False)
-    for stamp in ("driver", "smoke", "laptop2"):
-        assert b.gate_checks(stamp, "0") == (False, False)
-
-
-def test_refuse_prints_parseable_line_and_exits_nonzero(capsys):
-    b = _bench_mod()
-    with pytest.raises(SystemExit) as exc:
-        b._refuse("machine not idle")
-    assert exc.value.code == 2
-    out = capsys.readouterr()
-    line = json.loads(out.out.strip().splitlines()[0])
-    assert line["metric"] == "bench_refused"
-    assert "machine not idle" in line["reason"]
-    assert "machine not idle" in out.err
-
-
-# --- escalation surfacing (ADVICE r14 #3) ------------------------------
-
-
-def test_escalated_names_extracts_session_repeat_rulings():
-    b = _bench_mod()
-    regs = {
-        "q_repeat": {"ruling": "session-repeat-run-scripts/isolated_query.py"},
-        "q_session": {"ruling": "session"},
-        "q_pinned": {"ruling": "isolated-baseline-pinned"},
-        "q_mangled": "not-a-dict",
-        "q_repeat2": {"ruling": "session-repeat-run-scripts/isolated_query.py"},
-    }
-    assert b.escalated_names(regs) == ["q_repeat", "q_repeat2"]
-    assert b.escalated_names({}) == []
-
-
-def test_escalations_survive_the_fitted_line():
-    """The whole point is reaching the driver-parsed stdout line: the
-    tail-budget trimmer must keep the escalations field while it
-    drops per-query timings."""
-    b = _bench_mod()
-    out = {
-        "metric": "headline_queries_total",
-        "value": 1.0,
-        "queries": {f"q{i:03d}": 0.5 for i in range(300)},
-        "escalations": ["q_repeat"],
-    }
-    fitted = b._fit_line(out)
-    assert fitted["escalations"] == ["q_repeat"]
-    assert len(json.dumps(fitted)) <= b._TAIL_BUDGET
-
-
-# --- custom writer stamps as baselines (ADVICE r14 #2) ------------------
-
-
-def _sidecar(clean: bool, marker: str) -> str:
-    data = {
-        "queries": {marker: 1.0},
-        "canary": {"hot_readings": 0},
-    }
-    if not clean:
-        data["canary_contaminated"] = True
-    return json.dumps(data)
-
-
-def test_detail_candidates_include_custom_stamps(tmp_path):
-    """A sidecar written under any SPARK_GRAFT_BENCH_WRITER value must
-    be loadable as a baseline — builder/driver stay preferred, a
-    custom stamp beats only the legacy unstamped file."""
-    b = _bench_mod()
-    (tmp_path / "BENCH_r09.json").write_text("{}")
-    b.__dict__["__file__"] = str(tmp_path / "bench.py")
-
-    (tmp_path / "BENCH_DETAIL_after_r08_laptop2.json").write_text(
-        _sidecar(True, "laptop2")
-    )
-    data, path = b._load_prev_detail()
-    assert "laptop2" in data["queries"] and path.endswith("_laptop2.json")
-
-    # a clean builder anchor still wins over the custom stamp
-    (tmp_path / "BENCH_DETAIL_after_r08_builder.json").write_text(
-        _sidecar(True, "builder")
-    )
-    data, _path = b._load_prev_detail()
-    assert "builder" in data["queries"]
-
-    # rulings merge across custom stamps too
-    regs = {
-        "queries": {},
-        "canary": {"hot_readings": 0},
-        "regressions": {"qx": {"ruling": "session"}},
-    }
-    (tmp_path / "BENCH_DETAIL_after_r08_laptop2.json").write_text(
-        json.dumps(regs)
-    )
-    assert b._load_prev_rulings()["qx"] == "session"
 
 
 # --- orphan sweep re-stat + audit log (ADVICE r14 #1) -------------------

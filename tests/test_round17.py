@@ -1,114 +1,9 @@
-"""Round-17 pins: the printed-line measurement contract (VERDICT r16
-next #1 — 11 adjudication rulings consumed the whole tail budget and
-the driver's PERF got an empty per_query map two rounds running) and
-salvage transparency (VERDICT r16 next #10).
-
-No Spark session needed: every target is a pure function, exercised
-the way tests/test_round15.py established.
-"""
+"""Round-17 pins: the fused IVF-PQ probes match the per-point and
+per-query loops they replaced (VERDICT r16 next #3), the k-means
+literal-model ceiling falls back to a broadcast join, and recall@k
+query ids are bigint end to end."""
 
 from __future__ import annotations
-
-import json
-import os
-
-
-def _bench_mod():
-    import importlib.util
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "bench_mod_r17", os.path.join(root, "bench.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
-
-# --- per-query quota on the printed line (VERDICT r16 next #1) --------
-
-
-def _r16_shaped_out(b, n_regressions: int) -> dict:
-    """Replay of the r16 driver line: 121 timings + full adjudication
-    rows (contamination context, canary brackets, isolated pins)."""
-    queries = {f"query_family_{i:03d}_long_name": 0.5 + i / 100 for i in range(121)}
-    regressions = {}
-    for i in range(n_regressions):
-        name = f"query_family_{i:03d}_long_name"
-        regressions[name] = b.adjudicate_flag(
-            {
-                "sec": 2.0 + i,
-                "baseline_sec": 1.0,
-                "contaminated": True,
-                "segment_hot": True,
-                "canary_before": 0.296,
-                "canary_after": 0.317,
-            },
-            2.665 if i % 2 else None,
-        )
-    return {
-        "metric": "headline_queries_total",
-        "value": round(sum(queries.values()), 3),
-        "unit": "sec",
-        "queries": queries,
-        "sf": 0.1,
-        "n_queries": len(queries),
-        "canary": {"query": "global_counts", "hot_readings": 11},
-        "sat_canary": {"best_sec": 0.3, "baseline_sec": 0.26},
-        "salvaged_delta_sec": 0.0,
-        "shared_ratio": 0.934,
-        "regressions": regressions,
-    }
-
-
-def test_fit_line_keeps_query_quota_under_heavy_rulings():
-    """The exact r16 failure: 11 full rulings left room for ZERO of
-    121 timings. The quota now wins: the line must carry at least
-    _MIN_LINE_QUERIES heaviest-first timings, stay under budget, and
-    keep the omitted counts visible."""
-    b = _bench_mod()
-    out = _r16_shaped_out(b, n_regressions=11)
-    line = b._fit_line(out)
-    assert len(json.dumps(line)) <= b._TAIL_BUDGET
-    assert len(line["queries"]) >= b._MIN_LINE_QUERIES
-    # heaviest-first: every kept timing >= every omitted one
-    kept = set(line["queries"])
-    omitted_max = max(
-        v for n, v in out["queries"].items() if n not in kept
-    )
-    assert min(line["queries"].values()) >= omitted_max
-    assert line["queries_omitted"] == 121 - len(line["queries"])
-    # regressions compressed to top-N, each row name+3 fields only
-    assert len(line["regressions"]) <= b._MAX_LINE_REGRESSIONS
-    for row in line["regressions"].values():
-        if isinstance(row, dict):
-            assert set(row) <= {"sec", "baseline_sec", "ruling"}
-    assert line["regressions_omitted"] == 11 - len(line["regressions"])
-    # the compressed rows are the most severe ones (ratio = sec/baseline)
-    worst = max(out["regressions"], key=lambda n: out["regressions"][n]["sec"])
-    assert worst in line["regressions"]
-
-
-def test_fit_line_unchanged_when_everything_fits():
-    b = _bench_mod()
-    out = _r16_shaped_out(b, n_regressions=1)
-    out["queries"] = {"q1": 1.0, "q2": 2.0}
-    out["n_queries"] = 2
-    line = b._fit_line(out)
-    assert line["queries"] == {"q1": 1.0, "q2": 2.0}
-    # nothing was trimmed, so the full adjudication row survives
-    assert "canary_before" in next(iter(line["regressions"].values()))
-
-
-def test_fit_line_salvaged_delta_survives_trimming():
-    """VERDICT r16 next #10: the salvage total must reach the driver's
-    recorded line even when timings are being trimmed for budget."""
-    b = _bench_mod()
-    out = _r16_shaped_out(b, n_regressions=11)
-    out["salvaged_delta_sec"] = 4.321
-    line = b._fit_line(out)
-    assert line["salvaged_delta_sec"] == 4.321
-    assert len(json.dumps(line)) <= b._TAIL_BUDGET
 
 
 # --- fused IVF-PQ probes ≡ the per-point/per-query loop (VERDICT r16
