@@ -1,27 +1,22 @@
-"""Coarse-quantizer-only fit for IVF-PQ governance (VERDICT r10 #3,
-landed ahead of the r12 call-site switch).
+"""Coarse quantizer of the IVF-PQ index: the trainer shared by
+``ivfpq_build`` and the governance queries, plus the frozen-model
+centroid lookup.
 
-``ivfpq_index_drift`` and ``ivfpq_rebuild_decision`` call
-``ivfpq_build`` and discard the codebooks and the index — paying
-``pq_train``'s eager seed collect + training jobs and a residual+index
-persist nobody reads (~2-4 s each at sf0.1). Only the coarse
-centroids feed ``ivfpq_drift_stats``. This module is the first stage
-of ``ivfpq_build`` EXACTLY — same dense 0..nlist-1 seed cids, same
-fixed-point sums, same truncating centroid update
-((Σ/n) cast long → double / SCALE), same empty-cell retention via the
-left_anti union — so the returned centroids are bit-identical to the
-build's (pinned by ``test_coarse_fit_equals_ivfpq_build_centroids``).
+``ivfpq_index_drift`` and ``ivfpq_rebuild_decision`` need only the
+coarse centroids (they feed ``ivfpq_drift_stats``), so they call
+``ivfpq_coarse_fit`` instead of ``ivfpq_build`` and skip the codebook
+training and the residual index. ``coarse_fit_from_vectors`` is the
+first stage of ``ivfpq_build`` EXACTLY — same dense 0..nlist-1 seed
+cids, same fixed-point sums, same truncating centroid update
+((Σ/n) cast long → double / SCALE), same empty-cell retention — so
+the returned centroids are bit-identical to the build's (pinned by
+``test_coarse_fit_equals_ivfpq_build_centroids``).
 
 NOT a drop-in for ``clustering.kmeans_fit``: that trainer seeds cids
 from vec_id, uses a non-truncating float update, and drops emptied
 clusters — three deliberate differences the oracle CTE generators
-mirror per-operator.
-
-Kept out of operators/ivfpq.py this round: editing a shared operator
-file forces re-earns the rotation-filled r11 window cannot absorb
-(VERDICT r10 #1). r12 switches the two governance queries to this
-helper — a 2-query re-earn that fits its window — and may then fold
-``ivfpq_build``'s first stage onto this function as a pure refactor.
+mirror per-operator. Assignment is shared:
+``clustering.centroid_assign_expr``.
 """
 
 from __future__ import annotations
@@ -29,77 +24,27 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .clustering import SCALE
-
-
-def coarse_argmin(cent_rows, v_col: str = "v") -> Column:
-    """struct(cid, d): the nearest frozen centroid for the row's
-    ``v_col`` vector — computed as a PER-ROW expression over the
-    collected model (``cent_rows`` = [(cid, c array<double>)],
-    model-sized: nlist×dim). Replaces ``kmeans_assign``'s
-    crossJoin + row_number window for frozen-model consumers: the
-    window shuffles nlist·N rows and forces a corpus-grain join-back
-    to recover ``v`` — assignment against a frozen model is
-    embarrassingly parallel, so at 100 TB the right plan is map-only
-    (the shuffle-free plan this returns). Decision-identical to
-    ``kmeans_assign``: the same _DIST2 fold (zip_with square-diff,
-    sequential 0D sum) per centroid, candidates folded in ascending
-    cid order with a strict ``<`` — the first minimum wins, which IS
-    the (dist2, cid) tie-break.
-
-    The fold carries only (cid, d) — 16 bytes per candidate — not
-    the dim-double centroid array (round-12 review finding: threading
-    the full array through every fold step is pure copy cost).
-    Consumers that need the winning centroid VECTOR recover it with
-    ``centroid_array``'s element_at lookup on the cid, and should
-    project the struct (or the cid) in its OWN select step before
-    extracting further fields — Catalyst does not common-subexpression
-    -eliminate lambda-bearing folds, so two field extractions in one
-    projection evaluate the whole fold twice."""
-    cents = F.array(
-        *[
-            F.struct(
-                F.lit(int(r["cid"])).cast("long").alias("cid"),
-                F.array(*[F.lit(float(x)) for x in r["c"]]).alias("c"),
-            )
-            for r in sorted(cent_rows, key=lambda r: r["cid"])
-        ]
-    )
-    dists = F.transform(
-        cents,
-        lambda ctr: F.struct(
-            ctr["cid"].alias("cid"),
-            F.aggregate(
-                F.zip_with(
-                    F.col(v_col), ctr["c"], lambda x, y: (x - y) * (x - y)
-                ),
-                F.lit(0.0),
-                lambda acc, w: acc + w,
-            ).alias("d"),
-        ),
-    )
-    return F.aggregate(
-        dists,
-        F.lit(None).cast("struct<cid:bigint,d:double>"),
-        lambda best, x: F.when(
-            best.isNull() | (x["d"] < best["d"]), x
-        ).otherwise(best),
-    )
+from .clustering import (
+    SCALE,
+    centroid_assign_expr,
+    double_array_sql,
+    quantize_vec_py,
+)
 
 
 def centroid_array(cent_rows) -> Column:
     """array<array<double>> literal of the frozen centroids ordered by
-    dense cid — ``element_at(centroid_array(m), cid + 1)`` recovers a
-    row's winning centroid after ``coarse_argmin`` without the fold
-    having to thread the vectors through every step (the
-    ``stream_ivfpq_encode`` lookup shape)."""
+    dense cid, built from one SQL string —
+    ``element_at(centroid_array(m), cid + 1)`` recovers a row's
+    winning centroid after ``centroid_assign_expr`` (the residual
+    lookup of the IVF-PQ encode and drift paths)."""
     cents = sorted(cent_rows, key=lambda r: r["cid"])
     if [int(r["cid"]) for r in cents] != list(range(len(cents))):
         raise ValueError(
             "centroid_array: coarse cids must be dense 0..nlist-1"
         )
-    return F.array(
-        *[F.array(*[F.lit(float(x)) for x in r["c"]]) for r in cents]
+    return F.expr(
+        "array(" + ",".join(double_array_sql(r["c"]) for r in cents) + ")"
     )
 
 
@@ -107,16 +52,14 @@ def coarse_fit_from_vectors(
     vectors: DataFrame, nlist: int, iters: int, who: str
 ) -> list:
     """The shared coarse-quantizer trainer behind ``ivfpq_coarse_fit``
-    and ``ivfpq_build`` (the fold the r12 note anticipated): dense
-    0..nlist-1 seed cids, map-only assignment per round
-    (``coarse_argmin`` over the collected model), fixed-point sums,
+    and ``ivfpq_build``: dense 0..nlist-1 seed cids, map-only
+    assignment per round (``centroid_assign_expr`` over the collected
+    model), fixed-point sums,
     truncating centroid update, empty-cell retention. Returns the
     COLLECTED centroid rows [(cid, c)] — model-sized (nlist×dim), so
     callers build literals/DataFrames from them without re-running
     the training subtree per consumer. ``vectors`` = (vec_id,
     v array<double>), expected persisted by the caller."""
-    from .clustering import quantize_vec_py
-
     seed = vectors.orderBy("vec_id").limit(nlist).collect()
     if len(seed) < nlist:
         raise ValueError(f"{who}: nlist={nlist} > {len(seed)} vectors")
@@ -131,12 +74,9 @@ def coarse_fit_from_vectors(
         # dim-wide column list codegens a far larger class — measured
         # 2× per-action cost (PERF_NOTES r16); values are identical
         # exact BIGINTs either way
-        # two projections: the generator (posexplode) cannot share a
-        # select with the lambda-built argmin struct (alias resolution
-        # inside Generate drops the struct field names)
         sums = (
             vectors.select(
-                coarse_argmin(cent_rows)["cid"].alias("cluster"),
+                centroid_assign_expr(cent_rows).alias("cluster"),
                 F.expr(
                     f"transform(v, x -> CAST(FLOOR(x * {SCALE}) AS BIGINT))"
                 ).alias("qv"),
@@ -184,7 +124,7 @@ def ivfpq_coarse_fit(
     """(cid, c array<double>): the frozen coarse quantizer, exactly
     ``ivfpq_build(...)[0]`` without training codebooks or encoding
     the corpus. One persisted double-vector scan + (iters-1)
-    map-only assign/re-aggregate rounds (``coarse_argmin`` — the
+    map-only assign/re-aggregate rounds (``centroid_assign_expr`` — the
     round's centroids are already model-sized, so each round collects
     them and assigns per-row with NO shuffle before the cluster-grain
     sums); the model is nlist×dim — driver-sized at any corpus

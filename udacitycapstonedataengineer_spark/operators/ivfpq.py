@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .coarse import centroid_array, coarse_fit_from_vectors
-from .clustering import centroid_assign_expr, model_rows
+from .clustering import centroid_assign_expr, double_array_sql, model_rows
 from .pq import pq_codes_expr, pq_train
 
 
@@ -49,7 +49,7 @@ def ivfpq_build(
 
     Every model-vs-data boundary is exploited for shape (guide §2.4):
     the coarse quantizer trains with map-only assignment rounds
-    (``coarse_fit_from_vectors`` — the fold the r12 note anticipated),
+    (``coarse_fit_from_vectors``, shared with ``ivfpq_coarse_fit``),
     cells + residuals come out of ONE codegen'd projection over the
     persisted vectors (literal centroid lookup — no window Exchange,
     no corpus-grain join-back, no broadcast join), and the index is a
@@ -126,8 +126,8 @@ def ivfpq_encode_batch(
     re-encode-everything-under-the-frozen-model, probe results
     included.
 
-    The whole encode is ONE stateless codegen'd projection (the
-    ``stream_ivfpq_encode`` shape, now shared with the batch path):
+    The whole encode is ONE stateless projection, which is why
+    ``stream_ivfpq_encode`` runs it unchanged on a stream:
     literal-argmin cell, literal-lookup residual, literal-argmin
     codes — zero shuffle, zero join (guide §2.4). Model args may be
     DataFrames or pre-collected rows.
@@ -237,8 +237,8 @@ def ivfpq_topk(
     dsub = len(cb[0]["c"])
     lut_expr = None
     for cell in probed:
-        arr = F.array(
-            *[F.lit(x) for x in _cell_lut(q, cents[cell], cb, m, k, dsub)]
+        arr = F.expr(
+            double_array_sql(_cell_lut(q, cents[cell], cb, m, k, dsub))
         )
         lut_expr = (
             arr
@@ -416,7 +416,7 @@ def ivfpq_topk_refined(
     shortlist = ivfpq_topk(
         index, coarse_centroids, codebooks, query, nprobe, topk=rerank
     ).select("vec_id")
-    qlit = F.array(*[F.lit(float(x)) for x in query])
+    qlit = F.expr(double_array_sql(query))
     dist2 = F.expr(
         "aggregate(zip_with(v, qv, (x, y) -> (x - y) * (x - y)),"
         " 0D, (acc, w) -> acc + w)"

@@ -21,7 +21,9 @@ codebooks (model-sized: m·k×dsub), and the centroid update is one
 (sub, cluster)-grain aggregate — so training cost is iterations × ONE
 small-output shuffle regardless of m, not m separate k-means runs
 (pre-r16 this paid a row_number-window Exchange over vec_id·m rows
-plus a corpus-grain join-back per iteration — guide §2.4).
+plus a corpus-grain join-back per iteration — guide §2.4). The codes
+expression is one lambda nest over one codebook literal, so its
+analysis cost does not grow with m·k.
 """
 
 from __future__ import annotations
@@ -30,25 +32,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .clustering import SCALE
-
-_DIST2 = (
-    "aggregate(zip_with({v}, {c}, (x, y) -> (x - y) * (x - y)),"
-    " 0D, (acc, w) -> acc + w)"
-)
-
-
-def _subvectors(emb: DataFrame, m: int, vec_col: str) -> DataFrame:
-    """(vec_id, sub, v): the m d/m-dim slices of each vector, as one
-    exploded table so every subspace shares the same jobs."""
-    slices = F.expr(
-        f"transform(sequence(0, {m} - 1), i -> struct(i AS sub, "
-        f"transform(slice({vec_col}, i * (size({vec_col}) div {m}) + 1, "
-        f"size({vec_col}) div {m}), x -> cast(x as double)) AS v))"
-    )
-    return emb.select("vec_id", F.explode(slices).alias("s")).select(
-        "vec_id", F.col("s.sub").alias("sub"), F.col("s.v").alias("v")
-    )
+from .clustering import _DIST2, SCALE, double_array_sql, quantize_vec_py
 
 
 def _books_by_sub(codebook_rows: list, m: int) -> dict[int, list]:
@@ -65,37 +49,37 @@ def _books_by_sub(codebook_rows: list, m: int) -> dict[int, list]:
     return {s: sorted(rs, key=lambda r: int(r["cid"])) for s, rs in by_sub.items()}
 
 
-def _sub_slice(vec_col: str, s: int, m: int) -> str:
-    """SQL slice of subspace ``s`` — size-derived exactly like
-    ``_subvectors`` so the two shapes stay byte-compatible."""
+def _sub_slice(vec_col: str, m: int) -> str:
+    """SQL slice of subspace ``sub`` (a lambda variable over
+    ``sequence(0, m-1)``), size-derived: ``size div m`` doubles from
+    ``sub * (size div m) + 1``."""
     d = f"(size({vec_col}) div {m})"
-    return f"slice({vec_col}, {s} * {d} + 1, {d})"
-
-
-def _sub_argmin_sql(vec_sql: str, book_rows: list) -> str:
-    """array_min over (dist2, cid) structs for ONE subspace's codebook
-    — the same sequential _DIST2 fold and (dist2, cid) tie-break the
-    historical row_number window used, as a map-only expression (the
-    ``stream_ivfpq_encode`` shape, now the batch primitive too)."""
-    entries = []
-    for r in book_rows:
-        c = "array(" + ",".join(f"{float(x)!r}D" for x in r["c"]) + ")"
-        d2 = _DIST2.format(v=vec_sql, c=c)
-        entries.append(f"struct({d2} AS dist2, {int(r['cid'])} AS cid)")
-    return f"array_min(array({','.join(entries)})).cid"
+    return f"slice({vec_col}, sub * {d} + 1, {d})"
 
 
 def pq_codes_expr(codebook_rows: list, m: int, vec_col: str):
     """array<int> codes expression over a double-array column: per
     subspace, the nearest codeword id by the sequential squared-L2
-    fold with the (dist2, cid) tie-break — one whole-stage-codegen
-    projection, m·k literal structs, zero shuffle."""
+    fold with the (dist2, cid) tie-break — one map-only projection
+    over ONE ``array<array<struct<cid, c>>>`` codebook literal, with
+    a fixed number of lambdas at any m and k, zero shuffle."""
     by_sub = _books_by_sub(codebook_rows, m)
-    per_sub = [
-        _sub_argmin_sql(_sub_slice(vec_col, s, m), by_sub[s])
+    books = ",".join(
+        "array("
+        + ",".join(
+            f"named_struct('cid', {int(r['cid'])}, 'c', "
+            f"{double_array_sql(r['c'])})"
+            for r in by_sub[s]
+        )
+        + ")"
         for s in range(m)
-    ]
-    return F.expr(f"array({','.join(per_sub)})")
+    )
+    d2 = _DIST2.format(v=_sub_slice(vec_col, m), c="cw.c")
+    return F.expr(
+        f"transform(sequence(0, {m - 1}), sub -> array_min(transform("
+        f"element_at(array({books}), sub + 1), "
+        f"cw -> struct({d2} AS dist2, cw.cid AS cid))).cid)"
+    )
 
 
 def pq_train(
@@ -110,61 +94,43 @@ def pq_train(
     iterations with fixed-point updates. All subspaces train in the
     same jobs (grouped k-means — see module docstring)."""
     spark = emb.sparkSession
-    # seeds: the m subspace slices of the first k vectors by vec_id —
-    # the same values _subvectors produced, fetched with ONE limit-k
-    # job instead of a distinct + self-join over the exploded table
-    seed_rows = _subvectors(
-        emb.orderBy("vec_id").limit(k), m, vec_col
-    ).orderBy("vec_id", "sub").collect()
-    n_seed_vecs = len({r["vec_id"] for r in seed_rows})
-    if n_seed_vecs < k:
-        raise ValueError(f"pq_train: k={k} but only {n_seed_vecs} vectors")
-    seed_ids = sorted({r["vec_id"] for r in seed_rows})
-    cid_of = {vid: i for i, vid in enumerate(seed_ids)}
-    from .clustering import quantize_vec_py
-
+    # seeds: the first k vectors by vec_id in ONE limit-k job, sliced
+    # into the m subspaces driver-side; seed j becomes codeword j of
+    # every subspace
+    seed = emb.select("vec_id", vec_col).orderBy("vec_id").limit(k).collect()
+    if len(seed) < k:
+        raise ValueError(f"pq_train: k={k} but only {len(seed)} vectors")
+    dsub = len(seed[0][1]) // m
     # driver-side seed quantization (bit-identical — quantize_vec_py):
     # the model starts as plain rows, no local-relation action spent
     book_rows = [
         {
-            "sub": int(r["sub"]),
-            "cid": cid_of[r["vec_id"]],
-            "c": quantize_vec_py(r["v"]),
+            "sub": s,
+            "cid": cid,
+            "c": quantize_vec_py(r[1][s * dsub : (s + 1) * dsub]),
         }
-        for r in seed_rows
+        for cid, r in enumerate(seed)
+        for s in range(m)
     ]
-    dsub = len(seed_rows[0]["v"])
     v = emb.select(
         "vec_id",
         F.expr(f"transform({vec_col}, x -> cast(x as double))").alias("v"),
     )
+    # (sub, cluster, sv) per subspace of each row, from its codes
+    per_sub = F.expr(
+        f"transform(sequence(0, {m - 1}), sub -> struct(sub AS sub, "
+        f"codes[sub] AS cluster, {_sub_slice('v', m)} AS sv))"
+    )
     for _ in range(iters - 1):
-        # map-only assignment against the collected model (the
-        # stream_ivfpq_encode shape): per row, all m subspace argmins
-        # in one projection, exploded map-side to (sub, cluster, sv)
-        # — the window Exchange over vec_id·m rows and the corpus-
-        # grain join-back are gone (guide §2.4); the only shuffle per
-        # iteration is the (sub, cluster)-group partial aggregation.
-        by_sub = _books_by_sub(book_rows, m)
-        slices = F.array(
-            *[
-                F.struct(
-                    F.lit(s).alias("sub"),
-                    F.expr(
-                        _sub_argmin_sql(_sub_slice("v", s, m), by_sub[s])
-                    ).alias("cluster"),
-                    F.expr(_sub_slice("v", s, m)).alias("sv"),
-                )
-                for s in range(m)
-            ]
-        )
-        exploded = v.select(F.explode(slices).alias("s")).select(
-            F.col("s.sub").alias("sub"),
-            F.col("s.cluster").alias("cluster"),
-            F.col("s.sv").alias("sv"),
-        )
+        # map-only assignment against the collected model: the row's m
+        # codes in one projection (``pq_codes_expr``), exploded
+        # map-side to (sub, cluster, sv) — the only shuffle per
+        # iteration is the (sub, cluster)-group partial aggregation
+        # (guide §2.4).
         sums = (
-            exploded.groupBy("sub", "cluster")
+            v.select("v", pq_codes_expr(book_rows, m, "v").alias("codes"))
+            .select(F.inline(per_sub))
+            .groupBy("sub", "cluster")
             .agg(
                 F.count(F.lit(1)).alias("n"),
                 *[
@@ -179,14 +145,16 @@ def pq_train(
         # truncating update finished driver-side, op for op the former
         # SQL select: (s / n) double division, CAST AS BIGINT (trunc
         # toward zero — Python int() matches), back to double / SCALE;
-        # empty clusters keep their previous centroid (kept-merge)
+        # empty clusters keep their previous centroid (kept-merge).
+        # Rows are read by position (sub, cluster, n, s1..s_dsub): a
+        # Row name lookup is a linear field search.
         new_rows = [
             {
-                "sub": int(r["sub"]),
-                "cid": int(r["cluster"]),
+                "sub": int(r[0]),
+                "cid": int(r[1]),
                 "c": [
-                    float(int(float(r[f"s{i}"]) / float(r["n"]))) / SCALE
-                    for i in range(1, dsub + 1)
+                    float(int(float(x) / float(r[2]))) / SCALE
+                    for x in r[3:]
                 ],
             }
             for r in sums
@@ -266,7 +234,7 @@ def pq_adc_topk(
         for a, b in zip(qs, r["c"]):
             d2 += (float(a) - float(b)) * (float(a) - float(b))
         lut[r["sub"], r["cid"]] = d2
-    flat = F.array(*[F.lit(float(x)) for x in lut.reshape(-1)])
+    flat = F.expr(double_array_sql(lut.reshape(-1)))
     # element_at is 1-based in Spark SQL: sub s's code is
     # element_at(codes, s+1); its LUT slot is s*k + code (0-based)
     dist = F.expr(

@@ -17,6 +17,7 @@ from ..operators.cell_budget import derive_k, semdedup_closure_scaled
 from ..operators.clustering import (
     _as_double_vec,
     centroid_assign_expr,
+    double_array_sql,
     kmeans,
     kmeans_assign_sql,
     kmeans_fit,
@@ -24,7 +25,7 @@ from ..operators.clustering import (
     kmeans_oracle_sql,
     model_rows,
 )
-from ..operators.coarse import centroid_array, coarse_argmin, ivfpq_coarse_fit
+from ..operators.coarse import centroid_array, ivfpq_coarse_fit
 from ..operators.graph import connected_components
 from ..operators.ivfpq import (
     _ivfpq_oracle_parts,
@@ -464,7 +465,7 @@ def _ann_topk_ivfpq(spark, t):
     top = ivfpq_topk(
         index, cents, books, q, nprobe=_NPROBE, topk=_TOPK
     )
-    qlit = F.array(*[F.lit(x) for x in q])
+    qlit = F.expr(double_array_sql(q))
     exact = (
         emb.select(
             "vec_id",
@@ -610,7 +611,7 @@ def _semdedup_incremental_pairs(spark, t):
 def _exact_topk_flags(emb, q, topk):
     """(vec_id, in_exact_topk=true) for the exact-L2 top ``topk`` —
     the recall-contract column every IVF-PQ query carries."""
-    qlit = F.array(*[F.lit(x) for x in q])
+    qlit = F.expr(double_array_sql(q))
     return (
         emb.select(
             "vec_id",
@@ -884,7 +885,7 @@ def ivfpq_drift_stats(emb, centroids, batch_where: str = _BATCH_WHERE):
     ``ivfpq_index_drift``, factored so tests can feed shifted batches.
     ``centroids`` is the FROZEN coarse quantizer (cid, c) — collected
     (model-sized, nlist×dim) so assignment + residual run as ONE
-    map-only pass over corpus+batch (``coarse_argmin``); the only
+    map-only pass over corpus+batch (``centroid_assign_expr``); the only
     corpus-grain shuffles left are the two cell-grain aggregates. The
     previous shape paid a nlist·N row_number window plus an N⋈N
     join-back for the same numbers."""
@@ -904,7 +905,7 @@ def ivfpq_drift_stats(emb, centroids, batch_where: str = _BATCH_WHERE):
     # twice)
     carr = centroid_array(cent_rows)
     assigned = vectors.select(
-        "vec_id", "v", coarse_argmin(cent_rows)["cid"].alias("cell")
+        "vec_id", "v", centroid_assign_expr(cent_rows).alias("cell")
     )
     ren = assigned.select(
         "vec_id",

@@ -28,7 +28,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.clustering import centroid_assign_expr  # noqa: F401
+from ..operators.clustering import centroid_assign_expr
+from ..operators.coarse import centroid_array
+from ..operators.ivfpq import ivfpq_encode_batch
 from ..operators.similarity import cosine_prenorm, norm
 
 # centroid_assign_expr was born here for the streaming constraint
@@ -36,11 +38,6 @@ from ..operators.similarity import cosine_prenorm, norm
 # operators/clustering.py in round 16 when the batch side adopted the
 # same map-only assignment (guide §2.4); re-exported so streaming
 # callers and docs keep their import path.
-
-_DIST2 = (
-    "aggregate(zip_with({v}, {c}, (x, y) -> (x - y) * (x - y)),"
-    " 0D, (acc, w) -> acc + w)"
-)
 
 
 def build_corpus_index(
@@ -96,81 +93,22 @@ def stream_ivfpq_encode(
     sibling of ``stream_semdedup_pairs`` (VERDICT r9 #6) and the
     streaming twin of ``operators/ivfpq.ivfpq_encode_batch``.
 
-    Everything is a stateless whole-stage-codegen projection, so the
-    encode is append-safe with zero state and zero shuffle:
-
-    - **cell**: the same ``array_min`` (dist2, cid) argmin literal the
-      semdedup twin uses (``centroid_assign_expr``) — bit-identical to
-      the batch ``kmeans_assign`` window.
-    - **residual**: the cell's centroid is looked up from a literal
-      array-of-arrays indexed by the cell id (ivfpq_build's cids are
-      dense 0..nlist-1), then subtracted with the same zip_with fold.
-    - **codes**: per subspace, an ``array_min`` over the k codebook
-      entries' (dist2, cid) structs on the residual SLICE — the same
-      fold and tie-break as ``pq.pq_encode``'s window, m·k literal
-      structs in one projection.
-
-    In production each micro-batch's output appends onto the
+    The batch encode IS a stateless projection (literal-argmin cell,
+    literal-lookup residual, literal-argmin codes — zero state, zero
+    shuffle), so the stream runs it unchanged and is append-safe. In
+    production each micro-batch's output appends onto the
     cell-partitioned index parquet via foreachBatch;
     ``test_stream_ivfpq_encode_matches_batch`` pins multi-micro-batch
     foreachBatch append ≡ ``ivfpq_encode_batch``, codes and cells
     included."""
-    cents = sorted(centroid_rows, key=lambda r: r["cid"])
-    if [int(r["cid"]) for r in cents] != list(range(len(cents))):
-        raise ValueError(
-            "stream_ivfpq_encode: coarse cids must be dense 0..nlist-1"
-        )
-    dim = len(cents[0]["c"])
+    dim = len(centroid_rows[0]["c"])
     if dim % m != 0:
         # a silent floor-divide would drop the trailing dim % m
         # dimensions from every residual slice
         raise ValueError(
             f"stream_ivfpq_encode: dim {dim} not divisible by m {m}"
         )
-    dsub = dim // m
-    cent_arr = (
-        "array("
-        + ",".join(
-            "array(" + ",".join(f"{float(x)!r}D" for x in r["c"]) + ")"
-            for r in cents
-        )
-        + ")"
-    )
-    by_sub: dict[int, list] = {}
-    for r in codebook_rows:
-        by_sub.setdefault(int(r["sub"]), []).append(r)
-    missing = [s for s in range(m) if s not in by_sub]
-    if missing:
-        raise ValueError(
-            f"stream_ivfpq_encode: codebook missing subspaces {missing} "
-            f"(expected 0..{m - 1})"
-        )
-    code_entries = []
-    for s in range(m):
-        entries = []
-        for r in sorted(by_sub[s], key=lambda r: int(r["cid"])):
-            c = "array(" + ",".join(f"{float(x)!r}D" for x in r["c"]) + ")"
-            d2 = _DIST2.format(v=f"slice(rv, {s * dsub + 1}, {dsub})", c=c)
-            entries.append(f"struct({d2} AS dist2, {int(r['cid'])} AS cid)")
-        code_entries.append(f"array_min(array({','.join(entries)})).cid")
-    codes_expr = f"array({','.join(code_entries)})"
-    return (
-        new_stream.select(
-            "vec_id",
-            F.expr("transform(embedding, x -> cast(x as double))").alias(
-                "v"
-            ),
-        )
-        .withColumn("cell", centroid_assign_expr(centroid_rows))
-        .withColumn(
-            "rv",
-            F.expr(
-                f"zip_with(v, element_at({cent_arr}, "
-                "cast(cell as int) + 1), (x, y) -> x - y)"
-            ),
-        )
-        .select("vec_id", "cell", F.expr(codes_expr).alias("codes"))
-    )
+    return ivfpq_encode_batch(new_stream, centroid_rows, codebook_rows, m)
 
 
 def stream_ivfpq_drift_stats(
@@ -191,19 +129,6 @@ def stream_ivfpq_drift_stats(
 
     ``test_stream_ivfpq_drift_matches_batch`` pins multi-micro-batch
     append ≡ the batch drift stats, cell energies included."""
-    cents = sorted(centroid_rows, key=lambda r: r["cid"])
-    if [int(r["cid"]) for r in cents] != list(range(len(cents))):
-        raise ValueError(
-            "stream_ivfpq_drift_stats: coarse cids must be dense 0..n-1"
-        )
-    cent_arr = (
-        "array("
-        + ",".join(
-            "array(" + ",".join(f"{float(x)!r}D" for x in r["c"]) + ")"
-            for r in cents
-        )
-        + ")"
-    )
     energy = (
         f"aggregate(transform(rv, x -> "
         f"CAST(FLOOR(x * {energy_scale}.0) AS BIGINT)"
@@ -218,11 +143,12 @@ def stream_ivfpq_drift_stats(
             ),
         )
         .withColumn("cell", centroid_assign_expr(centroid_rows))
+        .withColumn("__carr", centroid_array(centroid_rows))
         .withColumn(
             "rv",
             F.expr(
-                f"zip_with(v, element_at({cent_arr}, "
-                "cast(cell as int) + 1), (x, y) -> x - y)"
+                "zip_with(v, element_at(__carr, cast(cell as int) + 1),"
+                " (x, y) -> x - y)"
             ),
         )
         .select("vec_id", "cell", F.expr(energy).alias("energy"))
