@@ -1,6 +1,6 @@
 """Frozen-model expressions: model literals written as one SQL string,
-lambda counts that do not grow with the model, and the ``model_rows``
-memo that must never outlive a file-backed model."""
+lambda counts that do not grow with the model, and ``model_rows``
+re-reading a file-backed model on every call."""
 
 from __future__ import annotations
 
@@ -96,8 +96,3 @@ def test_model_rows_rereads_file_backed_model(spark, tmp_path):
     write(2.0)
     assert [r["c"] for r in model_rows(model)] == [[2.0]]
 
-
-def test_model_rows_memoizes_local_model(spark):
-    model = spark.sql("SELECT * FROM VALUES (0L, array(1D)) AS t(cid, c)")
-    rows = model_rows(model)
-    assert model._graft_rows is rows

@@ -52,7 +52,8 @@ def model_rows(model) -> list:
 
     Accepts a list (already collected), a DataFrame carrying the
     ``_graft_rows`` attribute the trainers attach at construction
-    time, or any other DataFrame (falls back to ``collect()``). The
+    time, or any other DataFrame (collected on every call, never
+    memoized: a model read from files must show a rewrite). The
     attribute path exists because each ``collect()`` is a full
     driver action (~0.5 s of plan/py4j overhead even for 8 local
     rows) and the composed index queries consume the same model
@@ -62,16 +63,7 @@ def model_rows(model) -> list:
     rows = getattr(model, "_graft_rows", None)
     if rows is not None:
         return rows
-    rows = model.collect()
-    # memoize the fallback collect only when the rows can never
-    # change: a plan that optimizes to a LocalRelation carries its
-    # data in the plan (the collect above already optimized it). A
-    # model read from files is re-read on every action, so caching
-    # its rows would serve stale values once the files are rewritten.
-    plan = model._jdf.queryExecution().optimizedPlan()
-    if plan.getClass().getSimpleName() == "LocalRelation":
-        model._graft_rows = rows
-    return rows
+    return model.collect()
 
 
 _DIST2 = (
@@ -228,7 +220,7 @@ def kmeans_fit(
     The returned centroids are a local relation carrying
     ``_graft_rows``; the attribute is lost on any DataFrame
     transformation or parquet round-trip, after which ``model_rows``
-    falls back to (and memoizes) a fresh collect."""
+    falls back to a fresh collect on every call."""
     # persisted: consumed by the seed fetch, every iteration's
     # assign + re-aggregation join, and the final assign — without it
     # each consumer re-scans (and re-decodes) the embedding parquet

@@ -1,6 +1,6 @@
 """Coarse quantizer of the IVF-PQ index: the trainer shared by
 ``ivfpq_build`` and the governance queries, plus the frozen-model
-centroid lookup.
+centroid lookup and the residual projection built on it.
 
 ``ivfpq_index_drift`` and ``ivfpq_rebuild_decision`` need only the
 coarse centroids (they feed ``ivfpq_drift_stats``), so they call
@@ -45,6 +45,28 @@ def centroid_array(cent_rows) -> Column:
         )
     return F.expr(
         "array(" + ",".join(double_array_sql(r["c"]) for r in cents) + ")"
+    )
+
+
+def with_cell_residual(df: DataFrame, cent_rows, out: str) -> DataFrame:
+    """``df`` (with ``v`` array<double>) plus ``cell``, its nearest
+    frozen centroid (``centroid_assign_expr``), and ``out``, the
+    residual ``v`` minus that centroid — the one residual projection
+    of the IVF-PQ build, encode and drift paths. ``cell`` is projected
+    in its own step so the argmin fold runs once per row (Catalyst
+    does not CSE lambda-bearing folds); the centroid array rides as
+    one named column, so its literal appears once in the plan."""
+    return (
+        df.withColumn("cell", centroid_assign_expr(cent_rows))
+        .withColumn("__carr", centroid_array(cent_rows))
+        .withColumn(
+            out,
+            F.expr(
+                "zip_with(v, element_at(__carr, cast(cell as int) + 1),"
+                " (x, y) -> x - y)"
+            ),
+        )
+        .drop("__carr")
     )
 
 

@@ -30,8 +30,8 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .coarse import centroid_array, coarse_fit_from_vectors
-from .clustering import centroid_assign_expr, double_array_sql, model_rows
+from .coarse import coarse_fit_from_vectors, with_cell_residual
+from .clustering import double_array_sql, model_rows
 from .pq import pq_codes_expr, pq_train
 
 
@@ -77,20 +77,9 @@ def ivfpq_build(
         "cid bigint, c array<double>",
     )
     centroids._graft_rows = cent_rows
-    carr = centroid_array(cent_rows)
-    # element_at is 1-based; carr is injected as a named column so the
-    # literal array appears once in the plan, not once per element
     residuals = (
-        vectors.withColumn("cell", centroid_assign_expr(cent_rows))
-        .withColumn("__carr", carr)
-        .select(
-            "vec_id",
-            "cell",
-            F.expr(
-                "zip_with(v, element_at(__carr, cast(cell as int) + 1),"
-                " (x, y) -> x - y)"
-            ).alias("embedding"),
-        )
+        with_cell_residual(vectors, cent_rows, "embedding")
+        .select("vec_id", "cell", "embedding")
         .persist()
     )
     codebooks = pq_train(residuals, m=m, k=k, iters=iters)
@@ -137,28 +126,24 @@ def ivfpq_encode_batch(
     and ``centroid_array`` raises ValueError otherwise. ``ivfpq_build``
     /``ivfpq_coarse_fit`` models satisfy this by construction;
     ``kmeans_fit``-style models that DROP emptied clusters do not —
-    re-index such a model before encoding against it."""
+    re-index such a model before encoding against it. The vector dim
+    must be a multiple of ``m`` (ValueError otherwise), or the PQ
+    slices would silently drop the trailing dimensions."""
     cent_rows = model_rows(coarse_centroids)
     book_rows = model_rows(codebooks)
-    return (
-        batch_emb.select(
-            "vec_id",
-            F.expr(f"transform({vec_col}, x -> cast(x as double))").alias(
-                "v"
-            ),
+    dim = len(cent_rows[0]["c"]) if cent_rows else 0
+    if dim % m != 0:
+        # a silent floor-divide would drop the trailing dim % m
+        # dimensions from every residual slice
+        raise ValueError(
+            f"ivfpq_encode_batch: dim {dim} not divisible by m {m}"
         )
-        .withColumn("cell", centroid_assign_expr(cent_rows))
-        .withColumn("__carr", centroid_array(cent_rows))
-        .withColumn(
-            "rv",
-            F.expr(
-                "zip_with(v, element_at(__carr, cast(cell as int) + 1),"
-                " (x, y) -> x - y)"
-            ),
-        )
-        .select(
-            "vec_id", "cell", pq_codes_expr(book_rows, m, "rv").alias("codes")
-        )
+    vectors = batch_emb.select(
+        "vec_id",
+        F.expr(f"transform({vec_col}, x -> cast(x as double))").alias("v"),
+    )
+    return with_cell_residual(vectors, cent_rows, "rv").select(
+        "vec_id", "cell", pq_codes_expr(book_rows, m, "rv").alias("codes")
     )
 
 

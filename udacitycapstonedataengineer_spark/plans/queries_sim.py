@@ -25,7 +25,7 @@ from ..operators.clustering import (
     kmeans_oracle_sql,
     model_rows,
 )
-from ..operators.coarse import centroid_array, ivfpq_coarse_fit
+from ..operators.coarse import ivfpq_coarse_fit, with_cell_residual
 from ..operators.graph import connected_components
 from ..operators.ivfpq import (
     _ivfpq_oracle_parts,
@@ -898,24 +898,12 @@ def ivfpq_drift_stats(emb, centroids, batch_where: str = _BATCH_WHERE):
         f" * CAST(FLOOR(x * {s}.0) AS BIGINT)), "
         f"0L, (acc, w) -> acc + w)"
     )
-    # assignment projected in its OWN step (one fold evaluation per
-    # row — Catalyst does not CSE lambda-bearing folds), then the
-    # winning centroid recovered by dense-cid lookup (threading the
-    # full centroid array through every fold step evaluated the fold
-    # twice)
-    carr = centroid_array(cent_rows)
-    assigned = vectors.select(
-        "vec_id", "v", centroid_assign_expr(cent_rows).alias("cell")
+    # the winning centroid is recovered by dense-cid lookup (threading
+    # the full centroid array through every fold step evaluated the
+    # fold twice)
+    ren = with_cell_residual(vectors, cent_rows, "rv").select(
+        "vec_id", "cell", energy.alias("energy")
     )
-    ren = assigned.select(
-        "vec_id",
-        "cell",
-        F.zip_with(
-            F.col("v"),
-            F.element_at(carr, F.col("cell").cast("int") + 1),
-            lambda x, y: x - y,
-        ).alias("rv"),
-    ).select("vec_id", "cell", energy.alias("energy"))
     is_batch = F.expr(batch_where)
     # ONE conditional cell-grain aggregation (guide §2.4): a
     # corpus/batch branch pair plus

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.clustering import centroid_assign_expr
-from ..operators.coarse import centroid_array
+from ..operators.coarse import with_cell_residual
 from ..operators.ivfpq import ivfpq_encode_batch
 from ..operators.similarity import cosine_prenorm, norm
 
@@ -82,33 +82,17 @@ def stream_semdedup_pairs(
     )
 
 
-def stream_ivfpq_encode(
-    new_stream: DataFrame,
-    centroid_rows: list,
-    codebook_rows: list,
-    m: int = 8,
-) -> DataFrame:
-    """Append-mode stream of (vec_id, cell, codes): each arriving
-    vector encoded against the FROZEN corpus IVF-PQ model — the ANN
-    sibling of ``stream_semdedup_pairs`` (VERDICT r9 #6) and the
-    streaming twin of ``operators/ivfpq.ivfpq_encode_batch``.
-
-    The batch encode IS a stateless projection (literal-argmin cell,
-    literal-lookup residual, literal-argmin codes — zero state, zero
-    shuffle), so the stream runs it unchanged and is append-safe. In
-    production each micro-batch's output appends onto the
-    cell-partitioned index parquet via foreachBatch;
-    ``test_stream_ivfpq_encode_matches_batch`` pins multi-micro-batch
-    foreachBatch append ≡ ``ivfpq_encode_batch``, codes and cells
-    included."""
-    dim = len(centroid_rows[0]["c"])
-    if dim % m != 0:
-        # a silent floor-divide would drop the trailing dim % m
-        # dimensions from every residual slice
-        raise ValueError(
-            f"stream_ivfpq_encode: dim {dim} not divisible by m {m}"
-        )
-    return ivfpq_encode_batch(new_stream, centroid_rows, codebook_rows, m)
+# Append-mode stream of (vec_id, cell, codes): each arriving vector
+# encoded against the FROZEN corpus IVF-PQ model — the ANN sibling of
+# ``stream_semdedup_pairs``. The batch encode IS a stateless projection
+# (literal-argmin cell, literal-lookup residual, literal-argmin codes —
+# zero state, zero shuffle), so the stream runs it unchanged and is
+# append-safe; in production each micro-batch's output appends onto
+# the cell-partitioned index parquet via foreachBatch.
+# ``test_stream_ivfpq_encode_matches_batch`` pins multi-micro-batch
+# foreachBatch append ≡ ``ivfpq_encode_batch``, codes and cells
+# included.
+stream_ivfpq_encode = ivfpq_encode_batch
 
 
 def stream_ivfpq_drift_stats(
@@ -135,21 +119,10 @@ def stream_ivfpq_drift_stats(
         f" * CAST(FLOOR(x * {energy_scale}.0) AS BIGINT)), "
         f"0L, (acc, w) -> acc + w)"
     )
-    return (
-        new_stream.select(
-            "vec_id",
-            F.expr("transform(embedding, x -> cast(x as double))").alias(
-                "v"
-            ),
-        )
-        .withColumn("cell", centroid_assign_expr(centroid_rows))
-        .withColumn("__carr", centroid_array(centroid_rows))
-        .withColumn(
-            "rv",
-            F.expr(
-                "zip_with(v, element_at(__carr, cast(cell as int) + 1),"
-                " (x, y) -> x - y)"
-            ),
-        )
-        .select("vec_id", "cell", F.expr(energy).alias("energy"))
+    vectors = new_stream.select(
+        "vec_id",
+        F.expr("transform(embedding, x -> cast(x as double))").alias("v"),
+    )
+    return with_cell_residual(vectors, centroid_rows, "rv").select(
+        "vec_id", "cell", F.expr(energy).alias("energy")
     )
