@@ -8,6 +8,7 @@ import math
 import struct
 
 import duckdb
+import pytest
 from pyspark.sql import functions as F
 
 from udacitycapstonedataengineer_spark.operators.clustering import (
@@ -16,7 +17,10 @@ from udacitycapstonedataengineer_spark.operators.clustering import (
     model_rows,
 )
 from udacitycapstonedataengineer_spark.operators.ivfpq import ivfpq_topk
-from udacitycapstonedataengineer_spark.operators.pq import pq_codes_expr
+from udacitycapstonedataengineer_spark.operators.pq import (
+    pq_adc_topk,
+    pq_codes_expr,
+)
 
 
 def test_double_array_sql_round_trips_bit_exactly(spark):
@@ -47,6 +51,32 @@ def test_ivfpq_topk_ranks_unemitted_code_last(spark):
     assert [r["vec_id"] for r in rows] == [1, 2, 3]
     assert rows[-1]["adc_dist2"] == math.inf
     assert all(math.isfinite(r["adc_dist2"]) for r in rows[:-1])
+
+
+@pytest.mark.parametrize("scorer", ["ivfpq_topk", "pq_adc_topk"])
+def test_adc_scores_out_of_range_code_as_inf(spark, scorer):
+    """A code >= k (m=2, k=2) scores +inf in either subspace: it must
+    not read the next subspace's LUT slot (codes [2, 0]) nor index past
+    the LUT (codes [0, 2])."""
+    books = [
+        {"sub": s, "cid": c, "c": [float(c), float(c)]}
+        for s in range(2)
+        for c in range(2)
+    ]
+    index = spark.createDataFrame(
+        [(1, 0, [1, 1]), (2, 0, [2, 0]), (3, 0, [0, 2])],
+        "vec_id bigint, cell bigint, codes array<int>",
+    )
+    query = [0.1, 0.1, 0.1, 0.1]
+    if scorer == "ivfpq_topk":
+        cents = [{"cid": 0, "c": [0.0, 0.0, 0.0, 0.0]}]
+        top = ivfpq_topk(index, cents, books, query, nprobe=1, topk=3)
+    else:
+        top = pq_adc_topk(index, books, query, topk=3)
+    rows = top.collect()
+    assert [r["vec_id"] for r in rows] == [1, 2, 3]
+    assert math.isfinite(rows[0]["adc_dist2"])
+    assert [r["adc_dist2"] for r in rows[1:]] == [math.inf, math.inf]
 
 
 def _lambda_count(spark, col) -> int:

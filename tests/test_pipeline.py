@@ -15,6 +15,7 @@ from udacitycapstonedataengineer_spark.operators.quality import (
     check_star,
     fk_coverage,
 )
+from udacitycapstonedataengineer_spark.plans.pipeline import STAR_READS, run_pipeline
 from udacitycapstonedataengineer_spark.plans.star import build_star
 from udacitycapstonedataengineer_spark.sources.readers import load_tables
 from udacitycapstonedataengineer_spark.sources.writers import write_parquet
@@ -22,7 +23,8 @@ from udacitycapstonedataengineer_spark.sources.writers import write_parquet
 
 def test_star_pipeline_roundtrip(spark, sf_dir, tmp_path):
     star = build_star(load_tables(spark, sf_dir))
-    metrics = check_star(star)
+    counts = {t: df.count() for t, df in star.items()}
+    metrics = check_star(counts, star["fact"], star["priority_dim"])
     assert metrics["unresolved_fks"] == 0
     assert all(metrics[t] > 0 for t in star)
 
@@ -49,6 +51,86 @@ def test_star_pipeline_roundtrip(spark, sf_dir, tmp_path):
 
     fact_back = spark.read.parquet(fact_path)
     assert fact_back.count() == star["fact"].count()
+
+
+def _catalog_copy(sf_dir, dst, orders_fn):
+    """The star pipeline's input tables copied to ``dst``, with
+    ``orders`` passed through ``orders_fn`` (a pyarrow table → table)."""
+    import pyarrow.parquet as pq
+
+    for t in STAR_READS:
+        table = pq.read_table(os.path.join(sf_dir, f"{t}.parquet"))
+        if t == "orders":
+            table = orders_fn(table)
+        pq.write_table(table, str(dst / f"{t}.parquet"))
+    return str(dst)
+
+
+def _parquet_rows(spark, path):
+    return spark.read.parquet(path).count()
+
+
+def test_run_pipeline_accounts_dropped_rows(spark, sf_dir, tmp_path):
+    """Rows with a null o_orderdate are dropped by the clean step and
+    accounted for: rows_dropped is exactly the injected count, and the
+    published fact holds rows_after rows."""
+    import pyarrow as pa
+
+    n_null = 7
+
+    def null_dates(orders):
+        i = orders.schema.get_field_index("o_orderdate")
+        col = orders.column(i).to_pylist()
+        col[:n_null] = [None] * n_null
+        return orders.set_column(
+            i, orders.field(i), pa.array(col, orders.field(i).type)
+        )
+
+    src = _catalog_copy(sf_dir, tmp_path, null_dates)
+    out = str(tmp_path / "out")
+    metrics = run_pipeline(spark, src, out)
+    assert metrics["rows_dropped"] == n_null
+    assert metrics["rows_before"] - n_null == metrics["rows_after"]
+    assert metrics["rows_after"] == metrics["fact"]
+    assert _parquet_rows(spark, os.path.join(out, "fact")) == metrics["fact"]
+
+
+def test_run_pipeline_failed_gate_publishes_nothing(spark, sf_dir, tmp_path):
+    """Write–audit–publish: a run whose gate fails raises, publishes
+    nothing over the previous run's tables, removes its staging
+    directory and releases its cache."""
+    out = str(tmp_path / "out")
+    first = run_pipeline(spark, sf_dir, out)
+    tables = ("priority_dim", "country_dim", "calendar_dim", "fact")
+    assert {t: _parquet_rows(spark, os.path.join(out, t)) for t in tables} == {
+        t: first[t] for t in tables
+    }
+
+    empty = _catalog_copy(sf_dir, tmp_path, lambda orders: orders.slice(0, 0))
+    persisted = len(spark.sparkContext._jsc.getPersistentRDDs())
+    with pytest.raises(QualityError):
+        run_pipeline(spark, empty, out)
+    assert {t: _parquet_rows(spark, os.path.join(out, t)) for t in tables} == {
+        t: first[t] for t in tables
+    }
+    assert not os.path.exists(os.path.join(out, "_staging"))
+    assert len(spark.sparkContext._jsc.getPersistentRDDs()) == persisted
+
+
+def test_run_pipeline_job_count(spark, sf_dir, tmp_path):
+    """The gates read the counts the writes observe and audit the staged
+    tables, so a run starts 19 jobs at these settings (37 when each gate
+    and count recomputed the star tables). 3 jobs of margin absorb a
+    plan change such as one more broadcast stage."""
+    sc = spark.sparkContext
+    sc.setJobGroup("pipeline-job-count", "run_pipeline job count")
+    try:
+        run_pipeline(spark, sf_dir, str(tmp_path / "out"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("pipeline-job-count")
+    assert len(jobs) <= 19 + 3
 
 
 def test_row_accounting(spark, sf_dir):

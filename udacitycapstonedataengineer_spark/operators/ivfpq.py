@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from .coarse import coarse_fit_from_vectors, with_cell_residual
 from .clustering import double_array_sql, model_rows
-from .pq import pq_codes_expr, pq_train
+from .pq import adc_dist_expr, pq_codes_expr, pq_train
 
 
 def ivfpq_build(
@@ -185,16 +185,6 @@ def _cell_lut(
     return lut
 
 
-def _adc_dist_expr(m: int, k: int) -> F.Column:
-    """Sequential ADC fold over the row's codes against the __lut
-    column (exact: IEEE 0.0+x == x, same order as the oracle's
-    list_reduce)."""
-    return F.expr(
-        f"aggregate(sequence(0, {m} - 1), 0D, (acc, s) -> "
-        f"acc + element_at(__lut, s * {k} + element_at(codes, s + 1) + 1))"
-    )
-
-
 def ivfpq_topk(
     index: DataFrame,
     coarse_centroids: DataFrame,
@@ -234,7 +224,7 @@ def ivfpq_topk(
     return (
         index.filter(F.col("cell").isin(probed))
         .withColumn("__lut", lut_expr)
-        .select("vec_id", _adc_dist_expr(m, k).alias("adc_dist2"))
+        .select("vec_id", adc_dist_expr(m, k).alias("adc_dist2"))
         .orderBy("adc_dist2", "vec_id")
         .limit(topk)
     )
@@ -291,7 +281,7 @@ def ivfpq_recall_curve(
         .select(
             "vec_id",
             "__cell_rank",
-            _adc_dist_expr(m, k).alias("adc_dist2"),
+            adc_dist_expr(m, k).alias("adc_dist2"),
         )
         # a row participates in every curve point probing its cell
         .withColumn(
@@ -368,7 +358,7 @@ def ivfpq_topk_multi(
         index.filter(F.col("cell").isin(sorted(all_cells)))
         .join(F.broadcast(luts), "cell")
         .select(
-            "query_vec_id", "vec_id", _adc_dist_expr(m, k).alias("adc_dist2")
+            "query_vec_id", "vec_id", adc_dist_expr(m, k).alias("adc_dist2")
         )
         .withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= topk)

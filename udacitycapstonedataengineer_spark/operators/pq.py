@@ -204,6 +204,21 @@ def pq_encode(
     ).select("vec_id", pq_codes_expr(rows, m, "v").alias("codes"))
 
 
+def adc_dist_expr(m: int, k: int) -> F.Column:
+    """ADC distance of the row's ``codes`` against the flat m·k
+    ``__lut`` column: a sequential fold (exact: IEEE 0.0+x == x, the
+    same order as the oracle's list_reduce). Sub s's code is
+    element_at(codes, s+1) (1-based) and its LUT slot is s*k + code; a
+    code outside [0, k) scores +inf, like a codeword the codebook
+    lacks, instead of reading another subspace's slot."""
+    code = "element_at(codes, s + 1)"
+    return F.expr(
+        f"aggregate(sequence(0, {m} - 1), 0D, (acc, s) -> acc + "
+        f"CASE WHEN {code} < 0 OR {code} >= {k} THEN CAST('inf' AS DOUBLE) "
+        f"ELSE element_at(__lut, s * {k} + {code} + 1) END)"
+    )
+
+
 def pq_adc_topk(
     codes: DataFrame, codebooks: DataFrame, query: list[float], topk: int = 10
 ) -> DataFrame:
@@ -235,15 +250,9 @@ def pq_adc_topk(
             d2 += (float(a) - float(b)) * (float(a) - float(b))
         lut[r["sub"], r["cid"]] = d2
     flat = F.expr(double_array_sql(lut.reshape(-1)))
-    # element_at is 1-based in Spark SQL: sub s's code is
-    # element_at(codes, s+1); its LUT slot is s*k + code (0-based)
-    dist = F.expr(
-        f"aggregate(sequence(0, {m} - 1), 0D, (acc, s) -> "
-        f"acc + element_at(__lut, s * {k} + element_at(codes, s + 1) + 1))"
-    )
     return (
         codes.withColumn("__lut", flat)
-        .select("vec_id", dist.alias("adc_dist2"))
+        .select("vec_id", adc_dist_expr(m, k).alias("adc_dist2"))
         .orderBy("adc_dist2", "vec_id")
         .limit(topk)
     )

@@ -4,8 +4,8 @@ The reference's quality_checks (etl_functions.py:136-147) prints
 "NOK" per empty table and always returns 0 — nothing fails. Here the
 gates RAISE, return their evidence as data, and run as few Spark jobs
 as possible: FK coverage is one broadcast anti-join count, not a
-per-key loop; all-table row counts come from one action per table on
-the already-cached pipeline outputs.
+per-key loop, and the star gate reads the row counts its pipeline's
+writes already observed instead of counting each table again.
 """
 
 from __future__ import annotations
@@ -18,13 +18,19 @@ class QualityError(AssertionError):
     """A quality gate failed; message carries the metric evidence."""
 
 
-def assert_nonempty(tables: dict[str, DataFrame]) -> dict[str, int]:
-    """Q1: every output table must have rows. Returns the counts."""
-    counts = {name: df.count() for name, df in tables.items()}
+def require_rows(counts: dict[str, int]) -> dict[str, int]:
+    """Q1 on known row counts: every table must have rows. Returns the
+    counts."""
     empty = [name for name, n in counts.items() if n == 0]
     if empty:
         raise QualityError(f"empty output tables: {empty} (counts={counts})")
     return counts
+
+
+def assert_nonempty(tables: dict[str, DataFrame]) -> dict[str, int]:
+    """Q1: every output table must have rows. Returns the counts (one
+    action per table)."""
+    return require_rows({name: df.count() for name, df in tables.items()})
 
 
 def fk_coverage(
@@ -49,12 +55,17 @@ def fk_coverage(
     return {"unresolved_fks": unresolved}
 
 
-def check_star(star: dict[str, DataFrame]) -> dict[str, int]:
-    """Full gate for the star pipeline (plans/star.py outputs):
-    non-empty tables + fact→priority_dim FK coverage."""
-    metrics = assert_nonempty(star)
-    metrics.update(fk_coverage(star["fact"], star["priority_dim"], "priority_key", "priority_key"))
-    return metrics
+def check_star(
+    counts: dict[str, int], fact: DataFrame, priority_dim: DataFrame
+) -> dict[str, int]:
+    """Full gate for the star pipeline (plans/star.py outputs): every
+    table's row count (observed by its write) is non-zero, and every
+    fact→priority_dim FK resolves. Pass the fact and dim as written, so
+    the gate audits what gets published."""
+    return {
+        **require_rows(counts),
+        **fk_coverage(fact, priority_dim, "priority_key", "priority_key"),
+    }
 
 
 # ---- declarative expectations ---------------------------------------------

@@ -1,57 +1,98 @@
 """End-to-end batch ETL runner — the reference's ``etl.py main()``
-(etl.py:82-94, SURVEY.md §3.1) re-expressed.
+(etl.py:82-94, SURVEY.md §3.1) re-expressed as write → audit → publish.
 
-Differences from the reference lifecycle, all deliberate (SURVEY §7.3):
-- the cleaned fact source is CACHED once and every dim/fact builder
-  reads the in-memory plan (the reference re-ran the source scan for
-  every count() and re-read the visa dim from parquet mid-pipeline);
-- quality gates RAISE instead of printing "NOK";
-- row accounting comes back as data in the returned metrics.
+- **Write.** The cleaned fact source is cached once and every dim/fact
+  builder reads the in-memory plan. Each star table is written once,
+  under ``out_dir/_staging/<table>`` (Spark skips ``_``-prefixed paths
+  when reading a parent directory), with an ``observe``d row count that
+  rides along with the write. The null-drop's row accounting is
+  observed under the cache and reports when the first write fills it.
+- **Audit.** ``check_star`` gates on the observed counts (Q1) and runs
+  the FK gate on the staged fact and priority dim read back with the
+  schemas they were written with, so it audits the bytes that get
+  published and starts no schema-inference job.
+- **Publish.** Only after every gate passes is each staged table
+  renamed to ``out_dir/<table>``, through the Hadoop ``FileSystem`` of
+  the path. A failed gate publishes nothing and leaves previously
+  published tables intact; ``_staging`` and the cache are released
+  either way.
+
+The reference re-ran its source scan for every count() it printed and
+every check it made, and its quality gates printed "NOK" instead of
+raising; here row accounting and gate metrics come back as data.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
-from ..operators.cleaning import drop_nulls, row_accounting
+from ..operators.cleaning import observed_clean
 from ..operators.quality import check_star
 from ..sources.readers import load_tables
 from ..sources.writers import write_parquet
 from .star import build_star
 
+STAR_READS = ("orders", "customer", "nation", "region")
+# the calendar dim partitions by y/m/w exactly as the reference does
+# (etl_functions.py:129-130)
+PARTITION_BY = {"calendar_dim": ["arrival_year", "arrival_month", "arrival_week"]}
+
+
+def _stage(df: DataFrame, path: str, partition_by: list[str] | None) -> int:
+    """Write ``df`` once and return the row count observed on the write."""
+    obs = Observation()
+    write_parquet(
+        df.observe(obs, F.count(F.lit(1)).alias("rows")), path, partition_by=partition_by
+    )
+    return obs.get["rows"]
+
 
 def run_pipeline(
     spark: SparkSession, sf_dir: str, out_dir: str
 ) -> dict[str, int]:
-    """read → clean → dims → fact → partitioned parquet sinks → quality.
+    """read → clean → dims → fact → staged parquet → quality → publish.
 
     Returns the quality/accounting metrics. Sinks land under
-    ``out_dir/<table>``; the calendar dim partitions by y/m/w exactly as
-    the reference does (etl_functions.py:129-130).
+    ``out_dir/<table>``; raises ``QualityError`` (publishing nothing)
+    when a gate fails.
     """
-    tables = load_tables(spark, sf_dir)
-
-    # clean the fact source (F1/F2 semantics) and cache: five downstream
-    # builders consume it, one scan pays for all of them
-    orders_raw = tables["orders"]
-    orders = drop_nulls(
-        orders_raw, how="any", subset=["o_orderkey", "o_orderdate"]
-    ).cache()
-    metrics = row_accounting(orders_raw, orders)
-
+    tables = load_tables(spark, sf_dir, names=STAR_READS)
+    orders, clean_obs = observed_clean(tables["orders"], ["o_orderkey", "o_orderdate"])
+    # cached: four downstream builders consume it, one scan pays for all
+    orders = orders.cache()
     star = build_star({**tables, "orders": orders})
-    metrics.update(check_star(star))
 
-    write_parquet(star["priority_dim"], os.path.join(out_dir, "priority_dim"))
-    write_parquet(star["country_dim"], os.path.join(out_dir, "country_dim"))
-    write_parquet(
-        star["calendar_dim"],
-        os.path.join(out_dir, "calendar_dim"),
-        partition_by=["arrival_year", "arrival_month", "arrival_week"],
-    )
-    write_parquet(star["fact"], os.path.join(out_dir, "fact"))
+    staging = os.path.join(out_dir, "_staging")
+    Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    fs = Path(staging).getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
 
-    orders.unpersist()
+    def staged(name: str) -> DataFrame:
+        return spark.read.schema(star[name].schema).parquet(os.path.join(staging, name))
+
+    try:
+        counts = {
+            name: _stage(df, os.path.join(staging, name), PARTITION_BY.get(name))
+            for name, df in star.items()
+        }
+        metrics = check_star(counts, staged("fact"), staged("priority_dim"))
+        # read after the gates: when the cleaned orders are empty (which
+        # fails Q1) AQE replaces the cached scan by an empty relation and
+        # the observation under it reports no metrics
+        clean = clean_obs.get
+        metrics.update(
+            rows_before=clean["rows_seen"],
+            rows_after=clean["rows_seen"] - clean["rows_dropped"],
+            rows_dropped=clean["rows_dropped"],
+        )
+        for name in star:
+            dst = Path(out_dir, name)
+            fs.delete(dst, True)
+            if not fs.rename(Path(staging, name), dst):
+                raise OSError(f"could not publish {name} to {dst}")
+    finally:
+        fs.delete(Path(staging), True)
+        orders.unpersist()
     return metrics
