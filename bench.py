@@ -472,9 +472,13 @@ def _mismatch(data: dict, key: str, want: float | None) -> bool:
 
 
 def _foreign(data: dict) -> bool:
-    """Written at another scale factor or core count than this run."""
+    """Written at another scale factor or core count than this run.
+    Sidecars from before the top-level ``cpus`` field record their core
+    count only as ``sat_canary.cpus``."""
+    sat = data.get("sat_canary")
+    cores = sat if "cpus" not in data and isinstance(sat, dict) else data
     return _mismatch(data, "sf", _run_sf()) or _mismatch(
-        data, "cpus", _run_cpus()
+        cores, "cpus", _run_cpus()
     )
 
 

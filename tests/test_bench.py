@@ -209,6 +209,28 @@ def test_baselines_respect_core_count(bench, tmp_path, monkeypatch):
     assert src == "BENCH_DETAIL_after_r08_builder.json+BENCH_r09_c8.json"
 
 
+def test_legacy_sidecar_core_count_scopes_baselines(bench, tmp_path, monkeypatch):
+    """The committed r16 sidecar predates the top-level ``cpus`` field;
+    its ``sat_canary.cpus`` says it is a 32-core run. A 4-core run must
+    not anchor to it; a 32-core run still does."""
+    shutil.copy(
+        os.path.join(ROOT, "BENCH_DETAIL_after_r16_driver.json"),
+        tmp_path / "BENCH_DETAIL_after_r16_driver.json",
+    )
+    with open(tmp_path / "BENCH_DETAIL_after_r16_driver.json") as f:
+        legacy = json.load(f)
+    assert "cpus" not in legacy and legacy["sat_canary"]["cpus"] == 32
+    _in_tree(bench, tmp_path, newest_round=17)
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", "/data/sf0.1")
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "4")
+    assert bench._load_prev_detail() == ({}, "")
+    assert bench._load_baseline()[:2] == ({}, "")
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "32")
+    merged, src, _ = bench._load_baseline()
+    assert src == "BENCH_DETAIL_after_r16_driver.json"
+    assert set(legacy["queries"]) <= set(merged)
+
+
 def test_committed_baselines_are_query_names(bench, monkeypatch):
     """The baseline map built from the committed files holds only
     registered query names: no meta keys read out of a truncated

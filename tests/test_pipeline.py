@@ -5,6 +5,7 @@ FK coverage made real)."""
 from __future__ import annotations
 
 import os
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -15,6 +16,7 @@ from udacitycapstonedataengineer_spark.operators.quality import (
     check_star,
     fk_coverage,
 )
+from udacitycapstonedataengineer_spark.plans import pipeline
 from udacitycapstonedataengineer_spark.plans.pipeline import STAR_READS, run_pipeline
 from udacitycapstonedataengineer_spark.plans.star import build_star
 from udacitycapstonedataengineer_spark.sources.readers import load_tables
@@ -117,12 +119,46 @@ def test_run_pipeline_failed_gate_publishes_nothing(spark, sf_dir, tmp_path):
     assert len(spark.sparkContext._jsc.getPersistentRDDs()) == persisted
 
 
+def test_run_pipeline_failed_write_publishes_nothing(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """One of the concurrently staged writes fails: its error reaches
+    the caller once every write has returned, nothing is published,
+    ``_staging`` is gone, the cache is released and no writer thread is
+    left running."""
+    write = pipeline.write_parquet
+    writers = []
+
+    def write_or_fail(df, path, **kw):
+        writers.append(threading.current_thread())
+        if os.path.basename(path) == "fact":
+            raise OSError("fact sink failed")
+        write(df, path, **kw)
+
+    monkeypatch.setattr(pipeline, "write_parquet", write_or_fail)
+    out = str(tmp_path / "out")
+    persisted = len(spark.sparkContext._jsc.getPersistentRDDs())
+    with pytest.raises(OSError, match="fact sink failed"):
+        run_pipeline(spark, sf_dir, out)
+    # the first write runs on the caller's thread, the other three on
+    # worker threads
+    caller = threading.current_thread()
+    assert len(writers) == 4 and writers[0] is caller and caller not in writers[1:]
+    assert not [t.name for t in writers[1:] if t.is_alive()]
+    assert not os.path.exists(out) or os.listdir(out) == []
+    assert len(spark.sparkContext._jsc.getPersistentRDDs()) == persisted
+
+
 def test_run_pipeline_job_count(spark, sf_dir, tmp_path):
     """The gates read the counts the writes observe and audit the staged
     tables, so a run starts 19 jobs at these settings (37 when each gate
     and count recomputed the star tables). 3 jobs of margin absorb a
-    plan change such as one more broadcast stage."""
+    plan change such as one more broadcast stage. Every job runs in the
+    caller's job group, also those of the writes staged on worker
+    threads: no job without a group appears, and the group holds at
+    least one job per staged table plus the FK audit."""
     sc = spark.sparkContext
+    ungrouped = set(sc.statusTracker().getJobIdsForGroup(None))
     sc.setJobGroup("pipeline-job-count", "run_pipeline job count")
     try:
         run_pipeline(spark, sf_dir, str(tmp_path / "out"))
@@ -130,7 +166,41 @@ def test_run_pipeline_job_count(spark, sf_dir, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     jobs = sc.statusTracker().getJobIdsForGroup("pipeline-job-count")
-    assert len(jobs) <= 19 + 3
+    assert not set(sc.statusTracker().getJobIdsForGroup(None)) - ungrouped
+    assert 4 + 1 <= len(jobs) <= 19 + 3
+
+
+def test_observed_metrics_survive_aqe_empty_output(spark, sf_dir, tmp_path):
+    """With AQE on, a cached null-drop that keeps no row is replaced by
+    an empty relation, and its Observation completes with an empty row.
+    observed_metrics still reports every row seen and dropped."""
+    import pyarrow as pa
+
+    from udacitycapstonedataengineer_spark.operators.cleaning import (
+        observed_clean,
+        observed_metrics,
+    )
+
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+
+    def all_null_dates(orders):
+        i = orders.schema.get_field_index("o_orderdate")
+        field = orders.field(i)
+        return orders.set_column(i, field, pa.nulls(orders.num_rows, field.type))
+
+    src = _catalog_copy(sf_dir, tmp_path, all_null_dates)
+    orders = load_tables(spark, src, names=("orders",))["orders"]
+    n = orders.count()
+    cleaned, obs = observed_clean(orders, ["o_orderkey", "o_orderdate"])
+    cleaned = cleaned.cache()
+    try:
+        write_parquet(
+            cleaned.groupBy("o_orderpriority").count(), str(tmp_path / "out")
+        )
+        assert n > 0
+        assert observed_metrics(obs) == {"rows_seen": n, "rows_dropped": n}
+    finally:
+        cleaned.unpersist()
 
 
 def test_row_accounting(spark, sf_dir):

@@ -101,6 +101,18 @@ def test_new_ops_plan_shapes(spark, sf_dir):
     assert "NestedLoop" not in plan and "CartesianProduct" not in plan
 
 
+@pytest.mark.parametrize("name", ["ann_ivfpq_recall_curve", "ann_ivfpq_recall_at_k"])
+def test_ivfpq_topk_limits_rows_before_the_shuffle(spark, sf_dir, name):
+    """The per-query top-k of the fused IVF-PQ plans is a row_number
+    window with a rank bound: Spark plans a partial WindowGroupLimit
+    directly below the hash shuffle, so each map task ships at most k
+    candidates per group instead of every scored row."""
+    plan = _plan(QUERIES[name](spark, sf_dir))
+    assert re.search(
+        r"Exchange hashpartitioning\([^\n]*\n[ :]*\+- WindowGroupLimit \[", plan
+    ), plan[:2000]
+
+
 def test_spend_rank_has_no_global_window(spark, sf_dir):
     """percent_rank/cume_dist must come from the distributed exact
     ranking (operators/ranking.py), never a no-partitionBy window that

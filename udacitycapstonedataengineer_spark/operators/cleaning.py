@@ -9,7 +9,9 @@ for row accounting.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from typing import Any
+
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, FloatType
 
@@ -67,10 +69,33 @@ def row_accounting(df_before: DataFrame, df_after: DataFrame) -> dict[str, int]:
     return {"rows_before": before, "rows_after": after, "rows_dropped": before - after}
 
 
+def observe(df: DataFrame, obs: Observation, *metrics: Column) -> DataFrame:
+    """``df.observe(obs, *metrics)``, keeping the aggregate that
+    ``observed_metrics`` falls back to."""
+    obs._graft_fallback = df.agg(*metrics)
+    return df.observe(obs, *metrics)
+
+
+def observed_metrics(obs: Observation) -> dict[str, Any]:
+    """The metrics of an Observation attached by ``observe``, read after
+    the action that carried it.
+
+    Under AQE, a plan whose observed input turns out empty (a cached
+    filter that keeps no row) can be replaced by an empty relation; the
+    Observation then completes with an empty row and ``obs.get`` raises
+    from Py4J. In that case the metrics are recomputed with one aggregate
+    over the observed input, so the counts are never zeros for rows
+    that exist.
+    """
+    if obs._jo.getRow().length():
+        return obs.get
+    return obs._graft_fallback.first().asDict()
+
+
 def observed_clean(
     df: DataFrame,
     subset: list[str],
-) -> tuple[DataFrame, "object"]:
+) -> tuple[DataFrame, Observation]:
     """Null-drop with metrics collected IN the same pass via the
     Observation API: rows-seen and per-subset-column null counts ride
     along with whatever action first consumes the returned DataFrame —
@@ -78,18 +103,18 @@ def observed_clean(
     row accounting: the two-count form re-scans the source, which at
     100 TB means reading the table twice to learn one number.
 
-    Returns (cleaned_df, observation); read ``observation.get`` AFTER
-    an action has run. rows_after = rows_seen − sum of dropped (a row
-    drops if ANY subset col is null, so track that predicate directly).
+    Returns (cleaned_df, observation); read it with ``observed_metrics``
+    AFTER an action has run. rows_after = rows_seen − sum of dropped (a
+    row drops if ANY subset col is null, so track that predicate
+    directly).
     """
-    from pyspark.sql import Observation
-
     obs = Observation("clean_metrics")
     any_null = None
     for c in subset:
         p = F.col(c).isNull()
         any_null = p if any_null is None else (any_null | p)
-    observed = df.observe(
+    observed = observe(
+        df,
         obs,
         F.count(F.lit(1)).alias("rows_seen"),
         F.count(F.when(any_null, 1)).alias("rows_dropped"),

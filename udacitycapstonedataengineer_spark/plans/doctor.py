@@ -89,8 +89,17 @@ def _executed(df: DataFrame) -> str:
 
 
 def _indent(line: str) -> int:
+    """Tree depth of a plan line: the column of its ``+-``/``:-``
+    marker. A line without one is a plan root, at depth 0, or the first
+    line under "== Final Plan ==" / "== Initial Plan ==" of a plan
+    nested deeper, such as the AdaptiveSparkPlan a materialized
+    InMemoryRelation prints; its depth is then that of the marker its
+    indent stands for, so a subtree walk passes over the nested text
+    instead of ending at it."""
     m = re.search(r"[+:]-", line)
-    return m.start() if m else 0
+    if m:
+        return m.start()
+    return max(len(line) - len(line.lstrip()) - 3, 0)
 
 
 def _subtree(lines: list[str], i: int) -> list[str]:
